@@ -27,8 +27,9 @@ bounded right-side row-count probe; the rest are opt-in):
 
 2. ``asof_join_broadcast`` — for a SMALL right side (dimension/stats
    table): broadcast + map-side vectorized searchsorted, ZERO shuffle of
-   the left side; fuses with adjacent mapInArrow stages. This is the
-   10^12-left-rows x 10^5-right-rows production shape.
+   the left side; its batch function (``asof_broadcast_stage``) chains
+   with other Arrow batch functions inside one mapInArrow stage. This is
+   the 10^12-left-rows x 10^5-right-rows production shape.
 
 3. ``asof_join_cogroup`` — per-partition index slices for a right side
    ABOVE broadcast size with benign entity skew: both sides hash-shuffled
@@ -245,7 +246,7 @@ def _cubic_eval(t, t0, t1, t2, t3, y0, y1, y2, y3):
 
 
 def _resolve_output_cols(
-    left: DataFrame,
+    left_cols: list,
     right: DataFrame,
     on: str,
     by_l: list,
@@ -294,7 +295,7 @@ def _resolve_output_cols(
             raise ValueError(
                 f"{direction} requires numeric right columns; got {non_numeric}"
             )
-    out_rnames = [c + suffix if c in left.columns else c for c in rcols]
+    out_rnames = [c + suffix if c in left_cols else c for c in rcols]
     right_on_out = f"{on}{suffix}" if include_right_on else None
     return rcols, out_rnames, right_on_out
 
@@ -346,7 +347,7 @@ def asof_join(
     """
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left, right, on, by_l, right_cols, suffix, include_right_on, direction
+        left.columns, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
     if direction == "cubic":
         # the 4-point stencil needs two rows on EACH side of every probe;
@@ -576,7 +577,7 @@ def asof_join_window(
     rows with a null timestamp are unmatchable and dropped."""
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left, right, on, by_l, right_cols, suffix, include_right_on, "backward"
+        left.columns, right, on, by_l, right_cols, suffix, include_right_on, "backward"
     )
 
     lkeep = [c for c in left.columns if c not in set(by_l) | {on}]
@@ -639,8 +640,25 @@ def asof_join_window(
     return filled.select(*sel)
 
 
-def asof_join_broadcast(
-    left: DataFrame,
+def asof_join_broadcast(left: DataFrame, right: DataFrame, **opts) -> DataFrame:
+    """As-of join for a SMALL right side: broadcast + map-side searchsorted.
+
+    The big left side is never shuffled — each task matches its rows against
+    a broadcast dict {entity: (sorted ts array, payload arrays)} with one
+    vectorized np.searchsorted per (batch, entity). This is the strategy for
+    the dominant production shape (10^12-row fact vs a per-entity-per-hour
+    stats/dimension table): zero exchange, one narrow mapInArrow stage.
+    Options (on, by, right_cols, direction, tolerance, suffix,
+    include_right_on, max_right_rows) are those of asof_broadcast_stage.
+
+    Mirrors the reference's grid-alignment resample where the TARGET grid is
+    dense and the SOURCE samples are sparse (tools/Resample.cxx:83-99).
+    """
+    return left.mapInArrow(*asof_broadcast_stage(left.schema, right, **opts))
+
+
+def asof_broadcast_stage(
+    left_schema,
     right: DataFrame,
     on: str = "ts",
     by="entity_id",
@@ -650,18 +668,14 @@ def asof_join_broadcast(
     suffix: str = "_right",
     include_right_on: bool = False,
     max_right_rows: int = 5_000_000,
-) -> DataFrame:
-    """As-of join for a SMALL right side: broadcast + map-side searchsorted.
-
-    The big left side is never shuffled — each task matches its rows against
-    a broadcast dict {entity: (sorted ts array, payload arrays)} with one
-    vectorized np.searchsorted per (batch, entity). This is the strategy for
-    the dominant production shape (10^12-row fact vs a per-entity-per-hour
-    stats/dimension table): zero exchange, fuses with adjacent mapInPandas
-    stages into one narrow pass.
-
-    Mirrors the reference's grid-alignment resample where the TARGET grid is
-    dense and the SOURCE samples are sparse (tools/Resample.cxx:83-99).
+):
+    """Driver half of asof_join_broadcast: collects and indexes the right
+    side (bounded by max_right_rows), broadcasts the index, and returns
+    (batch function, output schema) for a left side of ``left_schema``.
+    The batch function maps an iterator of Arrow record batches to an
+    iterator of record batches with the matched right columns appended,
+    so it can run as its own mapInArrow stage or be chained with other
+    batch functions inside one.
     """
     import numpy as np
     import pandas as pd
@@ -669,14 +683,14 @@ def asof_join_broadcast(
 
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left, right, on, by_l, right_cols, suffix, include_right_on, direction
+        left_schema.names, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
     interp = direction == "interpolate"
     cubic = direction == "cubic"
     blend = interp or cubic  # multi-row blends emit double columns
 
     rschema = {f.name: f for f in right.schema.fields}
-    out_fields = list(left.schema.fields) + [
+    out_fields = list(left_schema.fields) + [
         StructField(oc, DoubleType() if blend else rschema[c].dataType, True)
         for c, oc in zip(rcols, out_rnames)
     ]
@@ -718,9 +732,8 @@ def asof_join_broadcast(
                 for c in (on, *rcols)
             }
             index[k] = (_ts_np_series(grp[on]), payload)
-    sc = left.sparkSession.sparkContext
-    b_index = sc.broadcast(index)
-    lcols = [f.name for f in left.schema.fields]
+    b_index = right.sparkSession.sparkContext.broadcast(index)
+    lcols = left_schema.names
     # dtype templates only — capturing `rp` itself would cloudpickle the
     # whole collected right side into every task closure, duplicating the
     # broadcast at up to max_right_rows scale
@@ -816,7 +829,7 @@ def asof_join_broadcast(
                 names=lcols + [oc for _c, oc in gather_cols],
             )
 
-    return left.mapInArrow(fn, out_schema)
+    return fn, out_schema
 
 
 def asof_join_cogroup(
@@ -857,7 +870,7 @@ def asof_join_cogroup(
 
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left, right, on, by_l, right_cols, suffix, include_right_on, direction
+        left.columns, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
     interp = direction == "interpolate"
     cubic = direction == "cubic"

@@ -35,18 +35,11 @@ from ..functions import kernels as K
 
 
 def extract_features(
-    df: DataFrame,
-    scales=K.DEFAULT_SCALES,
-    edges: np.ndarray | None = None,
-    tokens_col: str = "tokens",
-    output_col: str = "features",
-    num_partitions: int | None = None,
+    df: DataFrame, num_partitions: int | None = None, **opts
 ) -> DataFrame:
-    """Append a per-doc feature vector column.
-
-    Vector layout: scale-major, then feature, then histogram bin
-    (reference MakeBag.cxx:459-470). Token arrays pass through unchanged
-    (the per-row invariant of BASELINE.json:15).
+    """Append a per-doc feature vector column (one mapInArrow stage).
+    Options (scales, edges, tokens_col, output_col) are those of
+    features_stage.
 
     num_partitions: repartition (round-robin) before the kernel stage. Set
     this when the upstream plan ends in a shuffle: AQE coalesces post-
@@ -54,14 +47,33 @@ def extract_features(
     (bytes are a bad proxy for kernel cost — a 24 MB input can carry 160
     core-seconds of numpy). On a cluster, size to 2-3x total cores.
     """
-    scales_t = tuple(float(s) for s in scales)
-    edges_arr = None if edges is None else np.asarray(edges, dtype=np.float64)
     if num_partitions:
         df = df.repartition(num_partitions)
+    return df.mapInArrow(*features_stage(df.schema, **opts))
+
+
+def features_stage(
+    schema: StructType,
+    scales=K.DEFAULT_SCALES,
+    edges: np.ndarray | None = None,
+    tokens_col: str = "tokens",
+    output_col: str = "features",
+):
+    """(batch function, output schema) of extract_features for an input of
+    ``schema``: the function maps Arrow record batches to record batches
+    with ``output_col`` appended, so it runs as its own mapInArrow stage or
+    chained with other batch functions inside one.
+
+    Vector layout: scale-major, then feature, then histogram bin
+    (reference MakeBag.cxx:459-470). Token arrays pass through unchanged
+    (the per-row invariant of BASELINE.json:15).
+    """
+    scales_t = tuple(float(s) for s in scales)
+    edges_arr = None if edges is None else np.asarray(edges, dtype=np.float64)
     out_schema = StructType(
-        df.schema.fields + [StructField(output_col, ArrayType(DoubleType()), False)]
+        schema.fields + [StructField(output_col, ArrayType(DoubleType()), False)]
     )
-    tok_idx = df.columns.index(tokens_col)
+    tok_idx = schema.names.index(tokens_col)
 
     # mapInArrow, not mapInPandas: the token column stays a zero-copy Arrow
     # ListArray end to end. The pandas route boxes every row into a python
@@ -90,7 +102,7 @@ def extract_features(
                 names=list(rb.schema.names) + [output_col],
             )
 
-    return df.mapInArrow(fn, out_schema)
+    return fn, out_schema
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,12 @@
 """The flagship job: broadcast as-of join + multi-scale feature
 extraction over the token table — BASELINE.json's headline workload.
 
-``flagship_pipeline(fused=True)`` runs synthesis, the point-in-time stats
-match, and the feature kernel inside ONE mapInArrow stage (a single
-python-worker pass, no intermediate Arrow crossings) — measured at the
-raw kernel ceiling (~30k sequences/sec on 32 local cores).
-``fused=False`` composes the three public operators (token_table ->
-asof_join_broadcast -> extract_features); the two paths are tested
-bit-identical (tests/test_asof_windows.py).
+``flagship_pipeline`` runs synthesis, the point-in-time stats match, and
+the feature kernel inside ONE mapInArrow stage, built from the same batch
+functions as ``synth.token_table``, ``asof_join_broadcast`` and
+``extract_features``. Composing those three operators instead costs two
+extra JVM<->Python Arrow crossings (measured ~19% slower on local[4]);
+tests/test_asof_windows.py checks the two are equal row for row.
 """
 
 from __future__ import annotations
@@ -34,108 +33,29 @@ def flagship_stats(spark, n_docs: int):
     )
 
 
-def flagship_pipeline(spark, n_docs: int, stats=None, fused: bool = True):
+def flagship_pipeline(spark, n_docs: int, stats=None):
     """As-of join + feature extraction over the token table — the
     BASELINE.json headline. Per-source rolling stats (one row per source
     time-bucket) are as-of joined onto each doc (point-in-time, leakage
     free), then the full 8-feature x 2-scale histogram vector is extracted
     per doc.
 
-    fused=True runs synth + as-of match + feature kernel inside ONE
-    mapInArrow stage (one python-worker pass, zero intermediate Arrow
-    crossings); fused=False composes the three public operators (three
-    python stages) — the reference implementation the fused path is
-    tested equal to (tests/test_asof_windows.py)."""
+    One mapInArrow stage over spark.range chains the batch functions of
+    the public operators: synth._gen_token_batches -> asof_broadcast_stage
+    -> features_stage. Its output equals token_table -> asof_join_broadcast
+    -> extract_features, which runs three Python stages."""
     from image_feature_extraction_spark import synth
-    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
-    from image_feature_extraction_spark.operators.features import extract_features
+    from image_feature_extraction_spark.operators.asof import asof_broadcast_stage
+    from image_feature_extraction_spark.operators.features import features_stage
 
     if stats is None:
         stats = flagship_stats(spark, n_docs)
-    if not fused:
-        docs = synth.token_table(spark, n_docs)
-        joined = asof_join_broadcast(docs, stats, on="ts", by="source")
-        return extract_features(joined, scales=SCALES)
-
-    import numpy as np
-
-    from image_feature_extraction_spark.functions import kernels as K
-
-    # Broadcast per-source sorted stats index (ts ascending per source).
-    # Payload columns participate in the sort so duplicate (source, ts)
-    # stats rows match the GREATEST payload deterministically — the same
-    # tie-break as asof_join_broadcast's index build (fused and unfused
-    # paths stay bit-identical even for non-unique stats keys).
-    stats_pdf = stats.toPandas().sort_values(
-        ["source", "ts", "bucket_docs", "bucket_mean_len"],
-        kind="stable",
-        na_position="first",
-    )
-    index = {
-        src: (
-            grp["ts"].to_numpy(dtype=np.float64),
-            grp["bucket_docs"].to_numpy(dtype=np.int64),
-            grp["bucket_mean_len"].to_numpy(dtype=np.float64),
-        )
-        for src, grp in stats_pdf.groupby("source", sort=False)
-    }
-    b_index = spark.sparkContext.broadcast(index)
-    out_schema = (
-        synth.TOKEN_TABLE_SCHEMA
-        + ", bucket_docs long, bucket_mean_len double, features array<double>"
-    )
-    rng_df = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
+    docs_schema = synth.token_table(spark, n_docs).schema
+    asof_fn, asof_schema = asof_broadcast_stage(docs_schema, stats, on="ts", by="source")
+    features_fn, out_schema = features_stage(asof_schema, scales=SCALES)
 
     def fn(batches):
-        import pyarrow as pa
+        return features_fn(asof_fn(synth._gen_token_batches(batches)))
 
-        idx = b_index.value
-        for rb in batches:
-            ids = rb.column(0).to_numpy()
-            rows = [synth.doc_row(int(i)) for i in ids]
-            n = len(rows)
-            # as-of match (backward, inclusive) against the stats index
-            bd = np.full(n, None, dtype=object)
-            bm = np.full(n, np.nan, dtype=np.float64)
-            for i, r in enumerate(rows):
-                ent = idx.get(r["source"])
-                if ent is None:
-                    continue
-                rts, docs_arr, mean_arr = ent
-                j = np.searchsorted(rts, float(r["ts"]), side="right") - 1
-                if j >= 0:
-                    bd[i] = int(docs_arr[j])
-                    bm[i] = mean_arr[j]
-            # feature kernel on raw token views (no boxing round-trip)
-            vecs = K.batch_feature_vectors(
-                [r["tokens"] for r in rows], SCALES, None
-            )
-            L = vecs.shape[1]
-            lens = np.fromiter((r["n_tok"] for r in rows), np.int32, n)
-            offsets = np.zeros(n + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            flat = (
-                np.concatenate([r["tokens"] for r in rows])
-                if rows else np.empty(0, np.int32)
-            )
-            yield pa.record_batch(
-                [
-                    pa.array([r["doc_id"] for r in rows], pa.string()),
-                    pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat)),
-                    pa.array(lens, pa.int32()),
-                    pa.array([r["source"] for r in rows], pa.string()),
-                    pa.array(np.fromiter((r["ts"] for r in rows), np.int64, n)),
-                    pa.array(bd, pa.int64(), from_pandas=True),
-                    pa.array(bm, pa.float64(), from_pandas=True),
-                    pa.ListArray.from_arrays(
-                        pa.array(np.arange(n + 1, dtype=np.int32) * L),
-                        pa.array(vecs.ravel(), type=pa.float64()),
-                    ),
-                ],
-                names=["doc_id", "tokens", "n_tok", "source", "ts",
-                       "bucket_docs", "bucket_mean_len", "features"],
-            )
-
+    rng_df = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
     return rng_df.mapInArrow(fn, out_schema)
-
-

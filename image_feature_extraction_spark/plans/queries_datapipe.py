@@ -1244,16 +1244,27 @@ _register(
 
 def q_flagship_parity(spark, sf_dir):
     """P7 invariant promoted to a driver-visible CORRECTNESS row (VERDICT
-    r2 #6): the fused single-stage flagship pipeline (synth + as-of match +
+    r2 #6): the single-stage flagship pipeline (synth + as-of match +
     kernel in ONE mapInArrow pass) must be BIT-IDENTICAL — feature digests
-    AND joined point-in-time stats — to the composed three-operator path
-    (token_table -> asof_join_broadcast -> extract_features). Returns one
-    row of counts; any divergence drops a match count and fails the hash."""
-    from ..plans.flagship import flagship_pipeline
+    AND joined point-in-time stats — to the three public operators
+    composed here (token_table -> asof_join_broadcast -> extract_features).
+    Returns one row of counts; any divergence drops a match count and
+    fails the hash."""
+    from .. import synth
+    from ..operators.asof import asof_join_broadcast
+    from ..operators.features import extract_features
+    from ..plans.flagship import SCALES, flagship_pipeline, flagship_stats
     from .queries import FLAGSHIP_DOCS, digest_col
 
-    def digested(fused: bool, tag: str):
-        out = flagship_pipeline(spark, FLAGSHIP_DOCS, fused=fused)
+    stats = flagship_stats(spark, FLAGSHIP_DOCS)
+    composed = extract_features(
+        asof_join_broadcast(
+            synth.token_table(spark, FLAGSHIP_DOCS), stats, on="ts", by="source"
+        ),
+        scales=SCALES,
+    )
+
+    def digested(out, tag: str):
         return out.select(
             "doc_id",
             digest_col(F.col("features")).alias(f"digest_{tag}"),
@@ -1261,7 +1272,9 @@ def q_flagship_parity(spark, sf_dir):
             F.col("bucket_mean_len").alias(f"bm_{tag}"),
         )
 
-    j = digested(True, "f").join(digested(False, "u"), "doc_id", "full_outer")
+    j = digested(flagship_pipeline(spark, FLAGSHIP_DOCS, stats=stats), "f").join(
+        digested(composed, "u"), "doc_id", "full_outer"
+    )
     return j.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum(

@@ -37,7 +37,7 @@ def get_spark(
             f"{pkg_root}{os.pathsep}{existing}" if existing else pkg_root
         )
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     # Under spark-submit (detected via the pre-launched JVM gateway env)
     # the master comes from --master — setting one here would silently
     # override a cluster master with local[N]. Only default to local[N]
@@ -48,6 +48,12 @@ def get_spark(
     )
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
+    )
+    # driver heap: half of physical RAM, capped at 16g (local mode runs
+    # every task inside this JVM, so the heap must fit the host)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    driver_memory = os.environ.get(
+        "SPARK_DRIVER_MEMORY", f"{max(1024, min(16384, ram_mb // 2))}m"
     )
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -61,7 +67,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.sql.execution.arrow.pyspark.selfDestruct.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         # keep per-task numpy single-threaded; parallelism comes from tasks
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")

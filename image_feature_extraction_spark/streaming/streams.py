@@ -225,7 +225,8 @@ def _cents_half_up(vals):
     ``Decimal(repr(v))`` HALF_UP — CPython's repr is the same
     shortest-round-trip decimal Java's Double.toString produces.
     2-decimal labels (the ``encode.cents_sql`` contract) never hit the
-    slow path. Caller masks NaN first (floor(NaN) -> undefined int64).
+    slow path. Callers mask non-finite values first (floor(NaN) and
+    floor(±Inf) cast to INT64_MIN) and treat them as NULL.
     """
     import numpy as np
 
@@ -348,12 +349,12 @@ def streaming_zscore(
                     }
                 )
             )
-            # Mask NULLs before rounding (streaming_decayed's rule):
-            # np.round(NaN).astype(int64) is undefined garbage that would
-            # permanently corrupt the cents state, and the batch operator's
-            # COUNT(value)/DECIMAL sums skip NULLs.
+            # Mask NULLs and ±Inf before rounding (streaming_decayed's
+            # rule): floor(NaN or Inf).astype(int64) is INT64_MIN, which
+            # would permanently corrupt the cents state, and the batch
+            # operator's COUNT(value)/DECIMAL sums skip NULLs.
             vals = grp[value].to_numpy(np.float64)
-            ok = ~np.isnan(vals)
+            ok = np.isfinite(vals)
             vc = _cents_half_up(vals[ok])
             n += int(ok.sum())
             s_c += int(vc.sum())
@@ -539,7 +540,7 @@ def streaming_decayed(
                 )
             )
             vals = grp[value].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals)
+            ok = np.isfinite(vals)
             cents[0] += int(_cents_half_up(vals[ok]).sum())
             cnts[0] += int(ok.sum())
         if base is not None:
@@ -797,7 +798,7 @@ def streaming_target_encode(
                 )
             )
             vals = grp[label].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals)
+            ok = np.isfinite(vals)
             cur_cents += int(_cents_half_up(vals[ok]).sum())
             cur_n += int(ok.sum())
         state.update(

@@ -24,6 +24,8 @@ Usage:
 
 Output: BENCH/PLAN_AUDIT.md (table, one row per query) — commit it and
 diff between rounds; any count drift is a plan regression to explain.
+Both modes exit 1 when an audited plan has row-at-a-time Python or
+fails to build.
 """
 
 from __future__ import annotations
@@ -107,18 +109,16 @@ def main() -> None:
                 for name, err in errors:
                     f.write(f"- {name}: {err}\n")
         print("\nwrote BENCH/PLAN_AUDIT.md")
-        totals = {
-            "queries": len(rows),
-            "pyrow_nonzero": sum(1 for _, c in rows if c["pyrow"]),
-            "errors": len(errors),
-        }
-        print(totals)
-        spark.stop()
-        sys.exit(1 if (totals["pyrow_nonzero"] or errors) else 0)
-
+    totals = {
+        "queries": len(rows),
+        "pyrow_nonzero": sum(1 for _, c in rows if c["pyrow"]),
+        "errors": len(errors),
+    }
+    print(totals)
     spark.stop()
-    if errors:
-        sys.exit(1)
+    # row-at-a-time Python or a failed plan fails the audit, whether it
+    # covered every query or only the ones named
+    sys.exit(1 if (totals["pyrow_nonzero"] or errors) else 0)
 
 
 if __name__ == "__main__":

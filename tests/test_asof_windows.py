@@ -451,27 +451,37 @@ def test_asof_bucketed_extreme_skew(spark):
 
 
 def test_flagship_fused_equals_unfused(spark):
-    """The single-stage fused flagship must equal the 3-operator pipeline
-    row for row (features bit-identical, same as-of matches)."""
-    import bench
+    """The single-stage flagship must equal the three public operators
+    composed as three stages, row for row: token arrays, as-of matches
+    and bit-identical features."""
+    from image_feature_extraction_spark import synth
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
+    from image_feature_extraction_spark.operators.features import extract_features
+    from image_feature_extraction_spark.plans.flagship import (
+        SCALES,
+        flagship_pipeline,
+        flagship_stats,
+    )
 
     n = 300
-    stats = bench.flagship_stats(spark, n)
-    cols = ["doc_id", "bucket_docs", "bucket_mean_len", "features", "n_tok"]
-    a = (
-        bench.flagship_pipeline(spark, n, stats=stats, fused=True)
-        .select(*cols).toPandas().sort_values("doc_id").reset_index(drop=True)
+    stats = flagship_stats(spark, n)
+    composed = extract_features(
+        asof_join_broadcast(synth.token_table(spark, n), stats, on="ts", by="source"),
+        scales=SCALES,
     )
-    b = (
-        bench.flagship_pipeline(spark, n, stats=stats, fused=False)
-        .select(*cols).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
+
+    def rows(df):
+        return df.toPandas().sort_values("doc_id").reset_index(drop=True)
+
+    a, b = rows(flagship_pipeline(spark, n, stats=stats)), rows(composed)
+    assert list(a.columns) == list(b.columns)
+    arrays = ["tokens", "features"]
     pd.testing.assert_frame_equal(
-        a.drop(columns=["features"]), b.drop(columns=["features"]),
-        check_dtype=False,
+        a.drop(columns=arrays), b.drop(columns=arrays), check_dtype=False
     )
-    for x, y in zip(a["features"], b["features"]):
-        np.testing.assert_array_equal(np.asarray(x), np.asarray(y))
+    for c in arrays:
+        for x, y in zip(a[c], b[c]):
+            assert np.array_equal(np.asarray(x), np.asarray(y))
 
 
 def test_asof_bucket_boundary_timestamps(spark):

@@ -550,6 +550,62 @@ def test_streaming_zscore_null_values_do_not_corrupt_state(spark, tmp_path):
     assert got.loc[3, "z_n_prev"] == 2
 
 
+def test_streaming_infinite_value_counts_as_null(spark, tmp_path):
+    """A +inf value must leave the cents state exactly as a NULL would:
+    floor(inf).astype(int64) is INT64_MIN, which would poison every later
+    row of the entity. Runs the three cents-state twins on the same
+    two-micro-batch stream with one value +inf and with it NULL."""
+    import datetime as dt
+    import time as _time
+
+    import pandas as pd
+
+    T0 = dt.datetime(2024, 1, 1)
+
+    def run(bad, tag):
+        rows = [
+            (i, "u", "click", T0 + dt.timedelta(seconds=10 * i), v)
+            for i, v in enumerate([10.0, 20.0, bad, 40.0, 50.0])
+        ]
+        pdf = pd.DataFrame(
+            rows, columns=["event_id", "user_id", "event_type", "ts", "value"]
+        )
+        pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+        df = spark.createDataFrame(pdf).selectExpr(
+            "event_id", "user_id", "event_type",
+            "cast(ts as timestamp_ntz) ts", "value",
+        )
+        d = str(tmp_path / tag)
+        for lo, hi in ((0, 3), (3, 5)):  # the bad value is in batch 1
+            df.where(F.col("event_id").isin(list(range(lo, hi)))).coalesce(
+                1
+            ).write.mode("append").parquet(d)
+            _time.sleep(1.1)
+        outs = {}
+        for name, build in (
+            ("zscore", ST.streaming_zscore),
+            ("decayed", lambda e: ST.streaming_decayed(e, bucket_seconds=15.0)),
+            ("te", lambda e: ST.streaming_target_encode(e, time_bucket=15.0)),
+        ):
+            sdf = ST.stream_events(spark, d, df.schema, max_files_per_trigger=1)
+            ST.run_to_memory(build(sdf), f"inf_{name}_{tag}", "update")
+            outs[name] = (
+                spark.table(f"inf_{name}_{tag}").toPandas()
+                .sort_values("event_id").reset_index(drop=True)
+            )
+        return outs
+
+    got, want = run(float("inf"), "inf"), run(None, "null")
+    # the +inf row's own z-score is its own arithmetic, (inf - mean) / sd;
+    # everything that reads state must match the NULL run
+    assert got["zscore"].loc[2, "z_score"] == float("inf")
+    got["zscore"].loc[2, "z_score"] = None
+    for name in want:
+        pd.testing.assert_frame_equal(got[name], want[name], check_dtype=False)
+    assert got["zscore"].loc[3, "z_n_prev"] == 2
+    assert got["te"].loc[3, "te_n_prev"] == 2
+
+
 @pytest.fixture(scope="module")
 def ordered_slices_dir(spark, tmp_path_factory):
     """sf0.001 events written as 3 contiguous time slices with ascending
