@@ -26,8 +26,9 @@ All kernels operate on batches: the leading axes are free, the cube axes are
 the last three. Dtype discipline mirrors the reference: float32 image
 pipeline (storage + stencil stages — `typedef float PixelType`,
 ExtractFeatures.cxx:81), float64 for the eigen/trig closed form and all
-histogram/edge arithmetic. float32 stencils measured +44% throughput at
-full-machine concurrency (the batch path is DRAM-bandwidth-bound).
+histogram/edge arithmetic. On a 32-core host, where the batch path was
+DRAM-bandwidth-bound, float32 stencils measured +44% throughput at
+full-machine concurrency (not re-measured on smaller hosts).
 """
 
 from __future__ import annotations
@@ -54,7 +55,11 @@ DEFAULT_SCALES = (1.0, 2.0)
 
 # Cache-blocking budget for batched cube processing (cells per chunk); see
 # batch_feature_vectors. 8192 cells * 8 B * ~30 temporaries ~= 2 MB working
-# set per (chunk, scale) — L2/L3-resident on current server cores.
+# set per (chunk, scale), about one core's L2. Swept on a 4-core Xeon, one
+# thread, 512-doc calls: 4,096 / 8,192 / 16,384 / 32,768 cells gave about
+# 1.7k / 2.0k / 2.4k / 2.7k docs/s for +5 / +6 / +9 / +18 MB of peak RSS. In
+# the tokens benchmark 16,384 added ~5 MB of worker RSS with no rows/s gain
+# above the noise, so the budget stays at 8,192.
 CHUNK_CELLS = 8192
 
 
@@ -85,16 +90,11 @@ def _diag_order(v0: np.ndarray, v1: np.ndarray, v2: np.ndarray):
     return e0, e1, e2
 
 
-def eig3x3(A: np.ndarray) -> np.ndarray:
-    """Eigenvalues of symmetric 3x3 matrices packed [A11,A12,A13,A22,A23,A33]
-    on the last axis; returns (..., 3) ordered |e2| <= |e1| <= |e0|.
-
-    Vectorized port of Symmetric3x3EigenvalueSolver.h:33-132 (trig closed
-    form, r clamped to [-1,1], magnitude-ordered output with two swaps).
-    """
-    A = np.asarray(A, dtype=np.float64)
-    A11, A12, A13, A22, A23, A33 = (A[..., i] for i in range(6))
-
+def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
+    """Column-wise core of eig3x3: the six packed entries as separate
+    float64 arrays -> (e0, e1, e2) ordered |e2| <= |e1| <= |e0|. The inputs
+    are only read. Feed it float64: the reference solves in double, and a
+    float32 solve moves values across bin edges."""
     p_off = A12 * A12 + A13 * A13 + A23 * A23
     diag = p_off == 0
     any_diag = bool(diag.any())
@@ -105,7 +105,7 @@ def eig3x3(A: np.ndarray) -> np.ndarray:
     # In-place formulation: identical operations and order to the naive
     # expression tree (bit-exact — asserted against saved outputs when
     # introduced), ~40% fewer full-size temporaries; this stage is the
-    # hot spot of the DRAM-bandwidth-bound batch path.
+    # largest single stage of batch_feature_vectors.
     q = A11 + A22
     q += A33
     q /= 3.0
@@ -161,36 +161,46 @@ def eig3x3(A: np.ndarray) -> np.ndarray:
     e1, e2 = np.where(sw, e2, e1), np.where(sw, e1, e2)
 
     if any_diag:
-        out = np.stack(
-            [
-                np.where(diag, d0, e0),
-                np.where(diag, d1, e1),
-                np.where(diag, d2, e2),
-            ],
-            axis=-1,
-        )
-    else:
-        out = np.stack([e0, e1, e2], axis=-1)
-    return out
+        return np.where(diag, d0, e0), np.where(diag, d1, e1), np.where(diag, d2, e2)
+    return e0, e1, e2
+
+
+def eig3x3(A: np.ndarray) -> np.ndarray:
+    """Eigenvalues of symmetric 3x3 matrices packed [A11,A12,A13,A22,A23,A33]
+    on the last axis; returns (..., 3) ordered |e2| <= |e1| <= |e0|.
+
+    Vectorized port of Symmetric3x3EigenvalueSolver.h:33-132 (trig closed
+    form, r clamped to [-1,1], magnitude-ordered output with two swaps).
+    """
+    A = np.asarray(A, dtype=np.float64)
+    return np.stack(_eig3x3_cols(*(A[..., i] for i in range(6))), axis=-1)
+
+
+def _eigen_feature_rows(out: np.ndarray, *hess) -> None:
+    """Write the six eigenvalue features of the six float64 Hessian columns
+    `hess` into the rows of `out` (6, ...), in eigenvalue_features' order.
+    `out` may hold `hess` itself: the solve reads every column before the
+    first row is written."""
+    e0, e1, e2 = _eig3x3_cols(*hess)
+    out[0], out[1], out[2] = e0, e1, e2
+    np.add(e0, e1, out=out[3])
+    out[3] += e2
+    np.multiply(e0, e1, out=out[4])
+    out[4] *= e2
+    np.multiply(e0, e0, out=out[5])
+    out[5] += e1 * e1
+    out[5] += e2 * e2
+    np.sqrt(out[5], out=out[5])
 
 
 def eigenvalue_features(A: np.ndarray) -> np.ndarray:
     """(..., 6) packed Hessians -> (..., 6) features
     [e1, e2, e3, e1+e2+e3, e1*e2*e3, sqrt(e1^2+e2^2+e3^2)]
     per EigenvalueFeaturesFunctor.h:20-31."""
-    ev = eig3x3(A)
-    e0, e1, e2 = ev[..., 0], ev[..., 1], ev[..., 2]
-    return np.stack(
-        [
-            e0,
-            e1,
-            e2,
-            e0 + e1 + e2,
-            e0 * e1 * e2,
-            np.sqrt(e0 * e0 + e1 * e1 + e2 * e2),
-        ],
-        axis=-1,
-    )
+    A = np.asarray(A, dtype=np.float64)
+    out = np.empty((6,) + A.shape[:-1])
+    _eigen_feature_rows(out, *(A[..., i] for i in range(6)))
+    return np.moveaxis(out, 0, -1)
 
 
 # ---------------------------------------------------------------------------
@@ -240,39 +250,51 @@ def gauss3(x: np.ndarray, sigma: float) -> np.ndarray:
     return out
 
 
-def _pad_edge(x: np.ndarray, axis: int) -> np.ndarray:
-    """ZeroFluxNeumann (edge-replicate) pad of 1 along `axis`."""
-    first = np.take(x, [0], axis=axis)
-    last = np.take(x, [-1], axis=axis)
-    return np.concatenate([first, x, last], axis=axis)
-
-
-def _axslice(nd: int, axis: int, sl: slice) -> tuple:
-    idx = [slice(None)] * nd
-    idx[axis] = sl
-    return tuple(idx)
-
-
 def derivative(x: np.ndarray, direction: int, order: int = 1) -> np.ndarray:
     """Central-difference derivative along cube direction 0/1/2 with
     ZeroFluxNeumann boundary, matching itk::DerivativeImageFilter as
     configured in Hessian3DImageFilter.hxx:19-51. Direction 0 is the
-    fastest-varying (last numpy) axis of the C-order cube."""
-    axis = -(direction + 1)
+    fastest-varying (last numpy) axis of the C-order cube.
+
+    Neighbours are read as slices of `x`, with no padded copy: every cell
+    evaluates (x[i+1] - x[i-1]) * 0.5 or x[i+1] - 2*x[i] + x[i-1], and a
+    face cell stands in for its own missing neighbour (the edge
+    replicate)."""
+    if order not in (1, 2):
+        raise ValueError(f"unsupported derivative order {order}")
     x = np.asarray(x)
     if x.dtype not in (np.float32, np.float64):
         x = x.astype(np.float64)
-    xp = _pad_edge(x, axis)
+    x = np.ascontiguousarray(x)
+    if not 0 <= direction < x.ndim:
+        raise ValueError(f"direction {direction} out of range for {x.ndim}-d input")
+    axis = x.ndim - 1 - direction
     n = x.shape[axis]
-    nd = xp.ndim
-    lo = xp[_axslice(nd, axis, slice(0, n))]        # x_{i-1} (view)
-    hi = xp[_axslice(nd, axis, slice(2, n + 2))]    # x_{i+1} (view)
-    if order == 1:
-        return (hi - lo) * 0.5
-    if order == 2:
-        mid = xp[_axslice(nd, axis, slice(1, n + 1))]
-        return hi - 2.0 * mid + lo
-    raise ValueError(f"unsupported derivative order {order}")
+    st = math.prod(x.shape[axis + 1 :])  # flat distance between neighbours
+    out = np.empty(x.shape, dtype=x.dtype)
+    flat, oflat = x.reshape(-1), out.reshape(-1)
+    m = flat.size - 2 * st
+    x3, o3 = x.reshape(-1, n, st), out.reshape(-1, n, st)
+    # (cells, x[i+1], x[i], x[i-1]). First one contiguous pass over the
+    # flat array, skipping the first and last `st` cells; it gets the face
+    # cells wrong (their flat neighbour lies across the face), so the two
+    # face runs come after it and overwrite them. With n == 1 both faces
+    # are the one cell.
+    runs = [(oflat[st : st + m], flat[2 * st :], flat[st : st + m], flat[:m])] if m > 0 else []
+    nxt, prv = min(1, n - 1), max(n - 2, 0)
+    runs += [
+        (o3[:, 0], x3[:, nxt], x3[:, 0], x3[:, 0]),
+        (o3[:, n - 1], x3[:, n - 1], x3[:, n - 1], x3[:, prv]),
+    ]
+    for o, hi, mid, lo in runs:
+        if order == 1:
+            np.subtract(hi, lo, out=o)
+            o *= 0.5
+        else:
+            np.multiply(mid, 2.0, out=o)
+            np.subtract(hi, o, out=o)
+            o += lo
+    return out
 
 
 def gradient_magnitude(x: np.ndarray) -> np.ndarray:
@@ -306,43 +328,10 @@ def normalized_convolution(img: np.ndarray, cert: np.ndarray, sigma: float) -> n
     (nothing within reach). NormalizedGaussianConvolutionImageFilter.hxx:37-63."""
     img = np.asarray(img)
     cert = np.asarray(cert, dtype=img.dtype if img.dtype in (np.float32, np.float64) else np.float64)
-    num = gauss3(img * cert, sigma)
-    den = gauss3(cert, sigma)
+    # One separable pass smooths numerator and denominator together.
+    num, den = gauss3(np.stack([img * cert, cert]), sigma)
     ok = den > 0
     return np.where(ok, num / np.where(ok, den, 1.0), np.asarray(0.0, dtype=num.dtype))
-
-
-def emphysema_features_fg(
-    img: np.ndarray,
-    cert: np.ndarray,
-    sigma: float,
-    rows: np.ndarray,
-    cols: np.ndarray,
-) -> np.ndarray:
-    """Per-cell 8-feature values at FOREGROUND cells only, for batched
-    cubes (B,s,s,s): the stencil stages (smoothing, gradient, Hessian)
-    need the full cube, but the pointwise eigen stage — the most
-    expensive — runs only on the (rows, cols) flat-index selection.
-    Returns (len(rows), 8) in FEATURE_NAMES order, bit-identical to
-    gathering emphysema_features(...) at the same cells.
-
-    REFERENCE IMPLEMENTATION for batch_feature_vectors' fused loop
-    (which inlines these stages to bin each column without this
-    function's (n_fg, 8) materialization): the fused path is pinned
-    bit-identical to this one by tests/test_kernels.py's fusion parity
-    test — edit both together."""
-    cert = np.asarray(cert)
-    if cert.dtype not in (np.float32, np.float64):
-        cert = cert.astype(np.float64)
-    B = img.shape[0]
-    sm = normalized_convolution(img, cert, sigma)
-    gm = gradient_magnitude(sm)
-    H = hessian6(sm)
-    sel_sm = sm.reshape(B, -1)[rows, cols]
-    sel_gm = gm.reshape(B, -1)[rows, cols]
-    sel_H = H.reshape(B, -1, 6)[rows, cols]
-    ef = eigenvalue_features(sel_H)  # (Nfg, 6)
-    return np.concatenate([np.stack([sel_sm, sel_gm], axis=-1), ef], axis=-1)
 
 
 def emphysema_features(img: np.ndarray, cert: np.ndarray, sigma: float) -> np.ndarray:
@@ -544,10 +533,14 @@ def batch_feature_vectors(
 ) -> np.ndarray:
     """Vectorized multi-document feature vectors.
 
-    Documents are grouped by cube side s; each s-group is processed as ONE
-    (B,s,s,s) batch so every numpy op is vectorized across documents (padding
-    with certainty-0 cells is a no-op for masked outputs — see SURVEY.md
-    §7.1). Returns (n_docs, vec_len) float64 in input order.
+    Documents are grouped by cube side s; each s-group is processed in
+    (B,s,s,s) chunks of about CHUNK_CELLS cells, so every numpy op is
+    vectorized across documents (padding with certainty-0 cells is a no-op
+    for masked outputs — see SURVEY.md §7.1). Returns (n_docs, vec_len)
+    float64 in input order, bit-identical to running the public stages
+    one doc at a time and binning each feature with histogram_counts (the
+    unfused reference in tests/test_kernels.py). `edges` must be sorted
+    along the last axis, as histogram_counts assumes.
     """
     if edges is None:
         edges = default_edges()
@@ -555,107 +548,82 @@ def batch_feature_vectors(
     if edges.ndim == 2:
         edges = np.broadcast_to(edges, (len(scales),) + edges.shape)
     n_edges = edges.shape[-1]
-    vec_len = len(scales) * NUM_FEATURES * (n_edges + 1)
+    nb = n_edges + 1
+    n_cols = len(scales) * NUM_FEATURES
+    vec_len = n_cols * nb
+    # Binning without searchsorted: a value's bin is the number of edges
+    # below it, n_edges minus the count of edges at or above it
+    # (sum_k v <= e_k), which equals searchsorted(side="left") for ties and
+    # NaN too. Its bincount key is its doc's row offset + its column's
+    # offset + that bin.
+    col_base = (np.arange(n_cols) * nb + n_edges)[:, None]
+    count_dtype = np.min_scalar_type(n_edges)
 
-    n_docs = len(token_arrays)
-    out = np.zeros((n_docs, vec_len), dtype=np.float64)
+    lens = [len(t) for t in token_arrays]
+    out = np.zeros((len(lens), vec_len), dtype=np.float64)
 
     by_side: dict[int, list[int]] = {}
-    for i, toks in enumerate(token_arrays):
-        by_side.setdefault(cube_side(len(toks)), []).append(i)
+    for i, n in enumerate(lens):
+        by_side.setdefault(cube_side(n), []).append(i)
 
     for s, side_idxs in by_side.items():
-        # Cache blocking: the numeric chain materializes ~30 float64
-        # temporaries of (B, s^3); keeping B*s^3 near CHUNK_CELLS keeps the
-        # working set L2/L3-resident. Measured on 32 cores this is ~2.5x
-        # total throughput vs one giant batch (memory-bandwidth-bound
-        # otherwise) — the difference between 7.7k and 19k docs/s.
+        # Cache blocking: the numeric chain materializes ~30 temporaries of
+        # (B, s^3); keeping B*s^3 near CHUNK_CELLS keeps them cache-resident.
         chunk_b = max(1, CHUNK_CELLS // (s * s * s))
+        cells = np.arange(s * s * s)
         for c0 in range(0, len(side_idxs), chunk_b):
             idxs = side_idxs[c0 : c0 + chunk_b]
             B = len(idxs)
-            img = np.zeros((B, s * s * s), dtype=np.float32)
-            cert = np.zeros((B, s * s * s), dtype=np.float32)
-            for b, i in enumerate(idxs):
-                toks = np.asarray(token_arrays[i])
-                img[b, : len(toks)] = toks.astype(np.float32)
-                cert[b, : len(toks)] = 1.0
+            n_tok = np.array([lens[i] for i in idxs])
+            # Foreground is each doc's prefix of n_tok cells, so one mask
+            # packs the tokens and gathers every foreground value.
+            fg = cells < n_tok[:, None]
+            img = np.zeros(fg.shape, dtype=np.float32)
+            img[fg] = np.concatenate(
+                [token_arrays[i] for i in idxs], dtype=np.float32, casting="unsafe"
+            )
             img = img.reshape(B, s, s, s)
-            cert = cert.reshape(B, s, s, s)
+            cert = fg.astype(np.float32).reshape(B, s, s, s)
 
-            flatc = cert.reshape(B, -1)
-            rows, cols = np.nonzero(flatc != 0.0)
-            # per-doc foreground-cell counts (histogram denominators)
-            totals = np.bincount(rows, minlength=B).astype(np.float64)
-            safe_tot = np.where(totals == 0, 1.0, totals)
-            nb = n_edges + 1
-            idxs_arr = np.asarray(idxs)
+            def sel(a):
+                return a.reshape(B, -1)[fg]
 
-            def binit(vals, si, fi):
-                # Vectorized across docs: one searchsorted + bincount per
-                # (scale, feature) for the whole chunk instead of a Python
-                # loop per doc (measured ~30% of kernel time).
-                bins = np.searchsorted(edges[si, fi], vals, side="left")
-                counts = np.bincount(
-                    rows * nb + bins, minlength=B * nb
-                ).reshape(B, nb)
-                off = (si * NUM_FEATURES + fi) * nb
-                out[idxs_arr, off : off + nb] = counts / safe_tot[:, None]
-
+            n_fg = int(n_tok.sum())
+            vals = np.empty((NUM_FEATURES, n_fg))
+            at_or_above = np.zeros((n_cols, n_fg), dtype=count_dtype)
             for si, sigma in enumerate(scales):
-                # Histogram binning FUSED into the feature pass: each
-                # feature column is binned the moment it exists and then
-                # dropped, instead of materializing the (n_fg, 8) stack
-                # emphysema_features_fg would build and re-reading it
-                # per feature. Bit-identical (same arithmetic, asserted
-                # when introduced); measured 368 -> 460 docs/s (+25%)
-                # single-threaded on the mixed-length distribution — the
-                # saved (n_fg, 8) write+read is pure memory traffic in a
-                # DRAM-bandwidth-bound kernel. The eigen stage (the hot
-                # spot) still runs on foreground cells only.
                 sm = normalized_convolution(img, cert, sigma)
-                binit(sm.reshape(B, -1)[rows, cols], si, 0)
-                # derivative block with SHARED first-derivative
-                # intermediates (hessian6 recomputes dx/dy that
-                # gradient_magnitude already produced — 2 full stencil
-                # passes saved) and gather-BEFORE-stack for the Hessian
-                # components (hessian6 materializes a (B,s,s,s,6) array
-                # the loop would immediately gather from; stacking the
-                # gathered (n_fg,) columns writes 6*n_fg instead of
-                # 6*cells doubles). Same expression trees op for op —
-                # bit-identical to gradient_magnitude/hessian6, pinned
-                # by the fusion parity test.
+                # gradient_magnitude and hessian6, sharing the first
+                # derivatives, and only the foreground of each kept.
                 dx = derivative(sm, 0, 1)
                 dy = derivative(sm, 1, 1)
                 dz = derivative(sm, 2, 1)
-                gm = np.sqrt(dx * dx + dy * dy + dz * dz)
-                binit(gm.reshape(B, -1)[rows, cols], si, 1)
-                del gm, dz
-
-                def sel(a):
-                    return a.reshape(B, -1)[rows, cols]
-
-                sel_H = np.stack(
-                    [
-                        sel(derivative(sm, 0, 2)),   # Dxx
-                        sel(derivative(dx, 1, 1)),   # Dxy
-                        sel(derivative(dx, 2, 1)),   # Dxz
-                        sel(derivative(sm, 1, 2)),   # Dyy
-                        sel(derivative(dy, 2, 1)),   # Dyz
-                        sel(derivative(sm, 2, 2)),   # Dzz
-                    ],
-                    axis=-1,
-                )
+                vals[0] = sel(sm)
+                vals[1] = sel(np.sqrt(dx * dx + dy * dy + dz * dz))
+                del dz
+                # The float32 Hessian lands in float64 rows BEFORE the
+                # solve, as eig3x3 converts: a float32 solve flipped an
+                # eig1 bin in one of 2,048 docs. Its six rows are then
+                # overwritten by the six eigenvalue features.
+                hess = vals[2:]
+                for j, (a, d, order) in enumerate(
+                    ((sm, 0, 2), (dx, 1, 1), (dx, 2, 1), (sm, 1, 2), (dy, 2, 1), (sm, 2, 2))
+                ):
+                    hess[j] = sel(derivative(a, d, order))
                 del sm, dx, dy
-                ev = eig3x3(sel_H)
-                del sel_H
-                e0, e1, e2 = ev[..., 0], ev[..., 1], ev[..., 2]
-                binit(e0, si, 2)
-                binit(e1, si, 3)
-                binit(e2, si, 4)
-                binit(e0 + e1 + e2, si, 5)
-                binit(e0 * e1 * e2, si, 6)
-                binit(np.sqrt(e0 * e0 + e1 * e1 + e2 * e2), si, 7)
+                _eigen_feature_rows(hess, *hess)
+                scale_counts = at_or_above[si * NUM_FEATURES : (si + 1) * NUM_FEATURES]
+                for k in range(n_edges):
+                    scale_counts += vals <= edges[si, :, k, None]
+            # ONE bincount per chunk, over every column's keys. Keep it per
+            # chunk: holding a whole batch's keys (or raising CHUNK_CELLS to
+            # 32,768) nearly doubled the Python worker's peak RSS on the
+            # tokens benchmark.
+            del vals, hess
+            key = np.repeat(np.arange(B) * vec_len, n_tok) + col_base
+            key -= at_or_above
+            counts = np.bincount(key.ravel(), minlength=B * vec_len)
+            out[idxs] = counts.reshape(B, vec_len) / np.maximum(n_tok, 1)[:, None]
     return out
 
 

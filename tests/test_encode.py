@@ -858,3 +858,26 @@ def test_expanding_robust_stats_history_cap_enforced(spark):
         .orderBy("id").toPandas()
     )
     pd.testing.assert_frame_equal(a, b)
+
+
+def test_expanding_robust_stats_history_cap_in_executed_plan(spark):
+    """The history-cap guard survives optimization: its raise is in the
+    executed plan with a cap set, and absent without one. An optimizer
+    change that folded the guard away would pass the raise test only on
+    inputs it happened to evaluate."""
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [(i, 1, dt.datetime(2024, 1, 1) + dt.timedelta(hours=i), float(i)) for i in range(8)],
+        "id long, ent long, ts timestamp, value double",
+    )
+    kw = dict(by="ent", ts="ts", value="value", id_col="id")
+
+    def plan(cap):
+        out = EN.expanding_robust_stats(df, **kw, max_history_rows=cap)
+        return out._jdf.queryExecution().executedPlan().toString().lower()
+
+    guarded = plan(5)
+    assert "assert_true" in guarded or "raise_error" in guarded
+    unguarded = plan(None)
+    assert "assert_true" not in unguarded and "raise_error" not in unguarded

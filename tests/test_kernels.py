@@ -280,29 +280,163 @@ def test_feature_vector_deterministic():
     assert len(v1) == len(K.DEFAULT_SCALES) * K.NUM_FEATURES * 5
 
 
-def test_fused_binning_matches_unfused_reference():
-    """batch_feature_vectors' fused bin-as-you-go loop == histogramming
-    the (n_fg, 8) matrix emphysema_features_fg materializes — the
-    reference implementation the fusion replaced — bit for bit."""
-    rng = np.random.default_rng(123)
-    docs = [rng.integers(0, 50257, int(L)) for L in rng.integers(16, 2048, 60)]
-    edges = K.default_edges()
-    n_edges = edges.shape[-1]
-    scales = K.DEFAULT_SCALES
-    got = K.batch_feature_vectors(docs, scales=scales)
-    nb = n_edges + 1
-    want = np.zeros_like(got)
+# ---------------------------------------------------------------------------
+# batch_feature_vectors against the unfused per-doc reference, bit for bit
+# ---------------------------------------------------------------------------
+
+def emphysema_features_fg(img, cert, sigma, rows, cols):
+    """Per-cell 8-feature values at the foreground cells (rows, cols) of
+    batched cubes (B,s,s,s), in FEATURE_NAMES order: the public stages
+    composed one after the other, with the (n_fg, 8) matrix materialized.
+    The reference that batch_feature_vectors' fused chunk loop must match
+    bit for bit."""
+    B = img.shape[0]
+    sm = K.normalized_convolution(img, cert, sigma)
+    gm = K.gradient_magnitude(sm)
+    H = K.hessian6(sm)
+    sel_sm = sm.reshape(B, -1)[rows, cols]
+    sel_gm = gm.reshape(B, -1)[rows, cols]
+    ef = K.eigenvalue_features(H.reshape(B, -1, 6)[rows, cols])
+    return np.concatenate([np.stack([sel_sm, sel_gm], axis=-1), ef], axis=-1)
+
+
+def unfused_feature_vectors(docs, scales=K.DEFAULT_SCALES, edges=None):
+    """One doc at a time: the (n_fg, 8) reference matrix per scale,
+    binned per feature by histogram_counts (searchsorted side='left')."""
+    edges = K.default_edges() if edges is None else np.asarray(edges, dtype=np.float64)
+    if edges.ndim == 2:
+        edges = np.broadcast_to(edges, (len(scales),) + edges.shape)
+    nb = edges.shape[-1] + 1
+    want = np.zeros((len(docs), len(scales) * K.NUM_FEATURES * nb))
     for i, toks in enumerate(docs):
         img, cert = K.pad_to_cube(np.asarray(toks))
-        img = img[None].astype(np.float32)
-        cert = cert[None].astype(np.float32)
         rows, cols = np.nonzero(cert.reshape(1, -1) != 0.0)
         total = max(len(rows), 1)
         for si, sigma in enumerate(scales):
-            fg = K.emphysema_features_fg(img, cert, sigma, rows, cols)
+            fg = emphysema_features_fg(img[None], cert[None], sigma, rows, cols)
             for fi in range(K.NUM_FEATURES):
-                bins = np.searchsorted(edges[fi], fg[:, fi], side="left")
-                counts = np.bincount(bins, minlength=nb)[:nb]
                 off = (si * K.NUM_FEATURES + fi) * nb
-                want[i, off:off + nb] = counts / total
+                want[i, off:off + nb] = K.histogram_counts(fg[:, fi], edges[si, fi]) / total
+    return want
+
+
+def test_fused_binning_matches_unfused_reference():
+    """batch_feature_vectors' fused chunk loop == histogramming the
+    (n_fg, 8) matrix the test-side reference materializes, bit for bit."""
+    rng = np.random.default_rng(123)
+    docs = [rng.integers(0, 50257, int(L)) for L in rng.integers(16, 2048, 60)]
+    got = K.batch_feature_vectors(docs, scales=K.DEFAULT_SCALES)
+    np.testing.assert_array_equal(got, unfused_feature_vectors(docs))
+
+
+BOUNDARY_LENGTHS = (0, 1, 2, 8, 9, 27, 28, 1024, 8192, 9261)
+
+
+def test_batch_bit_identical_at_cube_boundaries():
+    """Token counts at and just past each cube size (s = 1, 2, 3, 11, 21
+    and the one-doc chunks past CHUNK_CELLS), plus an all-zero doc, whose
+    gradient and Frobenius values sit exactly on the 0.0 edges."""
+    rng = np.random.default_rng(7)
+    docs = [rng.integers(0, 50257, n).astype(np.int32) for n in BOUNDARY_LENGTHS]
+    docs.append(np.zeros(300, dtype=np.int64))
+    got = K.batch_feature_vectors(docs)
+    want = unfused_feature_vectors(docs)
     np.testing.assert_array_equal(got, want)
+    # the all-zero doc really puts values on an edge: everything in bin 0
+    zero = got[-1].reshape(len(K.DEFAULT_SCALES), K.NUM_FEATURES, -1)
+    np.testing.assert_array_equal(zero[:, [1, 7], 0], 1.0)
+
+
+def test_batch_bit_identical_across_chunks_and_interleaved_sides():
+    """One cube side with more docs than fit in one chunk, and sides
+    interleaved in input order: every output row lands on its own doc."""
+    rng = np.random.default_rng(11)
+    s9 = [rng.integers(0, 50257, int(n)) for n in rng.integers(513, 730, 25)]
+    assert len(s9) > K.CHUNK_CELLS // 9**3
+    mixed = [rng.integers(0, 50257, int(n)) for n in rng.integers(1, 400, 40)]
+    docs = [d for pair in zip(s9, mixed) for d in pair] + mixed[len(s9):]
+    got = K.batch_feature_vectors(docs)
+    np.testing.assert_array_equal(got, unfused_feature_vectors(docs))
+
+
+def test_batch_bit_identical_with_custom_edges():
+    """Per-(scale, feature) 3-D edges, 7 of them, including an exact 0.0
+    edge and a tie between two edges."""
+    rng = np.random.default_rng(13)
+    edges = rng.normal(0.0, 3000.0, (2, K.NUM_FEATURES, 7))
+    edges[:, :, 3] = 0.0
+    edges[:, :, 5] = edges[:, :, 4]
+    edges = np.sort(edges, axis=-1)
+    docs = [rng.integers(0, 50257, int(n)) for n in rng.integers(1, 1100, 30)]
+    docs.append(np.zeros(50, dtype=np.int32))
+    got = K.batch_feature_vectors(docs, scales=(1.0, 2.0), edges=edges)
+    assert got.shape == (len(docs), 2 * K.NUM_FEATURES * 8)
+    np.testing.assert_array_equal(
+        got, unfused_feature_vectors(docs, (1.0, 2.0), edges)
+    )
+
+
+def test_eigen_solve_runs_in_float64(monkeypatch):
+    """The stencils run in float32, the eigen solve in float64, as eig3x3
+    converts its input: solving the float32 Hessian directly moved an
+    eig1 value across a bin edge in one of 2,048 docs."""
+    seen = []
+    core = K._eig3x3_cols
+
+    def spy(*cols):
+        seen.extend(c.dtype for c in cols)
+        return core(*cols)
+
+    monkeypatch.setattr(K, "_eig3x3_cols", spy)
+    rng = np.random.default_rng(3)
+    K.batch_feature_vectors([rng.integers(0, 50257, n) for n in (5, 100, 700)])
+    assert seen and all(dt == np.float64 for dt in seen)
+
+
+def test_one_bincount_per_chunk(monkeypatch):
+    """Binning stays per chunk: one bincount per chunk over at most
+    16 keys per cell of that chunk. Holding a whole batch's keys (or a
+    larger CHUNK_CELLS) nearly doubled the tokens benchmark's Python
+    worker peak RSS."""
+    sizes = []
+    bincount = np.bincount
+
+    def spy(x, *args, **kwargs):
+        sizes.append(len(x))
+        return bincount(x, *args, **kwargs)
+
+    assert K.CHUNK_CELLS < 32768
+    monkeypatch.setattr(np, "bincount", spy)
+    rng = np.random.default_rng(5)
+    lens = [int(n) for n in rng.integers(16, 1025, 64)] + [9261]
+    K.batch_feature_vectors([rng.integers(0, 50257, n) for n in lens])
+    per_side: dict[int, int] = {}
+    for n in lens:
+        per_side[K.cube_side(n)] = per_side.get(K.cube_side(n), 0) + 1
+    chunks = sum(-(-cnt // max(1, K.CHUNK_CELLS // s**3)) for s, cnt in per_side.items())
+    n_cols = len(K.DEFAULT_SCALES) * K.NUM_FEATURES
+    assert len(sizes) == chunks
+    assert max(sizes) <= n_cols * max(K.CHUNK_CELLS, 9261)
+    assert sum(sizes) == n_cols * sum(lens)
+
+
+def test_derivative_matches_padded_form():
+    """The slice-based stencil equals the edge-padded central difference
+    bit for bit, for every direction and order, including sides 1 and 2."""
+    rng = np.random.default_rng(17)
+    for shape in [(3, 5, 5, 5), (2, 1, 1, 1), (2, 2, 2, 2), (4, 3, 7)]:
+        for dt in (np.float32, np.float64):
+            x = rng.normal(0, 100, shape).astype(dt)
+            for d in range(3):
+                ax = -(d + 1)
+                first = np.take(x, [0], axis=ax)
+                last = np.take(x, [-1], axis=ax)
+                xp = np.concatenate([first, x, last], axis=ax)
+                n = x.shape[ax]
+                lo = np.take(xp, np.arange(0, n), axis=ax)
+                mid = np.take(xp, np.arange(1, n + 1), axis=ax)
+                hi = np.take(xp, np.arange(2, n + 2), axis=ax)
+                np.testing.assert_array_equal(K.derivative(x, d, 1), (hi - lo) * 0.5)
+                np.testing.assert_array_equal(K.derivative(x, d, 2), hi - 2.0 * mid + lo)
+    with pytest.raises(ValueError):
+        K.derivative(np.zeros((4, 4)), 2)
