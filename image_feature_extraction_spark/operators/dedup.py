@@ -335,7 +335,7 @@ def embedding_neardup_pairs(df: DataFrame, vec_col: str = "embedding",
     its rows x all-later-rows similarities vectorized (float64 BLAS), and
     emits pairs >= threshold. O(n^2 d) flops but Arrow/numpy speed — the
     verification shape for a candidate set. Beyond max_broadcast_rows,
-    bucket first (similarity.hyperplane_buckets) and run this per bucket.
+    bucket first (similarity._table_buckets) and run this per bucket.
 
     Cosine rounded to 6 decimals; numpy's blocked float64 sums agree with
     the DuckDB oracle's sequential sums to ~1 ulp, far inside the rounding
@@ -406,7 +406,7 @@ def embedding_neardup_pairs_bucketed(
     block_rows: int = 1024,
 ) -> DataFrame:
     """Embedding near-dup at corpus sizes above broadcast: multi-table
-    hyperplane LSH bucketing (similarity.hyperplane_buckets) -> per-
+    hyperplane LSH bucketing (similarity._table_buckets) -> per-
     (table, bucket) blocked float64 matmul -> distinct pairs.
 
     Nothing ever concentrates on the driver: the only shuffles are the
@@ -428,13 +428,13 @@ def embedding_neardup_pairs_bucketed(
     from ..session import widen_small_scan
     from .similarity import _table_buckets
 
-    # the per-table hyperplane bucket-id projection (Catalyst lambda dot
-    # products x n_tables) runs BEFORE the (tbl, bkt) exchange — on a
-    # sub-split input file it would execute on one core (VERDICT r2 #5)
+    # the bucket-id projection (one numpy matmul per Arrow batch for all
+    # tables) runs BEFORE the (tbl, bkt) exchange — on a sub-split input
+    # file it would execute on one core (VERDICT r2 #5)
     df = widen_small_scan(df)
     if dim is None:
-        # dim must match the vectors: a wrong dim makes every hyperplane
-        # dot null -> every row lands in bucket 0 -> one all-pairs task
+        # dim must match the vectors: bucketing raises on any other
+        # length rather than pile rows into one all-pairs bucket
         first = df.select(F.size(vec_col).alias("d")).first()
         if first is None:
             dim = 1  # empty corpus; any value works

@@ -3,19 +3,22 @@
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
   Query set x corpus as a keyed join; at 10^12 corpus rows this is the
   verification path for a candidate set, not the primary search.
-- ``hyperplane_buckets`` / ``lsh_topk``: random-hyperplane (sign) LSH —
-  the scale path. Bucket = sign bits of h fixed hyperplanes; search cost
-  drops from O(corpus) to O(bucket) per query with recall controlled by
-  the number of hyperplanes/tables.
+- ``lsh_topk``: multi-table random-hyperplane (sign) LSH — the scale
+  path. Bucket = sign bits of h fixed hyperplanes; search cost drops from
+  O(corpus) to O(bucket) per query with recall controlled by the number
+  of hyperplanes/tables.
+- ``ivf_topk``: k-means inverted-file ANN (below).
 
 Hyperplane coefficients are md5-derived +-1 (deterministic, engine
 portable) — cosine-of-signs LSH needs only direction-uniform hyperplanes,
 and Rademacher +-1 vectors are direction-uniform enough in 64-D while
 staying exactly representable in SQL for the DuckDB oracle.
 
-All float math is float64 with sequential left-to-right sums so the
-DuckDB oracle (list_cosine_similarity / list_dot_product on DOUBLE[])
-agrees bitwise.
+All vector math is float64 numpy inside Arrow batches (pandas_udf): one
+matmul per batch for the bucket signs, one row-wise einsum per batch for
+the cosine (``_row_cosine``, the engine's single cosine definition). The
+DuckDB oracle sums left to right instead; on the fixtures every
+hyperplane dot is equal and every cosine agrees after round(., 6).
 """
 
 from __future__ import annotations
@@ -41,54 +44,27 @@ def hyperplane_coeffs(n_planes: int, dim: int, table: int = 0) -> list[list[floa
     return out
 
 
-def _dot(vec_col, coeffs: list[float]):
-    arr = F.array(*[F.lit(c) for c in coeffs])
-    return F.aggregate(
-        F.zip_with(vec_col, arr, lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def _cosine(va, vb):
-    dot = F.aggregate(
-        F.zip_with(va, vb, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    n = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return dot / (n(va) * n(vb))
-
-
 def _cosine_blas_udf():
     """Arrow-vectorized (pandas_udf) exact cosine: one numpy einsum per
-    batch instead of one interpreted Catalyst lambda per array element —
-    ~an order of magnitude faster on the candidate-rescore hot path. Same
-    float64 math as _cosine up to summation order (values agree to ~1 ulp;
-    both variants round to 6 decimals downstream)."""
+    batch (``_row_cosine``).
+
+    NULL, never NaN, where there is no cosine: a null vector, or a
+    zero-norm one (nq*nc == 0). NaN sorts ABOVE every real cosine under
+    F.desc and would rank those candidates first; NULL sorts last. DuckDB's
+    list_cosine_similarity returns -1.0 for a zero vector instead; the
+    fixtures contain none."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def cos(qa: pd.Series, cb: pd.Series) -> pd.Series:
-        if not len(qa):
-            return pd.Series(dtype="float64")
-        # null vectors -> null cosine (the Catalyst path's behavior);
-        # np.stack over a batch containing None would raise instead.
-        # The not-ok rows must be None (NULL), NOT NaN: NaN sorts ABOVE
-        # every real cosine under F.desc, so a NaN would rank null-vector
-        # candidates first, while SQL NULL sorts last like the oracle.
         ok = qa.notna().to_numpy() & cb.notna().to_numpy()
         out = np.full(len(qa), None, dtype=object)
         if ok.any():
             Q = np.stack([np.asarray(v, dtype=np.float64) for v in qa[ok]])
             C = np.stack([np.asarray(v, dtype=np.float64) for v in cb[ok]])
-            out[ok] = _row_cosine(Q, C)
+            c = _row_cosine(Q, C)
+            has = ~np.isnan(c)
+            out[np.flatnonzero(ok)[has]] = c[has]
         return pd.Series(out, dtype=object)
 
     return cos
@@ -98,11 +74,26 @@ def _row_cosine(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     """Row-wise cosine of two equal-shape matrices. ONE definition shared
     by the Spark-side pandas_udf paths AND the numpy oracle generators
     (the IVF VALUES-literal oracle) — per-row einsum summation order is
-    fixed, so sharing the function makes Spark and oracle bit-identical."""
+    fixed, so sharing the function makes Spark and oracle bit-identical.
+    A row with nq*nc == 0 gets NaN, without a divide-by-zero warning."""
     dot = np.einsum("ij,ij->i", Q, C)
     nq = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     nc = np.sqrt(np.einsum("ij,ij->i", C, C))
-    return dot / (nq * nc)
+    den = nq * nc
+    return np.divide(dot, den, out=np.full_like(dot, np.nan), where=den != 0)
+
+
+def _rank_topk(scored: DataFrame, k: int, query_id_col: str) -> DataFrame:
+    """Top-k per query by (cosine desc, neighbor id asc); NULL cosines
+    rank last. Output: (query_id, rank, neighbor_id, cosine)."""
+    w = Window.partitionBy(query_id_col).orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(query_id_col, "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
+    )
 
 
 def cosine_topk(
@@ -115,6 +106,7 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine per query vector. Deterministic tie-break:
     (cosine desc, neighbor id asc). Self-matches (same id) excluded.
+    A null or zero-norm vector has a NULL cosine and ranks last.
 
     Output: (query_id, rank, neighbor_id, cosine)."""
     q = queries.select(
@@ -125,80 +117,31 @@ def cosine_topk(
     c = widen_small_scan(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")
     )
+    cos = _cosine_blas_udf()
     scored = (
         q.crossJoin(c)
         .where(F.col(query_id_col) != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine(F.col("_qv"), F.col("_cv")))
+        .withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    return _rank_topk(scored, k, query_id_col)
 
 
-def hyperplane_buckets(
-    df: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    vec_col: str = "embedding",
-    table: int = 0,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Append an LSH bucket id for one hash table: bit p set iff
-    dot(vec, plane_p) > 0."""
-    coeffs = hyperplane_coeffs(n_planes, dim, table)
-    bucket = None
-    for p, row in enumerate(coeffs):
-        bit = F.when(_dot(F.col(vec_col), row) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return df.withColumn(out_col, bucket.cast("long"))
-
-
-def _table_buckets(df: DataFrame, n_tables, n_planes, dim, vec_col,
-                   method: str = "sql"):
-    """(table_idx, bucket) exploded rows — one row per (input row, table).
-
-    method="sql": Catalyst higher-order-function dots — sequential sums,
-    bitwise-identical to the DuckDB oracle's list_dot_product.
-    method="blas": one numpy matmul per Arrow batch against the (dim x
-    tables*planes) coefficient matrix — the production hot path. Same
-    sign decisions except a dot within ~1 ulp of exactly 0 (probability
-    ~1e-13 per dot for random embeddings).
+def _table_buckets(df: DataFrame, n_tables, n_planes, dim, vec_col):
+    """(tbl, bkt) exploded rows — one row per (input row, table). Bit p
+    of a table's bucket is set iff dot(vec, plane_p) > 0, all tables from
+    ONE numpy matmul per Arrow batch against the (dim x tables*planes)
+    coefficient matrix.
 
     Rows with a null vector are excluded from every table (they have no
-    bucket; the previous sql behavior silently put them in bucket 0).
+    bucket). A vector whose length is not `dim` fails the task with a
+    ValueError naming both — never a silent bucket that would pile every
+    such row into one all-pairs task.
     """
+    from pyspark.sql.functions import pandas_udf
+
     from ..session import widen_small_scan
 
     df = widen_small_scan(df).where(F.col(vec_col).isNotNull())
-    if method == "blas":
-        return _table_buckets_blas(df, n_tables, n_planes, dim, vec_col)
-    out = df
-    for t in range(n_tables):
-        out = hyperplane_buckets(out, n_planes, dim, vec_col, table=t, out_col=f"_b{t}")
-    pairs = F.array(
-        *[
-            F.struct(F.lit(t).alias("tbl"), F.col(f"_b{t}").alias("bkt"))
-            for t in range(n_tables)
-        ]
-    )
-    return (
-        out.withColumn("_tb", F.explode(pairs))
-        .select(
-            *[c for c in df.columns],
-            F.col("_tb.tbl").alias("tbl"),
-            F.col("_tb.bkt").alias("bkt"),
-        )
-    )
-
-
-def _table_buckets_blas(df: DataFrame, n_tables, n_planes, dim, vec_col):
-    from pyspark.sql.functions import pandas_udf
-
     W = (
         np.array(
             [hyperplane_coeffs(n_planes, dim, t) for t in range(n_tables)],
@@ -213,8 +156,14 @@ def _table_buckets_blas(df: DataFrame, n_tables, n_planes, dim, vec_col):
     def buckets(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series(dtype=object)
-        M = np.stack([np.asarray(x, dtype=np.float64) for x in v])
-        bits = (M @ W > 0).reshape(len(M), n_tables, n_planes)
+        rows = [np.asarray(x, dtype=np.float64) for x in v]
+        for r in rows:
+            if len(r) != dim:
+                raise ValueError(
+                    f"LSH bucketing: vector of length {len(r)} does not "
+                    f"match dim={dim}"
+                )
+        bits = (np.stack(rows) @ W > 0).reshape(len(rows), n_tables, n_planes)
         bkt = (bits * weights).sum(axis=2)  # (batch, tables)
         return pd.Series(list(bkt))
 
@@ -237,39 +186,24 @@ def lsh_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     query_id_col: str = "query_id",
-    rescore: str = "sql",
-    bucketing: str | None = None,
 ) -> DataFrame:
     """Approximate top-k with MULTI-TABLE hyperplane LSH: candidates are
     the union over `n_tables` independent tables of same-bucket matches
     (an equi join on (table, bucket) per side), deduplicated, then scored
-    with the EXACT cosine and ranked. Recall is tuned by (n_planes,
-    n_tables): fewer planes -> bigger buckets; more tables -> more chances
-    to collide. Cost per query is the union of its bucket sizes, never the
-    corpus.
+    with the EXACT cosine (``_cosine_blas_udf``) and ranked. Recall is
+    tuned by (n_planes, n_tables): fewer planes -> bigger buckets; more
+    tables -> more chances to collide. Cost per query is the union of its
+    bucket sizes, never the corpus.
 
-    rescore="sql" (default) scores candidates with the Catalyst
-    higher-order-function cosine — sequential sums, bitwise-identical to
-    the DuckDB oracle. rescore="blas" scores with an Arrow-vectorized
-    numpy einsum (pandas_udf) — same math up to summation order, the
-    production hot path (measured speedup in BENCH).
-
-    bucketing independently selects the candidate-generation method
-    (defaults to follow `rescore`, which is where the measured 5.6x
-    mostly comes from). NOTE: blas bucketing can flip a hyperplane sign
-    when a dot sits within ~1 ulp of exactly 0 (~1e-13 probability per
-    dot), changing the candidate set vs the sql oracle; pass
-    bucketing="sql", rescore="blas" for oracle-identical candidates with
-    a fast rescore.
+    Every vector must have length `dim` (ValueError otherwise); null
+    vectors are never candidates, and a zero-norm candidate ranks last
+    with a NULL cosine.
 
     Output: (query_id, rank, neighbor_id, cosine)."""
-    assert rescore in ("sql", "blas")
-    bucketing = bucketing or rescore
-    assert bucketing in ("sql", "blas")
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("_qv"))
-    cb = _table_buckets(c, n_tables, n_planes, dim, "_cv", method=bucketing)
-    qb = _table_buckets(q, n_tables, n_planes, dim, "_qv", method=bucketing)
+    cb = _table_buckets(c, n_tables, n_planes, dim, "_cv")
+    qb = _table_buckets(q, n_tables, n_planes, dim, "_qv")
     # Dedup on IDS ONLY — running distinct over rows that carry the
     # vectors would shuffle every embedding n_tables times; the vectors
     # are joined back once per unique candidate pair instead.
@@ -281,19 +215,9 @@ def lsh_topk(
         .distinct()
     )
     cand = cand_ids.join(q, query_id_col).join(c, "neighbor_id")
-    if rescore == "blas":
-        cos = _cosine_blas_udf()
-        scored = cand.withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
-    else:
-        scored = cand.withColumn("cosine", _cosine(F.col("_qv"), F.col("_cv")))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, "rank", "neighbor_id", F.round("cosine", 6).alias("cosine"))
-    )
+    cos = _cosine_blas_udf()
+    scored = cand.withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
+    return _rank_topk(scored, k, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -479,14 +403,4 @@ def ivf_topk(
         .where(F.col(query_id_col) != F.col("neighbor_id"))
         .withColumn("cosine", cos(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-        )
-    )
+    return _rank_topk(scored, k, query_id_col)

@@ -265,22 +265,9 @@ def _lsh_sql() -> str:
 _register("q_knn_lsh", q_knn_lsh, _lsh_sql())
 
 
-def q_knn_lsh_blas(spark, sf_dir):
-    """Same LSH search on the all-BLAS path: numpy-matmul BUCKETING and
-    rescore (where the measured 5.6x comes from). Bucket sign decisions
-    agree with the Catalyst/SQL oracle except a hyperplane dot within
-    ~1 ulp of exactly 0 (~1e-13/dot), and rescored cosines agree after
-    rounding — hash-exact vs the same SQL oracle at this SF (verified);
-    `bucketing="sql", rescore="blas"` is the strictly-oracle-identical
-    variant."""
-    e = _t(spark, sf_dir, "embeddings")
-    return S.lsh_topk(
-        e, _query_vectors(spark, sf_dir), k=5,
-        n_planes=_LSH_PLANES, n_tables=_LSH_TABLES, dim=64, rescore="blas",
-    ).orderBy("query_id", "rank")
-
-
-_register("q_knn_lsh_blas", q_knn_lsh_blas, _lsh_sql())
+# A second registered name for the same search and oracle: callers pin
+# both names.
+_register("q_knn_lsh_blas", q_knn_lsh, _lsh_sql())
 
 
 def q_dedup_embedding_bucketed(spark, sf_dir):

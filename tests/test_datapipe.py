@@ -113,15 +113,27 @@ def test_lsh_same_vector_same_bucket_and_subset_of_brute(spark):
         [(i, v.tolist()) for i, v in zip(ids, vecs)],
         "vec_id long, embedding array<float>",
     )
-    b = S.hyperplane_buckets(df, n_planes=6, dim=16).toPandas()
-    # a vector joined with itself lands in its own bucket (determinism)
-    b2 = S.hyperplane_buckets(df, n_planes=6, dim=16).toPandas()
-    pd.testing.assert_frame_equal(
-        b.sort_values("vec_id").reset_index(drop=True)[["vec_id", "bucket"]],
-        b2.sort_values("vec_id").reset_index(drop=True)[["vec_id", "bucket"]],
-    )
+
+    def buckets():
+        out = S._table_buckets(df, 1, 6, 16, "embedding").toPandas()
+        assert (out["tbl"] == 0).all() and len(out) == len(ids)
+        return out.sort_values("vec_id").reset_index(drop=True)
+
+    b = buckets()
+    # the same vectors land in the same buckets on every run (determinism)
+    pd.testing.assert_frame_equal(b[["vec_id", "bkt"]], buckets()[["vec_id", "bkt"]])
+    # bit p is set iff the left-to-right dot with plane p is positive
+    planes = S.hyperplane_coeffs(6, 16, 0)
+    for v, got in zip(b["embedding"], b["bkt"]):
+        want = 0
+        for p, row in enumerate(planes):
+            dot = 0.0
+            for x, c in zip(v, row):
+                dot += float(x) * c
+            want |= (1 << p) if dot > 0 else 0
+        assert got == want
     # most same-cluster members share a bucket (tight clusters, 6 planes)
-    b = b.set_index("vec_id")["bucket"]
+    b = b.set_index("vec_id")["bkt"]
     same = sum(
         b.loc[c * 8] == b.loc[c * 8 + j] for c in range(5) for j in range(1, 8)
     )
@@ -231,17 +243,29 @@ def test_embedding_neardup_bucketed_subset_and_autofallback(spark):
     assert key(auto.toPandas()) == key(bucketed)
 
 
-def test_lsh_topk_blas_matches_sql_rescore(spark):
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    q = e.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
+@pytest.mark.parametrize(
+    "name",
+    ["q_knn_bruteforce", "q_knn_lsh", "q_knn_lsh_blas", "q_dedup_embedding_bucketed"],
+)
+def test_similarity_query_matches_oracle_exactly(spark, name):
+    """Tier-1 oracle guard for the similarity family: the registered query
+    against its registered DuckDB oracle at sf0.01, compared the way
+    scripts/check_oracle.py does, with no allclose fallback accepted."""
+    import duckdb
+
+    import __spark_entry__ as entry
+    from image_feature_extraction_spark.plans.queries import ORACLE_SQL
+    from scripts.check_oracle import compare
+
+    sf_dir = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{sf_dir}/embeddings.parquet')"
     )
-    a = S.lsh_topk(e, q, k=5, n_planes=6, n_tables=4, dim=64).toPandas()
-    b = S.lsh_topk(e, q, k=5, n_planes=6, n_tables=4, dim=64, rescore="blas").toPandas()
-    pd.testing.assert_frame_equal(
-        a.sort_values(["query_id", "rank"]).reset_index(drop=True),
-        b.sort_values(["query_id", "rank"]).reset_index(drop=True),
-    )
+    got = entry.queries()[name](spark, sf_dir).toPandas()
+    want = con.sql(ORACLE_SQL[name]).df()
+    assert compare(name, got, want) == "OK (exact)"
 
 
 def test_minhash_capped_drops_hot_shingles(spark):

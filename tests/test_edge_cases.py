@@ -305,11 +305,47 @@ def test_lsh_null_vectors_and_blas_guard(spark):
     q = e.where(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    for kw in ({}, {"rescore": "blas"}, {"rescore": "blas", "bucketing": "sql"}):
-        out = S2.lsh_topk(e, q, k=3, n_planes=2, n_tables=2, dim=2, **kw).toPandas()
-        # the null-vector row is excluded, never crashes the job
-        assert 3 not in set(out["neighbor_id"])
-        assert len(out) >= 1
+    out = S2.lsh_topk(e, q, k=3, n_planes=2, n_tables=2, dim=2).toPandas()
+    # the null-vector row is excluded, never crashes the job
+    assert 3 not in set(out["neighbor_id"])
+    assert len(out) >= 1
+
+
+def test_zero_norm_vector_ranks_last_with_null_cosine(spark):
+    """A zero vector has no direction: both search paths finish (no ANSI
+    divide-by-zero, no numpy warning) and rank it last with a NULL cosine."""
+    import warnings
+
+    from image_feature_extraction_spark.operators import similarity as S2
+
+    e = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.9, 0.1]), (4, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    q = e.where(F.col("vec_id") == 1).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    # table 0's single plane is (-1, -1): every vector here, the zero one
+    # included, lands in bucket 0, so all three are LSH candidates
+    lsh = S2.lsh_topk(e, q, k=3, n_planes=1, n_tables=1, dim=2)
+    for out in (S2.cosine_topk(e, q, k=3), lsh):
+        got = out.toPandas().sort_values("rank")
+        assert got["neighbor_id"].tolist() == [3, 4, 2]
+        assert got["cosine"].isna().tolist() == [False, False, True]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert np.isnan(S2._row_cosine(np.zeros((1, 2)), np.ones((1, 2)))).all()
+
+
+def test_lsh_wrong_dim_raises_clear_error(spark):
+    from image_feature_extraction_spark.operators import similarity as S2
+
+    e = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.9, 0.1])], "vec_id long, embedding array<double>"
+    )
+    q = e.select(F.col("vec_id").alias("query_id"), "embedding")
+    with pytest.raises(Exception, match=r"ValueError: .*length 2 does not match dim=3"):
+        S2.lsh_topk(e, q, k=1, n_planes=2, n_tables=2, dim=3).collect()
 
 
 def test_equalized_edges_cap_is_uniform_not_value_blocked(spark):
@@ -671,8 +707,8 @@ def test_widen_small_scan_many_tiny_files(spark, tmp_path):
 
 def test_blas_cosine_null_vector_is_null_not_nan(spark):
     """ADVICE r2: the BLAS cosine must return NULL (sorts last under
-    F.desc) for null vectors, not NaN (sorts first) — parity with the
-    Catalyst path even when called outside the bucketed flow."""
+    F.desc) for null vectors, not NaN (sorts first), even when called
+    outside the bucketed flow."""
     from image_feature_extraction_spark.operators.similarity import _cosine_blas_udf
 
     df = spark.createDataFrame(

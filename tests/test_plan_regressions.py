@@ -14,6 +14,10 @@ over one spec; 2 for genuinely nested dependencies (sessionize's
 cumulative sum consumes lag's output — two passes over ONE exchange+sort
 is the floor; mode_label's rank consumes the count aggregate). Exchange
 counts are pinned exactly as audited (PLANS.md documents each shape).
+
+The similarity operators are pinned too (Window, Exchange and Arrow
+counts, no row-at-a-time Python), so their single numpy path keeps its
+shape.
 """
 
 from __future__ import annotations
@@ -24,9 +28,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from image_feature_extraction_spark.operators import asof as AS
+from image_feature_extraction_spark.operators import dedup as D
 from image_feature_extraction_spark.operators import encode as EN
 from image_feature_extraction_spark.operators import labels as LB
 from image_feature_extraction_spark.operators import sequences as SQ
+from image_feature_extraction_spark.operators import similarity as S
 from image_feature_extraction_spark.operators import windows as W
 from image_feature_extraction_spark.operators.curation import (
     temporal_holdout as _temporal_holdout,
@@ -212,3 +218,53 @@ def test_flagship_is_one_python_stage(spark):
 
     c = plan_counts(flagship_pipeline(spark, 200))
     assert (c["arrow"], c["exch"]) == (1, 0), c
+
+
+def _embeddings(spark):
+    rows = [(i, [float((i * 7 + d) % 5) - 2.0 for d in range(8)]) for i in range(40)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def _query_vectors(spark):
+    return _embeddings(spark).where(F.col("vec_id") % 5 == 0).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+
+
+# name -> (builder(spark), expected Window, Exchange, Arrow counts, why).
+# Every similarity path runs its vector math in Arrow batches: a
+# row-at-a-time Python node (pyrow) is never allowed.
+SIMILARITY_CASES = {
+    "lsh_topk": (
+        lambda s: S.lsh_topk(
+            _embeddings(s), _query_vectors(s), k=3, n_planes=2, n_tables=2, dim=8
+        ),
+        1, 8, 5,
+        "bucket UDF per side (each evaluated twice: the posexplode's "
+        "inferred non-empty filter is pushed below it) + one cosine UDF",
+    ),
+    "cosine_topk": (
+        lambda s: S.cosine_topk(_embeddings(s), _query_vectors(s), k=3),
+        1, 1, 1, "cartesian product + one cosine UDF + the top-k window",
+    ),
+    "embedding_neardup_pairs_bucketed": (
+        lambda s: D.embedding_neardup_pairs_bucketed(
+            _embeddings(s), threshold=0.5, n_planes=2, n_tables=2, dim=8
+        ),
+        0, 2, 3,
+        "bucket UDF (twice, as in lsh_topk) + per-bucket applyInPandas; "
+        "(tbl, bkt) exchange + pair distinct",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SIMILARITY_CASES))
+def test_similarity_plan_pinned(spark, name):
+    build, want_win, want_ex, want_arrow, why = SIMILARITY_CASES[name]
+    c = plan_counts(build(spark))
+    assert c["pyrow"] == 0, f"{name}: row-at-a-time Python in the plan"
+    got = (c["win"], c["exch"], c["arrow"])
+    assert got == (want_win, want_ex, want_arrow), (
+        f"{name}: (Window, Exchange, Arrow) = {got}, audited shape is "
+        f"{(want_win, want_ex, want_arrow)} ({why})"
+    )
