@@ -52,6 +52,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import map_in_arrow
+
 
 def _as_list(x):
     return [x] if isinstance(x, str) else list(x)
@@ -647,14 +649,15 @@ def asof_join_broadcast(left: DataFrame, right: DataFrame, **opts) -> DataFrame:
     a broadcast dict {entity: (sorted ts array, payload arrays)} with one
     vectorized np.searchsorted per (batch, entity). This is the strategy for
     the dominant production shape (10^12-row fact vs a per-entity-per-hour
-    stats/dimension table): zero exchange, one narrow mapInArrow stage.
-    Options (on, by, right_cols, direction, tolerance, suffix,
-    include_right_on, max_right_rows) are those of asof_broadcast_stage.
+    stats/dimension table): zero exchange, one narrow mapInArrow stage
+    (chained, see session.map_in_arrow). Options (on, by, right_cols,
+    direction, tolerance, suffix, include_right_on, max_right_rows) are
+    those of asof_broadcast_stage.
 
     Mirrors the reference's grid-alignment resample where the TARGET grid is
     dense and the SOURCE samples are sparse (tools/Resample.cxx:83-99).
     """
-    return left.mapInArrow(*asof_broadcast_stage(left.schema, right, **opts))
+    return map_in_arrow(left, *asof_broadcast_stage(left.schema, right, **opts))
 
 
 def asof_broadcast_stage(

@@ -5,17 +5,18 @@ Spark-first design notes
 The per-sample pipeline (normalized Gaussian convolution -> gradient
 magnitude + Hessian -> eigenvalue features -> masked per-feature histograms,
 SURVEY.md §3.1/§3.3) is row-local: each document depends only on its own
-tokens. The idiomatic Spark shape is therefore ``mapInPandas`` — a narrow
-(zero-shuffle) Arrow-batched transform. This beats the reference's design in
-two ways (SURVEY.md §4 X5/X7): the whole numeric chain is fused into one
-numpy pass per batch (the reference materializes ~15 intermediate volumes),
-and all scales are computed in a single pass over each doc.
+tokens. The idiomatic Spark shape is therefore ``mapInArrow`` — a narrow
+(zero-shuffle) Arrow-batched transform, chained into the stage of the
+engine Arrow operator it is applied to. This beats the reference's design
+in two ways (SURVEY.md §4 X5/X7): the whole numeric chain is fused into
+one numpy pass per batch (the reference materializes ~15 intermediate
+volumes), and all scales are computed in a single pass over each doc.
 
 ``applyInPandas`` grouped variants exist below for the genuinely grouped
 computations (per-source corpus histograms), where a shuffle is semantically
 required; partial aggregation keeps it one shuffle of small maps.
 
-At 100 TB: mapInPandas preserves input partitioning (parquet split sizing
+At 100 TB: the stage keeps its source's partitioning (parquet split sizing
 via spark.sql.files.maxPartitionBytes governs task granularity); no skew
 concern because there is no key. Arrow batch size is bounded by
 spark.sql.execution.arrow.maxRecordsPerBatch (session.py sets 512) so a
@@ -32,24 +33,26 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from ..functions import kernels as K
+from ..session import map_in_arrow, widen_small_scan
 
 
 def extract_features(
     df: DataFrame, num_partitions: int | None = None, **opts
 ) -> DataFrame:
-    """Append a per-doc feature vector column (one mapInArrow stage).
-    Options (scales, edges, tokens_col, output_col) are those of
-    features_stage.
+    """Append a per-doc feature vector column: one mapInArrow stage,
+    chained into an engine Arrow operator's stage when ``df`` is its direct
+    output (session.map_in_arrow). Options (scales, edges, tokens_col,
+    output_col) are those of features_stage.
 
-    num_partitions: repartition (round-robin) before the kernel stage. Set
-    this when the upstream plan ends in a shuffle: AQE coalesces post-
-    shuffle partitions by BYTES, which starves a compute-bound Python stage
-    (bytes are a bad proxy for kernel cost — a 24 MB input can carry 160
-    core-seconds of numpy). On a cluster, size to 2-3x total cores.
+    The stage's source (``df`` or the chain's source) is first widened by
+    widen_small_scan or, with num_partitions, repartitioned (round-robin)
+    to that count. Set it when the source ends in a shuffle: AQE coalesces
+    post-shuffle partitions by BYTES, which starves a compute-bound Python
+    stage (a 24 MB input can carry 160 core-seconds of numpy). On a
+    cluster, size to 2-3x total cores.
     """
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return df.mapInArrow(*features_stage(df.schema, **opts))
+    spread = (lambda s: s.repartition(num_partitions)) if num_partitions else widen_small_scan
+    return map_in_arrow(df, *features_stage(df.schema, **opts), prepare=spread)
 
 
 def features_stage(

@@ -171,7 +171,8 @@ def _table_buckets(df: DataFrame, n_tables, n_planes, dim, vec_col):
         df.withColumn("_bkts", buckets(F.col(vec_col)))
         .select(
             *[c for c in df.columns],
-            F.posexplode("_bkts").alias("tbl", "bkt"),
+            # _outer: no inferred size>0 filter re-evaluating the UDF
+            F.posexplode_outer("_bkts").alias("tbl", "bkt"),
         )
     )
 

@@ -1,11 +1,10 @@
 """The flagship job: broadcast as-of join + multi-scale feature
 extraction over the token table — BASELINE.json's headline workload.
 
-``flagship_pipeline`` runs synthesis, the point-in-time stats match, and
-the feature kernel inside ONE mapInArrow stage, built from the same batch
-functions as ``synth.token_table``, ``asof_join_broadcast`` and
-``extract_features``. Composing those three operators instead costs two
-extra JVM<->Python Arrow crossings (measured ~19% slower on local[4]);
+``flagship_pipeline`` is ``synth.token_table`` -> ``asof_join_broadcast``
+-> ``extract_features``, chained into ONE mapInArrow stage
+(session.map_in_arrow): three separate stages cost two extra JVM<->Python
+Arrow crossings (measured ~19% slower on local[4]).
 tests/test_asof_windows.py checks the two are equal row for row.
 """
 
@@ -38,24 +37,12 @@ def flagship_pipeline(spark, n_docs: int, stats=None):
     BASELINE.json headline. Per-source rolling stats (one row per source
     time-bucket) are as-of joined onto each doc (point-in-time, leakage
     free), then the full 8-feature x 2-scale histogram vector is extracted
-    per doc.
-
-    One mapInArrow stage over spark.range chains the batch functions of
-    the public operators: synth._gen_token_batches -> asof_broadcast_stage
-    -> features_stage. Its output equals token_table -> asof_join_broadcast
-    -> extract_features, which runs three Python stages."""
+    per doc, all in one mapInArrow stage over spark.range."""
     from image_feature_extraction_spark import synth
-    from image_feature_extraction_spark.operators.asof import asof_broadcast_stage
-    from image_feature_extraction_spark.operators.features import features_stage
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
+    from image_feature_extraction_spark.operators.features import extract_features
 
     if stats is None:
         stats = flagship_stats(spark, n_docs)
-    docs_schema = synth.token_table(spark, n_docs).schema
-    asof_fn, asof_schema = asof_broadcast_stage(docs_schema, stats, on="ts", by="source")
-    features_fn, out_schema = features_stage(asof_schema, scales=SCALES)
-
-    def fn(batches):
-        return features_fn(asof_fn(synth._gen_token_batches(batches)))
-
-    rng_df = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
-    return rng_df.mapInArrow(fn, out_schema)
+    joined = asof_join_broadcast(synth.token_table(spark, n_docs), stats, on="ts", by="source")
+    return extract_features(joined, scales=SCALES)

@@ -1233,10 +1233,10 @@ def q_flagship_parity(spark, sf_dir):
     """P7 invariant promoted to a driver-visible CORRECTNESS row (VERDICT
     r2 #6): the single-stage flagship pipeline (synth + as-of match +
     kernel in ONE mapInArrow pass) must be BIT-IDENTICAL — feature digests
-    AND joined point-in-time stats — to the three public operators
-    composed here (token_table -> asof_join_broadcast -> extract_features).
-    Returns one row of counts; any divergence drops a match count and
-    fails the hash."""
+    AND joined point-in-time stats — to the three public operators run as
+    three stages here (token_table -> asof_join_broadcast ->
+    extract_features, each chain broken by a ``select("*")``). Returns one
+    row of counts; any divergence drops a match count and fails the hash."""
     from .. import synth
     from ..operators.asof import asof_join_broadcast
     from ..operators.features import extract_features
@@ -1244,12 +1244,9 @@ def q_flagship_parity(spark, sf_dir):
     from .queries import FLAGSHIP_DOCS, digest_col
 
     stats = flagship_stats(spark, FLAGSHIP_DOCS)
-    composed = extract_features(
-        asof_join_broadcast(
-            synth.token_table(spark, FLAGSHIP_DOCS), stats, on="ts", by="source"
-        ),
-        scales=SCALES,
-    )
+    docs = synth.token_table(spark, FLAGSHIP_DOCS).select("*")
+    joined = asof_join_broadcast(docs, stats, on="ts", by="source").select("*")
+    composed = extract_features(joined, scales=SCALES)
 
     def digested(out, tag: str):
         return out.select(

@@ -103,12 +103,6 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     spark._ife_pyfiles_added = True
 
 
-def sf_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables as DataFrames."""
-    out = [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names]
-    return out[0] if len(out) == 1 else out
-
-
 def widen_small_scan(df, target: int | None = None):
     """Repartition a SMALL file scan up to the session's default
     parallelism before compute-heavy per-row work.
@@ -116,44 +110,59 @@ def widen_small_scan(df, target: int | None = None):
     A file smaller than one split scans as ONE task, serializing every
     downstream narrow operator (measured 10x on shingling at sf0.1: one
     580 KB parquet file -> 32 tasks, 7.9s -> 0.7s). The exchange moves
-    only the small input. Inputs that already scan wide — the 100 TB
-    case, where an extra exchange would be catastrophic — pass through
-    untouched. The wide/narrow decision asks Spark for the ACTUAL planned
-    scan partition count (openCostInBytes bin-packing makes any
-    driver-side model of it approximate, in both directions): an O(1)
-    check, so a 400k-file production scan pays no per-file work here. An
-    under-parallel scan is then widened only when its total bytes fit
-    inside one split (statted with an early exit at that bound) — a big
-    but under-split input keeps its plan, since repartitioning it would
-    move more data than the widening saves. Unstattable paths (object
-    stores without local access) and non-file sources (synth mapInArrow
-    tables) also pass through untouched."""
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
+    only the small input. An input of at most one split is widened unless
+    Spark plans ``target`` tasks that each read whole files. A planned
+    count alone does not tell: parquet gives each row group to the byte
+    range holding its midpoint, so ranges cut from one file can be empty
+    (13.5 MB in 10 row groups plans 4 splits on 4 cores but scans in 3
+    tasks). The byte count stops at that bound, so a 400k-file
+    production scan keeps its plan after its first files. Unstattable
+    paths (object stores) and non-file sources pass through."""
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    if target <= 1:
+        return df
     try:
         files = df.inputFiles()
     except Exception:
         return df
     if not files:
         return df
-    if df.rdd.getNumPartitions() >= target:
-        return df  # already scans wide — the common big-input case
-    max_split = int(
-        _parse_bytes(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-    )
-    total = 0
+    conf = df.sparkSession.conf
+    max_split = int(_parse_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m")))
+    open_cost = int(_parse_bytes(conf.get("spark.sql.files.openCostInBytes", "4m")))
+    total = biggest = 0
     for p in files:
         try:
-            total += os.path.getsize(
-                p[len("file:"):] if p.startswith("file:") else p
-            )
+            size = os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
         except OSError:
             return df  # can't stat (remote store): keep Spark's plan
+        total, biggest = total + size, max(biggest, size)
         if total > max_split:
             return df  # big input: widening would outweigh the gain
+    # Spark splits no file of at most min(openCostInBytes, maxPartitionBytes)
+    # bytes, so then every planned task reads a whole file and has rows
+    if biggest <= min(open_cost, max_split) and df.rdd.getNumPartitions() >= target:
+        return df
     return df.repartition(target)
+
+
+def map_in_arrow(df, fn, schema, prepare=None):
+    """``df.mapInArrow(fn, schema)`` for the engine's Arrow operators. When
+    ``df`` is itself this function's output, ``fn`` joins its batch
+    functions in ONE stage over its source (mapped by ``prepare``), so rows
+    cross the JVM<->Python boundary once. A derived DataFrame (filter,
+    select, ...) or a cached one (``cache()`` returns self) starts a stage."""
+    source, fns = (df, ()) if df.is_cached else getattr(df, "_arrow_chain", (df, ()))
+    source, fns = (prepare or (lambda s: s))(source), fns + (fn,)
+
+    def chained(batches):
+        for f in fns:
+            batches = f(batches)
+        return batches
+
+    out = source.mapInArrow(chained, schema)
+    out._arrow_chain = (source, fns)
+    return out
 
 
 def _parse_bytes(v) -> float:

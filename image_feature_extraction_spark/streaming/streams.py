@@ -223,26 +223,30 @@ def _cents_half_up(vals):
     boundary (|frac - 0.5| <= 1e-6 + 1e-12*|v*100|, generous vs the
     ~2e-16 relative repr/product gaps) the slow path re-rounds
     ``Decimal(repr(v))`` HALF_UP — CPython's repr is the same
-    shortest-round-trip decimal Java's Double.toString produces.
-    2-decimal labels (the ``encode.cents_sql`` contract) never hit the
-    slow path. Callers mask non-finite values first (floor(NaN) and
-    floor(±Inf) cast to INT64_MIN) and treat them as NULL.
+    shortest-round-trip decimal Java's Double.toString produces. The band
+    is capped at 0.499 so whole-cent products stay fast at any size; from
+    2**50 cents on, where the gap can pass the 0.001 margin that leaves,
+    every value takes the slow path. 2-decimal labels (the
+    ``encode.cents_sql`` contract) below ~5e10 never hit the slow path.
+    Callers mask non-finite values first (floor(NaN) casts to INT64_MIN,
+    ±Inf fails the slow path) and treat them as NULL.
     """
     import numpy as np
 
     p = np.abs(vals) * 100.0
-    fast = np.floor(p + 0.5)
-    near = np.abs(p - np.floor(p) - 0.5) <= (1e-6 + 1e-12 * p)
+    cents = np.floor(p + 0.5).astype(np.int64)
+    band = np.minimum(1e-6 + 1e-12 * p, 0.499)
+    near = (np.abs(p - np.floor(p) - 0.5) <= band) | (p >= 2.0**50)
     if near.any():
         from decimal import ROUND_HALF_UP, Decimal
 
         for i in np.nonzero(near)[0]:
-            fast[i] = float(
+            cents[i] = int(
                 (Decimal(repr(abs(float(vals[i])))) * 100).to_integral_value(
                     rounding=ROUND_HALF_UP
                 )
             )
-    return (np.sign(vals) * fast).astype(np.int64)
+    return np.sign(vals).astype(np.int64) * cents
 
 
 ZSCORE_STATE_SCHEMA = "n long, s_cents long, ss_cents4 long"

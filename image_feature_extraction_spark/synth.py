@@ -21,6 +21,8 @@ import hashlib
 import numpy as np
 import pandas as pd
 
+from .session import map_in_arrow
+
 VOCAB = 50257
 SOURCES = tuple(f"src{i}" for i in range(8))
 # Zipf-ish cumulative weights over the 8 sources (percent).
@@ -117,7 +119,7 @@ def token_table(spark, n_docs: int, partitions: int | None = None):
     token arrays.
     """
     rng_df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
-    return rng_df.mapInArrow(_gen_token_batches, TOKEN_TABLE_SCHEMA)
+    return map_in_arrow(rng_df, _gen_token_batches, TOKEN_TABLE_SCHEMA)
 
 
 def token_table_for_ids(spark, ids, partitions: int | None = None):
@@ -126,22 +128,16 @@ def token_table_for_ids(spark, ids, partitions: int | None = None):
     unit's docs): generation cost is len(ids), not the whole corpus —
     synthesizing everything and filtering afterward pays the token
     generation for every discarded doc."""
-    import pandas as pd  # noqa: F401  (createDataFrame path)
-
     n_part = partitions or spark.sparkContext.defaultParallelism
     ids_df = spark.createDataFrame(
         [(int(i),) for i in ids], "id long"
     ).repartition(max(1, min(n_part, len(ids) or 1)))
-    return ids_df.mapInArrow(_gen_token_batches, TOKEN_TABLE_SCHEMA)
+    return map_in_arrow(ids_df, _gen_token_batches, TOKEN_TABLE_SCHEMA)
 
 
 def doc_ids_of_source(n_docs: int, source: str) -> list[int]:
     """Doc indices belonging to one source unit, computed token-free."""
     return [i for i in range(n_docs) if doc_meta(i)[2] == source]
-
-
-def token_table_pandas_from_ids(ids: np.ndarray) -> pd.DataFrame:
-    return pd.DataFrame([doc_row(int(i)) for i in ids])
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,18 @@ import sys
 import time
 
 
+def unit_frame(spark, ids, stats, scales):
+    """One checkpoint unit: its docs' token table -> as-of stats ->
+    features, chained into one mapInArrow stage."""
+    from image_feature_extraction_spark import synth
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
+    from image_feature_extraction_spark.operators.features import extract_features
+
+    docs = synth.token_table_for_ids(spark, ids)
+    joined = asof_join_broadcast(docs, stats, on="ts", by="source")
+    return extract_features(joined, scales=scales)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=48_000)
@@ -45,8 +57,6 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
 
     from image_feature_extraction_spark import synth
-    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
-    from image_feature_extraction_spark.operators.features import extract_features
     from image_feature_extraction_spark.plans import checkpoint as C
     from image_feature_extraction_spark.plans.flagship import flagship_stats
 
@@ -58,9 +68,7 @@ def main() -> None:
     unit_ids = {u: synth.doc_ids_of_source(args.docs, u) for u in synth.SOURCES}
 
     def unit_job(spark_, unit):
-        docs = synth.token_table_for_ids(spark_, unit_ids[unit])
-        joined = asof_join_broadcast(docs, stats, on="ts", by="source")
-        return extract_features(joined, scales=scales)
+        return unit_frame(spark_, unit_ids[unit], stats, scales)
 
     t0 = time.time()
     result = C.run_checkpointed(spark, args.out, list(synth.SOURCES), unit_job)

@@ -13,3 +13,22 @@ def spark():
     spark = get_spark(app_name="ife-tests", master="local[4]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def token_parquet(tmp_path_factory):
+    """60 synth docs as ONE parquet file of 3 row groups (~200 KB): far
+    below one split, and with openCostInBytes lowered to 1k the planner
+    cuts it into 4 byte ranges, one of which holds no row-group midpoint
+    (an empty task)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from image_feature_extraction_spark import synth
+
+    path = str(tmp_path_factory.mktemp("tokens") / "tokens.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(synth.token_table_pandas(60), preserve_index=False),
+        path, row_group_size=20,
+    )
+    return path

@@ -452,11 +452,13 @@ def test_asof_bucketed_extreme_skew(spark):
 
 def test_flagship_fused_equals_unfused(spark):
     """The single-stage flagship must equal the three public operators
-    composed as three stages, row for row: token arrays, as-of matches
-    and bit-identical features."""
+    run as three stages, row for row: token arrays, as-of matches and
+    bit-identical features. A ``select("*")`` between the operators
+    breaks their chain, so the reference really is staged."""
     from image_feature_extraction_spark import synth
     from image_feature_extraction_spark.operators.asof import asof_join_broadcast
     from image_feature_extraction_spark.operators.features import extract_features
+    from image_feature_extraction_spark.plans.audit import plan_counts
     from image_feature_extraction_spark.plans.flagship import (
         SCALES,
         flagship_pipeline,
@@ -465,10 +467,10 @@ def test_flagship_fused_equals_unfused(spark):
 
     n = 300
     stats = flagship_stats(spark, n)
-    composed = extract_features(
-        asof_join_broadcast(synth.token_table(spark, n), stats, on="ts", by="source"),
-        scales=SCALES,
-    )
+    docs = synth.token_table(spark, n).select("*")
+    joined = asof_join_broadcast(docs, stats, on="ts", by="source").select("*")
+    composed = extract_features(joined, scales=SCALES)
+    assert plan_counts(composed)["arrow"] == 3
 
     def rows(df):
         return df.toPandas().sort_values("doc_id").reset_index(drop=True)

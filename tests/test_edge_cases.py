@@ -705,6 +705,39 @@ def test_widen_small_scan_many_tiny_files(spark, tmp_path):
     assert sorted(r["x"] for r in out2.collect()) == list(range(64))
 
 
+def test_widen_small_scan_fills_empty_row_group_splits(spark, token_parquet, tmp_path):
+    """A planned split count at target does not mean target busy tasks:
+    parquet gives each row group to the split holding its midpoint, so a
+    small file of 3 row groups cut into 4 byte ranges scans in 3 tasks,
+    and is widened. Small files that Spark never splits, one per planned
+    task, already keep every core busy and pass through."""
+    import pyarrow.parquet as pq
+
+    from image_feature_extraction_spark.session import widen_small_scan
+
+    def busy(df):
+        return df.groupBy(F.spark_partition_id()).count().count()
+
+    spark.conf.set("spark.sql.files.openCostInBytes", "1k")
+    try:
+        df = spark.read.parquet(token_parquet)
+        assert df.rdd.getNumPartitions() == 4
+        assert busy(df) < 4
+        out = widen_small_scan(df, target=4)
+        assert busy(out) == 4
+        assert sorted(r.doc_id for r in out.select("doc_id").collect()) == sorted(
+            r.doc_id for r in df.select("doc_id").collect()
+        )
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    table = pq.read_table(token_parquet)
+    for k in range(4):
+        pq.write_table(table.slice(15 * k, 15), str(tmp_path / f"part-{k}.parquet"))
+    whole = spark.read.parquet(str(tmp_path))
+    assert widen_small_scan(whole, target=4) is whole
+    assert busy(whole) == 4
+
+
 def test_blas_cosine_null_vector_is_null_not_nan(spark):
     """ADVICE r2: the BLAS cosine must return NULL (sorts last under
     F.desc) for null vectors, not NaN (sorts first), even when called

@@ -17,7 +17,8 @@ counts are pinned exactly as audited (PLANS.md documents each shape).
 
 The similarity operators are pinned too (Window, Exchange and Arrow
 counts, no row-at-a-time Python), so their single numpy path keeps its
-shape.
+shape, and so are the chained Arrow stages of the flagship, its
+checkpoint unit and the scan -> as-of -> features pipeline.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ from pyspark.sql import functions as F
 from image_feature_extraction_spark.operators import asof as AS
 from image_feature_extraction_spark.operators import dedup as D
 from image_feature_extraction_spark.operators import encode as EN
+from image_feature_extraction_spark.operators import features as FE
 from image_feature_extraction_spark.operators import labels as LB
 from image_feature_extraction_spark.operators import sequences as SQ
 from image_feature_extraction_spark.operators import similarity as S
@@ -40,7 +42,7 @@ from image_feature_extraction_spark.operators.curation import (
 from image_feature_extraction_spark.operators.quantiles import (
     exact_quantile_values,
 )
-from image_feature_extraction_spark.plans.audit import plan_counts
+from image_feature_extraction_spark.plans.audit import counts_of, plan_counts, plan_of
 
 
 def _counts(out) -> tuple[int, int]:
@@ -210,14 +212,62 @@ def test_windowed_operator_plan_pinned(spark, name):
 
 
 def test_flagship_is_one_python_stage(spark):
-    """The flagship chains synth, the as-of match and the feature kernel
-    inside ONE mapInArrow over Range. Composing the operators as three
-    stages instead adds two JVM<->Python Arrow crossings (measured ~19%
-    slower on local[4]); a broadcast stats index means no shuffle."""
+    """The flagship's public operators (synth, the as-of match, the feature
+    kernel) chain into ONE mapInArrow over Range. Three separate stages
+    instead add two JVM<->Python Arrow crossings (measured ~19% slower on
+    local[4]); a broadcast stats index and a file-less source mean no
+    shuffle."""
     from image_feature_extraction_spark.plans.flagship import flagship_pipeline
 
     c = plan_counts(flagship_pipeline(spark, 200))
     assert (c["arrow"], c["exch"]) == (1, 0), c
+
+
+def test_flagship_unit_is_one_python_stage(spark):
+    """scripts/run_flagship.py's checkpoint unit (token_table_for_ids ->
+    as-of -> features) is one Arrow stage over its id repartition."""
+    import importlib.util
+    import os
+
+    from image_feature_extraction_spark.plans.flagship import flagship_stats
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts", "run_flagship.py",
+    )
+    spec = importlib.util.spec_from_file_location("run_flagship", path)
+    script = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(script)
+    unit = script.unit_frame(spark, [1, 2, 3, 5, 8], flagship_stats(spark, 10), (1.0,))
+    c = plan_counts(unit)
+    assert (c["arrow"], c["exch"]) == (1, 1), c
+
+
+def test_tokens_pipeline_one_stage_over_widened_scan(spark, token_parquet):
+    """scan -> asof_join_broadcast -> extract_features runs as ONE
+    mapInArrow over the scan, widened by one round-robin exchange. A
+    derived or cached DataFrame between the operators keeps its own
+    stage."""
+    from image_feature_extraction_spark.plans.flagship import flagship_stats
+
+    scan = spark.read.parquet(token_parquet)
+    stats = flagship_stats(spark, 60)
+
+    def pipeline(between):
+        joined = AS.asof_join_broadcast(scan, stats, on="ts", by="source")
+        return FE.extract_features(between(joined), scales=(1.0,))
+
+    fused = pipeline(lambda d: d)
+    plan = plan_of(fused)
+    c = counts_of(plan)
+    assert (c["arrow"], c["exch"]) == (1, 1), c
+    assert "RoundRobinPartitioning" in plan
+    assert plan_counts(pipeline(lambda d: d.filter("n_tok > 0")))["arrow"] == 2
+    joined = AS.asof_join_broadcast(scan, stats, on="ts", by="source").cache()
+    try:
+        assert "InMemoryTableScan" in plan_of(FE.extract_features(joined))
+    finally:
+        joined.unpersist()
 
 
 def _embeddings(spark):
@@ -239,9 +289,9 @@ SIMILARITY_CASES = {
         lambda s: S.lsh_topk(
             _embeddings(s), _query_vectors(s), k=3, n_planes=2, n_tables=2, dim=8
         ),
-        1, 8, 5,
-        "bucket UDF per side (each evaluated twice: the posexplode's "
-        "inferred non-empty filter is pushed below it) + one cosine UDF",
+        1, 8, 3,
+        "bucket UDF per side (once per row: posexplode_outer infers no "
+        "non-empty filter to push below it) + one cosine UDF",
     ),
     "cosine_topk": (
         lambda s: S.cosine_topk(_embeddings(s), _query_vectors(s), k=3),
@@ -251,8 +301,8 @@ SIMILARITY_CASES = {
         lambda s: D.embedding_neardup_pairs_bucketed(
             _embeddings(s), threshold=0.5, n_planes=2, n_tables=2, dim=8
         ),
-        0, 2, 3,
-        "bucket UDF (twice, as in lsh_topk) + per-bucket applyInPandas; "
+        0, 2, 2,
+        "bucket UDF (once, as in lsh_topk) + per-bucket applyInPandas; "
         "(tbl, bkt) exchange + pair distinct",
     ),
 }

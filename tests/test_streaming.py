@@ -1142,6 +1142,42 @@ def test_cents_half_up_matches_spark_decimal_cast_property(spark):
     assert np.array_equal(got, want)
 
 
+def test_cents_half_up_large_values_fast_and_exact(spark, monkeypatch):
+    """Past |v| ~ 5e9 the uncapped near-boundary band reached 0.5 and sent
+    every value down the per-element Decimal path. Capped at 0.499,
+    2-decimal values keep the fast path there; values from 2**50 cents
+    on always take the exact path. Both stay equal to Spark's cast up to
+    the DECIMAL(18,2) bound."""
+    import decimal
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(77)
+    two_dec = np.round(rng.uniform(5e9, 5e10, 2000), 2) * rng.choice([-1, 1], 2000)
+    vals = np.concatenate([
+        two_dec,
+        np.round(rng.uniform(5e10, 1e13, 300), 2),
+        np.round(rng.uniform(1e9, 1e13, 300), 3),
+        np.round(rng.uniform(1e13, 9.9e15, 300), 2) * rng.choice([-1, 1], 300),
+    ])
+    df = spark.createDataFrame(pd.DataFrame({"i": np.arange(len(vals)),
+                                             "v": vals}))
+    rows = df.selectExpr(
+        "i", "CAST(CAST(v AS DECIMAL(18,2)) * 100 AS BIGINT) c"
+    ).collect()
+    want = np.array(
+        [r["c"] for r in sorted(rows, key=lambda r: r["i"])], dtype=np.int64
+    )
+    assert np.array_equal(ST._cents_half_up(vals), want)
+
+    slow = []
+    real = decimal.Decimal
+    monkeypatch.setattr(decimal, "Decimal", lambda x: slow.append(x) or real(x))
+    assert np.array_equal(ST._cents_half_up(two_dec), want[: len(two_dec)])
+    assert slow == []
+
+
 @pytest.mark.parametrize("seed", [5, 321, 13])  # 13: exercises the
 # open-bucket collision exclusion (1 withheld row lands in an open
 # user_id bucket — the case that is legitimately unverifiable)
