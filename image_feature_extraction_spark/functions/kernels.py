@@ -54,13 +54,16 @@ NUM_FEATURES = len(FEATURE_NAMES)
 DEFAULT_SCALES = (1.0, 2.0)
 
 # Cache-blocking budget for batched cube processing (cells per chunk); see
-# batch_feature_vectors. 8192 cells * 8 B * ~30 temporaries ~= 2 MB working
-# set per (chunk, scale), about one core's L2. Swept on a 4-core Xeon, one
-# thread, 512-doc calls: 4,096 / 8,192 / 16,384 / 32,768 cells gave about
-# 1.7k / 2.0k / 2.4k / 2.7k docs/s for +5 / +6 / +9 / +18 MB of peak RSS. In
-# the tokens benchmark 16,384 added ~5 MB of worker RSS with no rows/s gain
-# above the noise, so the budget stays at 8,192.
-CHUNK_CELLS = 8192
+# batch_feature_vectors. Each numpy call covers up to this many cells, so its
+# fixed cost is paid once per chunk. Swept on a 4-core Xeon, one thread, the
+# tokens benchmark's seed-2 input (4,096 docs in 512-doc calls, median of 7
+# interleaved runs, peak = tracemalloc's largest per call): 4,096 / 8,192 /
+# 16,384 / 32,768 cells gave 3.6k / 4.3k / 5.0k / 5.1k docs/s at a 1.9 / 1.9
+# / 3.3 / 5.9 MB peak. The bincount-binned kernel gave 3.4k docs/s at a
+# 3.4 MB peak with 8,192 cells, and its 16,384-cell run added ~5 MB of worker
+# RSS on the tokens benchmark; 16,384 here stays below that peak
+# (tests/test_kernels.py bounds it).
+CHUNK_CELLS = 16384
 
 
 # ---------------------------------------------------------------------------
@@ -145,15 +148,31 @@ def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
     r -= t
     r /= 2.0
 
-    phi = np.where(
-        r <= -1.0,
-        np.pi / 3.0,
-        np.where(r >= 1.0, 0.0, np.arccos(np.clip(r, -1.0, 1.0)) / 3.0),
-    )
+    # The tail holds only q, p and phi (in r's memory): dropping the rest
+    # first keeps the solve's peak, the kernel's largest, down.
+    phi = r
+    del p_off, t1, t2, t3, t, psafe, B11, B12, B13, B22, B23, B33, r
 
-    e0 = q + 2.0 * p * np.cos(phi)
-    e2 = q + 2.0 * p * np.cos(phi + np.pi * (2.0 / 3.0))
-    e1 = 3.0 * q - e0 - e2
+    # phi = arccos(clip(r)) / 3 in place: the reference's r <= -1 and r >= 1
+    # branches need no where, as arccos(-1) == pi and arccos(1) == 0 exactly.
+    # Then e0 = q + 2p cos(phi), e2 = q + 2p cos(phi + 2pi/3) and
+    # e1 = 3q - e0 - e2 in place, in the naive expression's operation order.
+    np.clip(phi, -1.0, 1.0, out=phi)
+    np.arccos(phi, out=phi)
+    phi /= 3.0
+    p *= 2.0
+    e0 = np.cos(phi)
+    e0 *= p
+    e0 += q
+    phi += np.pi * (2.0 / 3.0)
+    e2 = np.cos(phi, out=phi)
+    e2 *= p
+    e2 += q
+    e1 = q
+    e1 *= 3.0
+    e1 -= e0
+    e1 -= e2
+    del phi, p, q  # phi and q are e2 and e1: the swaps free them
 
     sw = np.abs(e0) < np.abs(e2)
     e0, e2 = np.where(sw, e2, e0), np.where(sw, e0, e2)
@@ -328,10 +347,18 @@ def normalized_convolution(img: np.ndarray, cert: np.ndarray, sigma: float) -> n
     (nothing within reach). NormalizedGaussianConvolutionImageFilter.hxx:37-63."""
     img = np.asarray(img)
     cert = np.asarray(cert, dtype=img.dtype if img.dtype in (np.float32, np.float64) else np.float64)
-    # One separable pass smooths numerator and denominator together.
-    num, den = gauss3(np.stack([img * cert, cert]), sigma)
-    ok = den > 0
-    return np.where(ok, num / np.where(ok, den, 1.0), np.asarray(0.0, dtype=num.dtype))
+    return _smoothed_ratio(np.stack([img * cert, cert]), sigma)
+
+
+def _smoothed_ratio(num_den: np.ndarray, sigma: float) -> np.ndarray:
+    """normalized_convolution's core: one gauss3 pass over the stacked
+    (img * cert, cert) pair, then their ratio, 0 where the smoothed
+    certainty is 0, as a new C-contiguous array (gauss3 returns a permuted
+    view, which every derivative call would copy)."""
+    num, den = gauss3(num_den, sigma)
+    out = np.zeros(num.shape, dtype=num.dtype)
+    np.divide(num, den, out=out, where=den > 0)
+    return out
 
 
 def emphysema_features(img: np.ndarray, cert: np.ndarray, sigma: float) -> np.ndarray:
@@ -540,7 +567,20 @@ def batch_feature_vectors(
     float64 in input order, bit-identical to running the public stages
     one doc at a time and binning each feature with histogram_counts (the
     unfused reference in tests/test_kernels.py). `edges` must be sorted
-    along the last axis, as histogram_counts assumes.
+    along the last axis, as histogram_counts assumes. Bit identity needs a
+    single-threaded BLAS, as in the engine's Python workers: a threaded
+    sgemm can round a batched gauss3 differently from a one-doc call.
+
+    Binning counts by segment sums. A chunk's foreground values sit doc
+    after doc in one (8, n_fg) array, so for each (scale, edge e_k) one
+    np.add.reduceat over `vals <= e_k` gives every doc's count of values at
+    or below e_k. With sorted edges these counts are cumulative: bin 0
+    is the first, bin k the difference of the k-th and (k-1)-th, and the
+    last bin is n_tok minus the count at the last edge. That is
+    searchsorted(side="left") binning, NaN included: `NaN <= e` is false,
+    so NaN lands in the last bin, where searchsorted puts it. Empty docs
+    take no segment (reduceat would return the next value for one) and
+    keep their all-zero row.
     """
     if edges is None:
         edges = default_edges()
@@ -548,23 +588,15 @@ def batch_feature_vectors(
     if edges.ndim == 2:
         edges = np.broadcast_to(edges, (len(scales),) + edges.shape)
     n_edges = edges.shape[-1]
-    nb = n_edges + 1
     n_cols = len(scales) * NUM_FEATURES
-    vec_len = n_cols * nb
-    # Binning without searchsorted: a value's bin is the number of edges
-    # below it, n_edges minus the count of edges at or above it
-    # (sum_k v <= e_k), which equals searchsorted(side="left") for ties and
-    # NaN too. Its bincount key is its doc's row offset + its column's
-    # offset + that bin.
-    col_base = (np.arange(n_cols) * nb + n_edges)[:, None]
-    count_dtype = np.min_scalar_type(n_edges)
 
     lens = [len(t) for t in token_arrays]
-    out = np.zeros((len(lens), vec_len), dtype=np.float64)
+    out = np.zeros((len(lens), n_cols * (n_edges + 1)), dtype=np.float64)
 
     by_side: dict[int, list[int]] = {}
     for i, n in enumerate(lens):
-        by_side.setdefault(cube_side(n), []).append(i)
+        if n:
+            by_side.setdefault(cube_side(n), []).append(i)
 
     for s, side_idxs in by_side.items():
         # Cache blocking: the numeric chain materializes ~30 temporaries of
@@ -576,54 +608,61 @@ def batch_feature_vectors(
             B = len(idxs)
             n_tok = np.array([lens[i] for i in idxs])
             # Foreground is each doc's prefix of n_tok cells, so one mask
-            # packs the tokens and gathers every foreground value.
+            # packs the tokens and gathers every foreground value. The
+            # numerator img * cert is img itself, so (img, cert) is stacked
+            # once for every scale.
             fg = cells < n_tok[:, None]
-            img = np.zeros(fg.shape, dtype=np.float32)
-            img[fg] = np.concatenate(
+            num_den = np.zeros((2,) + fg.shape, dtype=np.float32)
+            num_den[0][fg] = np.concatenate(
                 [token_arrays[i] for i in idxs], dtype=np.float32, casting="unsafe"
             )
-            img = img.reshape(B, s, s, s)
-            cert = fg.astype(np.float32).reshape(B, s, s, s)
+            num_den[1] = fg
+            num_den = num_den.reshape(2, B, s, s, s)
 
             def sel(a):
                 return a.reshape(B, -1)[fg]
 
-            n_fg = int(n_tok.sum())
-            vals = np.empty((NUM_FEATURES, n_fg))
-            at_or_above = np.zeros((n_cols, n_fg), dtype=count_dtype)
+            vals = np.empty((NUM_FEATURES, int(n_tok.sum())))
+            starts = np.cumsum(n_tok) - n_tok
+            # Per doc and column: 0, the count at or below each edge, n_tok.
+            # Consecutive differences are the histogram.
+            cum = np.zeros((B, n_cols, n_edges + 2), dtype=np.intp)
+            cum[:, :, -1] = n_tok[:, None]
             for si, sigma in enumerate(scales):
-                sm = normalized_convolution(img, cert, sigma)
-                # gradient_magnitude and hessian6, sharing the first
-                # derivatives, and only the foreground of each kept.
+                sm = _smoothed_ratio(num_den, sigma)
+                vals[0] = sel(sm)
+                # hessian6 and gradient_magnitude, sharing the first
+                # derivatives, with only the foreground of each kept. The
+                # float32 Hessian lands in float64 rows BEFORE the solve,
+                # as eig3x3 converts: a float32 solve flipped an eig1 bin
+                # in one of 2,048 docs. Its six rows are then overwritten
+                # by the six eigenvalue features.
                 dx = derivative(sm, 0, 1)
                 dy = derivative(sm, 1, 1)
-                dz = derivative(sm, 2, 1)
-                vals[0] = sel(sm)
-                vals[1] = sel(np.sqrt(dx * dx + dy * dy + dz * dz))
-                del dz
-                # The float32 Hessian lands in float64 rows BEFORE the
-                # solve, as eig3x3 converts: a float32 solve flipped an
-                # eig1 bin in one of 2,048 docs. Its six rows are then
-                # overwritten by the six eigenvalue features.
                 hess = vals[2:]
                 for j, (a, d, order) in enumerate(
                     ((sm, 0, 2), (dx, 1, 1), (dx, 2, 1), (sm, 1, 2), (dy, 2, 1), (sm, 2, 2))
                 ):
                     hess[j] = sel(derivative(a, d, order))
-                del sm, dx, dy
+                dz = derivative(sm, 2, 1)
+                del sm
+                # sqrt(dx*dx + dy*dy + dz*dz), in place in dx
+                dx *= dx
+                dy *= dy
+                dx += dy
+                dz *= dz
+                dx += dz
+                np.sqrt(dx, out=dx)
+                vals[1] = sel(dx)
+                del dx, dy, dz
                 _eigen_feature_rows(hess, *hess)
-                scale_counts = at_or_above[si * NUM_FEATURES : (si + 1) * NUM_FEATURES]
+                cols = cum[:, si * NUM_FEATURES : (si + 1) * NUM_FEATURES]
+                # uint8 summed into int32 runs twice as fast as bool into
+                # int64; a doc's count fits, as Arrow list offsets are int32.
                 for k in range(n_edges):
-                    scale_counts += vals <= edges[si, :, k, None]
-            # ONE bincount per chunk, over every column's keys. Keep it per
-            # chunk: holding a whole batch's keys (or raising CHUNK_CELLS to
-            # 32,768) nearly doubled the Python worker's peak RSS on the
-            # tokens benchmark.
-            del vals, hess
-            key = np.repeat(np.arange(B) * vec_len, n_tok) + col_base
-            key -= at_or_above
-            counts = np.bincount(key.ravel(), minlength=B * vec_len)
-            out[idxs] = counts.reshape(B, vec_len) / np.maximum(n_tok, 1)[:, None]
+                    le = (vals <= edges[si, :, k, None]).view(np.uint8)
+                    cols[:, :, k + 1] = np.add.reduceat(le, starts, axis=1, dtype=np.int32).T
+            out[idxs] = np.diff(cum).reshape(B, -1) / n_tok[:, None]
     return out
 
 

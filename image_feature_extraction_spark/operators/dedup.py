@@ -4,12 +4,12 @@ Five strategies over a documents table (doc_id, text, ...):
 
 - exact:        content-hash groupBy (md5)                     -> exact dups
 - minhash_lsh:  shingle -> MinHash -> band -> bucket join      -> near dups
-- simhash:      word-hash sign aggregation -> hamming buckets  -> near dups
+- simhash:      word-hash sign aggregation -> per-doc fingerprint
 - ngram_jaccard: exploded-shingle equi-join -> exact Jaccard   -> near dups
 - embedding:    cosine over an embedding column                -> semantic dups
 
 Design for 10^12 docs: every strategy is shuffle-bounded by its key
-(content hash / band bucket / shingle / simhash prefix), never all-pairs.
+(content hash / band bucket / shingle / doc_id), never all-pairs.
 The all-pairs work only happens WITHIN a bucket, and bucket sizes are
 capped by construction (band width tuning). Candidate verification
 (exact Jaccard on candidates) is a second equi-join, not a cross join.
@@ -241,52 +241,6 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = 16) -> DataFrame:
         term = F.when(F.col(f"s{b}") >= 0, F.lit(1 << b)).otherwise(F.lit(0))
         fp = term if fp is None else fp + term
     return agg.select("doc_id", fp.cast("long").alias("simhash"))
-
-
-def simhash_band_pairs(df: DataFrame, text_col: str = "text", bits: int = 16,
-                       band_bits: int = 4) -> DataFrame:
-    """Candidate pairs sharing at least one simhash band (hamming-LSH),
-    with the exact hamming distance attached. Output:
-    (doc_a, doc_b, hamming) for pairs sharing >= 1 of bits/band_bits bands."""
-    sh = simhash(df, text_col, bits)
-    n_bands = bits // band_bits
-    mask = (1 << band_bits) - 1
-    bands = sh.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.shiftright(F.col("simhash"), bi * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("key"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a, b = bands.alias("a"), bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return pairs.select(
-        "doc_a", "doc_b", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming")
-    )
 
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", n: int = 1,

@@ -73,6 +73,8 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        # no [Stage N:> progress bars in scripts' output
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

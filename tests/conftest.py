@@ -5,6 +5,14 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# numpy runs with one BLAS thread here, as in the engine's Python workers
+# (session.get_spark sets the same for executors) and the benchmark. Set
+# before anything imports numpy. A multi-threaded sgemm splits a batched
+# gauss3 differently from a one-doc call and can round a cell differently,
+# so the kernel's batch == per-doc bit identity holds single-threaded.
+os.environ.setdefault("OMP_NUM_THREADS", "1")
+os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
+
 
 @pytest.fixture(scope="session")
 def spark():
