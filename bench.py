@@ -9,7 +9,7 @@ relational query from ``__spark_entry__.queries()`` at
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "extras": {...}}
 
-Timing methodology (v3, tagged in the output JSON): each query is
+Timing methodology (v4, tagged in the output JSON): each query is
 materialized with a noop-format write (full execution, no driver
 collect) after an untimed warm-up, best of 2-5 escalating reps; the
 flagship throughput is the MEDIAN of 5 shots interleaved across the
@@ -283,9 +283,11 @@ def main() -> None:
                 # ADVICE r4: tag the methodology so BENCH_*.json diffs can
                 # detect incomparable runs. v1 = cold best-of-2 (<= r3);
                 # v2 = untimed warm-up + rep escalation (r4); v3 = v2 +
-                # flagship median of 5 suite-interleaved shots (r5).
+                # flagship median of 5 suite-interleaved shots (r5);
+                # v4 = v3, but the queries no longer end in a display
+                # sort, so per-query times are not comparable with v3.
                 "methodology": {
-                    "version": 3,
+                    "version": 4,
                     "queries": "untimed warm-up + best of 2-5 escalating reps",
                     # actual shot count, not an aspirational label: a
                     # filtered/partial registry yields fewer interleave

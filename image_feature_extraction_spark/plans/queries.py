@@ -5,6 +5,8 @@ program and (b) an ANSI-ish SQL string DuckDB can run on the same parquet
 views. The driver compares row count, schema, and an order-insensitive
 value hash — so:
 
+- results are multisets: no query ends in a display sort and no oracle
+  in a top-level ORDER BY (order matters only under a LIMIT, q_topk);
 - every computed column is aliased identically on both sides;
 - float AGGREGATES go through DECIMAL casts (exact integer arithmetic →
   bit-identical across engines; raw double sums are partition-order
@@ -81,7 +83,6 @@ def q_elementwise_revenue(spark, sf_dir):
             F.sum(revtax).cast("double").alias("sum_rev_tax"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -101,7 +102,6 @@ _register(
            COUNT(*) AS n_rows
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
     """,
 )
 
@@ -124,7 +124,6 @@ def q_clamp_threshold_mask(spark, sf_dir):
             F.sum(masked).cast("double").alias("sum_masked"),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -141,7 +140,6 @@ _register(
            COUNT(*) AS n_rows
     FROM events
     GROUP BY event_type
-    ORDER BY event_type
     """,
 )
 
@@ -159,7 +157,6 @@ def q_membership(spark, sf_dir):
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(_dec("o_totalprice")).cast("double").alias("sum_price"),
         )
-        .orderBy("o_orderpriority", "membership")
     )
 
 
@@ -173,7 +170,6 @@ _register(
            CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
     FROM orders
     GROUP BY 1, 2
-    ORDER BY 1, 2
     """,
 )
 
@@ -193,7 +189,6 @@ def q_intensity_window(spark, sf_dir):
             F.sum(F.floor(windowed)).cast("long").alias("sum_win"),
             F.count(F.lit(1)).alias("n_parts"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -206,7 +201,6 @@ _register(
            COUNT(*) AS n_parts
     FROM part
     GROUP BY p_brand
-    ORDER BY p_brand
     """,
 )
 
@@ -245,7 +239,6 @@ def q_histogram_fixed(spark, sf_dir):
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("bin_count"))
         .withColumn("frequency", F.col("bin_count") / F.lit(float(total)))
-        .orderBy("bin")
     )
 
 
@@ -258,7 +251,6 @@ _register(
            COUNT(*) / (SELECT CAST(COUNT(*) AS DOUBLE) FROM lineitem) AS frequency
     FROM lineitem
     GROUP BY 1
-    ORDER BY 1
     """,
 )
 
@@ -281,7 +273,6 @@ def q_mode_label(spark, sf_dir):
             F.col("mode_label").alias("mode_event"),
             F.col("mode_count"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -298,7 +289,6 @@ _register(
       GROUP BY user_id, event_type
     )
     WHERE rn = 1
-    ORDER BY user_id
     """,
 )
 
@@ -308,14 +298,13 @@ def q_masked_mean(spark, sf_dir):
     value. Exact decimal sum / exact count -> double division."""
     ev = _t(spark, sf_dir, "events")
     clicks = F.when(F.col("event_type") == "click", _dec("value"))
-    agg = ev.groupBy("user_id").agg(
+    return ev.groupBy("user_id").agg(
         F.coalesce(
             F.sum(clicks).cast("double")
             / F.sum(F.when(clicks.isNotNull(), 1)).cast("double"),
             F.lit(0.0),
         ).alias("mean_click_value")
     )
-    return agg.orderBy("user_id")
 
 
 _register(
@@ -329,7 +318,6 @@ _register(
              0.0) AS mean_click_value
     FROM events
     GROUP BY user_id
-    ORDER BY user_id
     """,
 )
 
@@ -347,7 +335,6 @@ def q_bounding_box(spark, sf_dir):
             F.max(_dec("value")).cast("double").alias("value_max"),
             F.count(F.lit(1)).alias("n_fg"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -364,7 +351,6 @@ _register(
     FROM events
     WHERE event_type <> 'error'
     GROUP BY user_id
-    ORDER BY user_id
     """,
 )
 
@@ -387,7 +373,6 @@ def q_join_equi(spark, sf_dir):
             F.sum(rev).cast("double").alias("sum_rev"),
             F.count(F.lit(1)).alias("n_items"),
         )
-        .orderBy("o_orderpriority")
     )
 
 
@@ -402,7 +387,6 @@ _register(
            COUNT(*) AS n_items
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
     """,
 )
 
@@ -427,7 +411,6 @@ def q_join_range(spark, sf_dir):
             F.count(F.lit(1)).alias("n_items"),
             F.sum(_dec("l_quantity")).cast("double").alias("sum_qty"),
         )
-        .orderBy("band")
     )
 
 
@@ -440,7 +423,6 @@ _register(
            CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
     FROM lineitem JOIN bands ON l_quantity > lo AND l_quantity <= hi
     GROUP BY band
-    ORDER BY band
     """,
 )
 
@@ -484,7 +466,7 @@ def q_lag_lead(spark, sf_dir):
     out = lag_lead(ev, by="user_id", order=["ts", "event_id"], value="value")
     return out.select(
         "event_id", "user_id", "value_lag", "value_lead", "value_d1", "value_d2"
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -498,7 +480,6 @@ _register(
            LEAD(value) OVER w - 2.0*value + LAG(value) OVER w AS value_d2
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ORDER BY event_id
     """,
 )
 
@@ -515,7 +496,7 @@ def q_backfill(spark, sf_dir):
         F.when(F.col("event_type") != "error", F.col("value")).alias("v"),
     )
     out = backfill(ev, by="user_id", order=["ts", "event_id"], cols="v")
-    return out.select("event_id", "user_id", "v", "v_filled").orderBy("event_id")
+    return out.select("event_id", "user_id", "v", "v_filled")
 
 
 _register(
@@ -528,7 +509,6 @@ _register(
              OVER (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled
     FROM events
-    ORDER BY event_id
     """,
 )
 
@@ -547,7 +527,7 @@ def q_sessionize(spark, sf_dir):
         F.date_format("session_start", _TS_FMT_SPARK).alias("start_s"),
         F.date_format("session_end", _TS_FMT_SPARK).alias("end_s"),
         F.round("duration_sec", 6).alias("duration_sec"),
-    ).orderBy("user_id", "session_id")
+    )
 
 
 _register(
@@ -572,7 +552,6 @@ _register(
            ROUND(epoch(MAX(ts)) - epoch(MIN(ts)), 6) AS duration_sec
     FROM sess
     GROUP BY user_id, session_id
-    ORDER BY user_id, session_id
     """,
 )
 
@@ -603,7 +582,7 @@ def q_asof_join(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -623,7 +602,6 @@ _register(
            c.click_value, p.purchase_value
     FROM clicks c ASOF LEFT JOIN purchases p
       ON c.user_id = p.user_id AND c.ts >= p.ts
-    ORDER BY c.event_id
     """,
 )
 
@@ -637,11 +615,10 @@ def q_dedup_exact(spark, sf_dir):
     counts (the survivor table itself is dedup.exact_dedup, pytest-gated)."""
     d = _t(spark, sf_dir, "documents")
     hashed = d.select("source", "doc_id", F.md5(F.col("text")).alias("h"))
-    per_src = hashed.groupBy("source").agg(
+    return hashed.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("h").alias("n_unique"),
     )
-    return per_src.orderBy("source")
 
 
 _register(
@@ -651,7 +628,6 @@ _register(
     SELECT source, COUNT(*) AS n_docs, COUNT(DISTINCT md5(text)) AS n_unique
     FROM documents
     GROUP BY source
-    ORDER BY source
     """,
 )
 
@@ -687,11 +663,10 @@ def q_slice_selection(spark, sf_dir):
         )
         .where((F.col("want_rn") >= 0))
     )
-    out = sel.join(
+    return sel.join(
         idx,
         (F.col("sel_user_id") == F.col("user_id")) & (F.col("want_rn") == F.col("rn")),
     ).select("user_id", "event_id", "rn")
-    return out.orderBy("user_id", "rn")
 
 
 _register(
@@ -713,7 +688,6 @@ _register(
     )
     SELECT i.user_id, i.event_id, i.rn
     FROM want w JOIN idx i ON w.user_id = i.user_id AND w.want_rn = i.rn
-    ORDER BY i.user_id, i.rn
     """,
 )
 

@@ -44,7 +44,7 @@ SQL_GRAMS3 = (
 def q_dedup_minhash(spark, sf_dir):
     """MinHash signatures (8 perms over 3-word shingles) per doc."""
     d = _t(spark, sf_dir, "documents")
-    return D.minhash_signatures(d, num_hashes=8).orderBy("doc_id")
+    return D.minhash_signatures(d, num_hashes=8)
 
 
 def _minhash_sql() -> str:
@@ -56,7 +56,7 @@ def _minhash_sql() -> str:
     WITH words AS ({SQL_WORDS}),
     grams AS ({SQL_GRAMS3}),
     h AS (SELECT doc_id, {MD5L.format(x='g')} % {D.MINHASH_PRIME} AS hm FROM grams)
-    SELECT doc_id, {mins} FROM h GROUP BY doc_id ORDER BY doc_id
+    SELECT doc_id, {mins} FROM h GROUP BY doc_id
     """
 
 
@@ -67,19 +67,16 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     """LSH banding candidates (8 bands x 1 row): pairs agreeing on >= 1
     minhash, with the number of agreeing bands."""
     d = _t(spark, sf_dir, "documents")
-    return D.minhash_lsh_pairs(d, num_hashes=8, band_rows=1).orderBy(
-        "doc_a", "doc_b"
-    )
+    return D.minhash_lsh_pairs(d, num_hashes=8, band_rows=1)
 
 
 def _minhash_lsh_sql() -> str:
     eqs = " + ".join(f"(a.h{j} = b.h{j})::INT" for j in range(8))
     return f"""
-    WITH sig AS ({_minhash_sql().replace('ORDER BY doc_id', '')})
+    WITH sig AS ({_minhash_sql()})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, ({eqs})::BIGINT AS n_bands
     FROM sig a JOIN sig b ON a.doc_id < b.doc_id
     WHERE ({eqs}) > 0
-    ORDER BY doc_a, doc_b
     """
 
 
@@ -89,7 +86,7 @@ _register("q_dedup_minhash_lsh", q_dedup_minhash_lsh, _minhash_lsh_sql())
 def q_dedup_simhash(spark, sf_dir):
     """16-bit SimHash per doc over word unigrams."""
     d = _t(spark, sf_dir, "documents")
-    return D.simhash(d, bits=16).orderBy("doc_id")
+    return D.simhash(d, bits=16)
 
 
 def _simhash_sql(bits: int = 16) -> str:
@@ -102,7 +99,7 @@ def _simhash_sql(bits: int = 16) -> str:
     WITH words AS (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS word FROM documents),
     h AS (SELECT doc_id, {MD5L.format(x='word')} AS h FROM words),
     s AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id)
-    SELECT doc_id, ({fp})::BIGINT AS simhash FROM s ORDER BY doc_id
+    SELECT doc_id, ({fp})::BIGINT AS simhash FROM s
     """
 
 
@@ -116,7 +113,7 @@ def q_dedup_jaccard(spark, sf_dir):
     would make every stopword a hot join key (the classic skew blow-up —
     measured 148s vs ~5s at sf0.1)."""
     d = _t(spark, sf_dir, "documents")
-    return D.ngram_jaccard_pairs(d, n=3, threshold=0.05).orderBy("doc_a", "doc_b")
+    return D.ngram_jaccard_pairs(d, n=3, threshold=0.05)
 
 
 _register(
@@ -137,7 +134,6 @@ _register(
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE common::DOUBLE / (sa.n_sh + sb.n_sh - common)::DOUBLE >= 0.05
-    ORDER BY doc_a, doc_b
     """,
 )
 
@@ -145,7 +141,7 @@ _register(
 def q_dedup_embedding(spark, sf_dir):
     """Embedding-cosine near-dup pairs (threshold 0.48)."""
     e = _t(spark, sf_dir, "embeddings")
-    return D.embedding_neardup_pairs(e, threshold=0.48).orderBy("id_a", "id_b")
+    return D.embedding_neardup_pairs(e, threshold=0.48)
 
 
 _register(
@@ -158,7 +154,7 @@ _register(
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
     )
     SELECT id_a, id_b, ROUND(c, 6) AS cosine FROM p
-    WHERE c >= 0.48 ORDER BY id_a, id_b
+    WHERE c >= 0.48
     """,
 )
 
@@ -179,9 +175,7 @@ def _query_vectors(spark, sf_dir):
 def q_knn_bruteforce(spark, sf_dir):
     """Exact cosine top-5 per query vector (every 50th embedding)."""
     e = _t(spark, sf_dir, "embeddings")
-    return S.cosine_topk(e, _query_vectors(spark, sf_dir), k=5).orderBy(
-        "query_id", "rank"
-    )
+    return S.cosine_topk(e, _query_vectors(spark, sf_dir), k=5)
 
 
 _register(
@@ -200,7 +194,7 @@ _register(
       FROM q JOIN embeddings c ON q.query_id <> c.vec_id
     )
     SELECT query_id, rank, neighbor_id, ROUND(c, 6) AS cosine
-    FROM scored WHERE rank <= 5 ORDER BY query_id, rank
+    FROM scored WHERE rank <= 5
     """,
 )
 
@@ -228,7 +222,7 @@ def q_knn_lsh(spark, sf_dir):
     return S.lsh_topk(
         e, _query_vectors(spark, sf_dir), k=5,
         n_planes=_LSH_PLANES, n_tables=_LSH_TABLES, dim=64,
-    ).orderBy("query_id", "rank")
+    )
 
 
 def _lsh_sql() -> str:
@@ -258,7 +252,7 @@ def _lsh_sql() -> str:
       JOIN embeddings ce ON ce.vec_id = cand.neighbor_id
     )
     SELECT query_id, rank, neighbor_id, ROUND(c, 6) AS cosine
-    FROM scored WHERE rank <= 5 ORDER BY query_id, rank
+    FROM scored WHERE rank <= 5
     """
 
 
@@ -280,7 +274,7 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
     # pairs at sf0.01); raise n_planes for tighter thresholds at scale
     return D.embedding_neardup_pairs_bucketed(
         e, threshold=0.48, n_planes=3, n_tables=8
-    ).orderBy("id_a", "id_b")
+    )
 
 
 def _embedding_bucketed_sql(n_planes: int = 3, n_tables: int = 8) -> str:
@@ -304,7 +298,7 @@ def _embedding_bucketed_sql(n_planes: int = 3, n_tables: int = 8) -> str:
       JOIN embeddings eb ON eb.vec_id = cand.id_b
     )
     SELECT id_a, id_b, ROUND(c, 6) AS cosine FROM p
-    WHERE c >= 0.48 ORDER BY id_a, id_b
+    WHERE c >= 0.48
     """
 
 
@@ -321,7 +315,7 @@ _register(
 
 def q_text_tokens(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return T.token_stats(d).orderBy("doc_id")
+    return T.token_stats(d)
 
 
 _register(
@@ -335,14 +329,14 @@ _register(
            (SELECT length(text) FROM documents d2 WHERE d2.doc_id = words.doc_id)::INT AS n_chars_measured,
            len(list_filter(w, x -> regexp_full_match(x, '[A-Za-z]+')))::INT AS n_alpha_words,
            list_sum(list_transform(w, x -> length(x)))::DOUBLE / len(w)::DOUBLE AS mean_word_len
-    FROM words ORDER BY doc_id
+    FROM words
     """,
 )
 
 
 def q_text_quality(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return T.quality_score(d).orderBy("doc_id")
+    return T.quality_score(d)
 
 
 def _quality_sql() -> str:
@@ -365,7 +359,7 @@ def _quality_sql() -> str:
                  + 0.3 * (CASE WHEN stop_ratio >= 0.01 AND stop_ratio <= 0.6 THEN 1.0 ELSE 0.0 END)
                  + 0.3 * (CASE WHEN n_words >= 20 AND n_words <= 1000 THEN 1.0 ELSE 0.0 END)), 0
            )::BIGINT AS quality_score
-    FROM m ORDER BY doc_id
+    FROM m
     """
 
 
@@ -374,7 +368,7 @@ _register("q_text_quality", q_text_quality, _quality_sql())
 
 def q_text_langid(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return T.langid(d).orderBy("doc_id")
+    return T.langid(d)
 
 
 def _langid_sql() -> str:
@@ -401,7 +395,6 @@ def _langid_sql() -> str:
            CASE WHEN {mx} > 0 THEN {case} ELSE 'und' END AS predicted_lang,
            {mx}::INT AS marker_hits
     FROM h JOIN documents d ON d.doc_id = h.doc_id
-    ORDER BY h.doc_id
     """
 
 
@@ -412,7 +405,7 @@ def q_text_bpe_tokens(spark, sf_dir):
     """BPE-ish pre-tokenizer counts (GPT-2-style regex, ASCII classes so
     both engines' regex dialects agree exactly) + fertility ratio."""
     d = _t(spark, sf_dir, "documents")
-    return T.bpe_token_count(d).orderBy("doc_id")
+    return T.bpe_token_count(d)
 
 
 def _bpe_sql() -> str:
@@ -427,7 +420,7 @@ def _bpe_sql() -> str:
     )
     SELECT doc_id, n_bpe::INT AS n_bpe_tokens, n_words::INT AS n_words,
            n_bpe::DOUBLE / n_words::DOUBLE AS fertility
-    FROM toks ORDER BY doc_id
+    FROM toks
     """
 
 
@@ -436,7 +429,7 @@ _register("q_text_bpe_tokens", q_text_bpe_tokens, _bpe_sql())
 
 def q_text_fingerprint(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return T.fingerprint(d, n=3).orderBy("doc_id")
+    return T.fingerprint(d, n=3)
 
 
 _register(
@@ -448,7 +441,7 @@ _register(
     h AS (SELECT doc_id, {MD5L.format(x='g')} AS h FROM grams)
     SELECT doc_id, MIN(h) AS min_hash, MAX(h) AS max_hash,
            bit_xor(h)::BIGINT AS xor_hash, COUNT(*) AS n_shingles
-    FROM h GROUP BY doc_id ORDER BY doc_id
+    FROM h GROUP BY doc_id
     """,
 )
 
@@ -463,7 +456,7 @@ def q_nearest_event(spark, sf_dir):
     out = W.nearest_event_distance(
         ev, by="user_id", ts="ts", marker=F.col("event_type") == "error"
     )
-    return out.select("event_id", "user_id", "dist_to_marker").orderBy("event_id")
+    return out.select("event_id", "user_id", "dist_to_marker")
 
 
 _register(
@@ -484,7 +477,7 @@ _register(
            CASE WHEN back IS NULL AND fwd IS NULL THEN NULL
                 ELSE LEAST(COALESCE(back, 'inf'::DOUBLE), COALESCE(fwd, 'inf'::DOUBLE))
            END AS dist_to_marker
-    FROM d ORDER BY event_id
+    FROM d
     """,
 )
 
@@ -499,7 +492,7 @@ def q_moving_avg(spark, sf_dir):
         "mov_n",
         F.col("mov_sum").cast("double").alias("mov_sum"),
         "mov_mean",
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -514,7 +507,6 @@ _register(
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY epoch(ts)
                  RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW)
-    ORDER BY event_id
     """,
 )
 
@@ -538,9 +530,7 @@ def q_pivot_bag(spark, sf_dir):
         (F.col(f"n_{t}").cast("double") / F.col("n_total").cast("double")).alias(f"f_{t}")
         for t in _EVENT_TYPES
     ]
-    return out.select("user_id", *[f"n_{t}" for t in _EVENT_TYPES], "n_total", *freqs).orderBy(
-        "user_id"
-    )
+    return out.select("user_id", *[f"n_{t}" for t in _EVENT_TYPES], "n_total", *freqs)
 
 
 _register(
@@ -551,7 +541,7 @@ _register(
            {', '.join(f"CAST(SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END) AS BIGINT) AS n_{t}" for t in _EVENT_TYPES)},
            COUNT(*) AS n_total,
            {', '.join(f"SUM(CASE WHEN event_type = '{t}' THEN 1 ELSE 0 END)::DOUBLE / COUNT(*)::DOUBLE AS f_{t}" for t in _EVENT_TYPES)}
-    FROM events GROUP BY user_id ORDER BY user_id
+    FROM events GROUP BY user_id
     """,
 )
 
@@ -578,7 +568,6 @@ def q_union_bag(spark, sf_dir):
             "user_id",
             F.col("value").cast("decimal(18,2)").cast("double").alias("value"),
         )
-        .orderBy("bag_id", "instance_idx")
     )
 
 
@@ -594,7 +583,7 @@ _register(
     SELECT CAST(bag_id AS BIGINT) AS bag_id,
            CAST(ROW_NUMBER() OVER (PARTITION BY bag_id ORDER BY event_id) - 1 AS BIGINT) AS instance_idx,
            event_id, user_id, CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE) AS value
-    FROM u ORDER BY bag_id, instance_idx
+    FROM u
     """,
 )
 
@@ -614,7 +603,6 @@ def q_stratified_sample(spark, sf_dir):
             F.count(F.lit(1)).alias("n_sampled"),
             F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -626,7 +614,7 @@ _register(
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
     FROM events
     WHERE event_type <> 'error' AND {MD5L.format(x='event_id::VARCHAR')} % 10 = 0
-    GROUP BY event_type ORDER BY event_type
+    GROUP BY event_type
     """,
 )
 
@@ -637,9 +625,7 @@ def q_exact_quantiles(spark, sf_dir):
     from ..operators.quantiles import exact_quantile_values
 
     ev = _t(spark, sf_dir, "events")
-    return exact_quantile_values(ev, value="value", keys="event_type", n_bins=4).orderBy(
-        "event_type", "edge_idx"
-    )
+    return exact_quantile_values(ev, value="value", keys="event_type", n_bins=4)
 
 
 _register(
@@ -657,7 +643,6 @@ _register(
     FROM ranked, (VALUES (1), (2), (3)) AS t(j)
     WHERE pos = (j * n) // 4
     QUALIFY ROW_NUMBER() OVER (PARTITION BY event_type, pos ORDER BY j) = 1
-    ORDER BY event_type, edge_idx
     """,
 )
 
@@ -756,7 +741,7 @@ def q_salted_agg(spark, sf_dir):
         F.col("sum_qty").cast("double").alias("sum_qty"),
         F.col("max_price").cast("double").alias("max_price"),
         F.col("min_price").cast("double").alias("min_price"),
-    ).orderBy("l_returnflag")
+    )
 
 
 _register(
@@ -770,7 +755,6 @@ _register(
            CAST(MIN(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS min_price
     FROM lineitem
     GROUP BY l_returnflag
-    ORDER BY l_returnflag
     """,
 )
 
@@ -816,7 +800,7 @@ def q_asof_forward(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 from .queries import _TS_FMT_DUCK  # noqa: E402
@@ -831,7 +815,6 @@ _register(
            c.click_value, p.purchase_value
     FROM clicks c ASOF LEFT JOIN purchases p
       ON c.user_id = p.user_id AND c.ts <= p.ts
-    ORDER BY c.event_id
     """,
 )
 
@@ -855,7 +838,7 @@ def q_asof_interpolate(spark, sf_dir):
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value",
         F.col("purchase_value").alias("purchase_interp"),
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -875,7 +858,6 @@ _register(
     FROM clicks c
     ASOF LEFT JOIN purchases b ON c.user_id = b.user_id AND c.ts >= b.ts
     ASOF LEFT JOIN purchases f ON c.user_id = f.user_id AND c.ts <= f.ts
-    ORDER BY c.event_id
     """,
 )
 
@@ -887,7 +869,6 @@ _ASOF_BACKWARD_SQL = f"""
            c.click_value, p.purchase_value
     FROM clicks c ASOF LEFT JOIN purchases p
       ON c.user_id = p.user_id AND c.ts >= p.ts
-    ORDER BY c.event_id
     """
 
 
@@ -915,7 +896,7 @@ def q_asof_auto_bucketed(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register("q_asof_auto_bucketed", q_asof_auto_bucketed, _ASOF_BACKWARD_SQL)
@@ -934,7 +915,7 @@ def q_asof_cogroup(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register("q_asof_cogroup", q_asof_cogroup, _ASOF_BACKWARD_SQL)
@@ -954,7 +935,7 @@ def q_asof_broadcast(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register("q_asof_broadcast", q_asof_broadcast, _ASOF_BACKWARD_SQL)
@@ -973,7 +954,7 @@ def q_asof_window(spark, sf_dir):
         "event_id", "user_id",
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register("q_asof_window", q_asof_window, _ASOF_BACKWARD_SQL)
@@ -1006,7 +987,7 @@ def q_checkpoint_ledger(spark, sf_dir):
             "unit", "status", "rows_out", "engine_version"
         )
         assert not resume["ran"], "resume must skip completed units"
-        return led.orderBy("unit").withColumn(
+        return led.withColumn(
             "first_run_units", F.lit(len(first["ran"])).cast("long")
         )
 
@@ -1033,7 +1014,6 @@ def _checkpoint_ledger_sql() -> str:
            engine_version, CAST(first_run_units AS BIGINT) AS first_run_units
     FROM (VALUES {values})
          AS t(unit, status, rows_out, engine_version, first_run_units)
-    ORDER BY unit
     """
 
 
@@ -1077,7 +1057,7 @@ def q_dedup_jaccard_capped(spark, sf_dir):
         )
         .where(F.col("jaccard") >= 0.5)
     )
-    return out.select("doc_a", "doc_b", "common", "jaccard").orderBy("doc_a", "doc_b")
+    return out.select("doc_a", "doc_b", "common", "jaccard")
 
 
 _register(
@@ -1100,7 +1080,6 @@ _register(
     JOIN sizes sa ON sa.doc_id = doc_a
     JOIN sizes sb ON sb.doc_id = doc_b
     WHERE common::DOUBLE / (sa.n_sh + sb.n_sh - common)::DOUBLE >= 0.5
-    ORDER BY doc_a, doc_b
     """,
 )
 
@@ -1111,7 +1090,7 @@ def q_dedup_minhash_capped(spark, sf_dir):
     and the md5 work shrinks. Implemented as a broadcast anti-join
     against the small hot-shingle set."""
     d = _t(spark, sf_dir, "documents")
-    return D.minhash_signatures(d, num_hashes=8, max_doc_freq=5).orderBy("doc_id")
+    return D.minhash_signatures(d, num_hashes=8, max_doc_freq=5)
 
 
 def _minhash_capped_sql(cap: int = 5) -> str:
@@ -1125,7 +1104,7 @@ def _minhash_capped_sql(cap: int = 5) -> str:
     hot AS (SELECT g FROM grams GROUP BY g HAVING count(*) > {cap}),
     kept AS (SELECT doc_id, g FROM grams WHERE g NOT IN (SELECT g FROM hot)),
     h AS (SELECT doc_id, {MD5L.format(x='g')} % {D.MINHASH_PRIME} AS hm FROM kept)
-    SELECT doc_id, {mins} FROM h GROUP BY doc_id ORDER BY doc_id
+    SELECT doc_id, {mins} FROM h GROUP BY doc_id
     """
 
 
@@ -1148,7 +1127,7 @@ def q_mode_label_options(spark, sf_dir):
         F.col("mode_label").alias("mode_event"),
         "mode_count",
         "n_considered",
-    ).orderBy("user_id")
+    )
 
 
 _register(
@@ -1175,7 +1154,6 @@ _register(
                      THEN dom_cnt ELSE cnt END AS BIGINT) AS mode_count,
            CAST(total AS BIGINT) AS n_considered
     FROM ext WHERE rn = 1
-    ORDER BY user_id
     """,
 )
 
@@ -1197,7 +1175,7 @@ def q_gaussian_smooth(spark, sf_dir):
     # decimals would leave ~1e-4 per-run flip probability over 10k rows
     return out.select(
         "event_id", "user_id", F.round("smoothed", 5).alias("smoothed")
-    ).orderBy("event_id")
+    )
 
 
 _GS_W = (
@@ -1224,7 +1202,6 @@ _register(
                  END, 5) AS smoothed
     FROM pairs
     GROUP BY event_id, user_id, t
-    ORDER BY event_id
     """,
 )
 
@@ -1308,7 +1285,7 @@ def q_asof_cubic(spark, sf_dir):
         F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
         "click_value",
         F.col("purchase_value").alias("purchase_cubic"),
-    ).orderBy("event_id")
+    )
 
 
 # The SELECT expressions mirror asof._cubic_eval TERM FOR TERM (same
@@ -1356,7 +1333,7 @@ _ASOF_CUBIC_SQL = f"""
                + ((s3 - s2) * h) * m2
              ELSE y1 END
            END AS purchase_cubic
-    FROM m ORDER BY event_id
+    FROM m
 """
 
 
@@ -1405,7 +1382,7 @@ def q_pack_sequences(spark, sf_dir):
     )
     return out.select(
         "doc_id", "source", "n_words", "tape_start", "pack_id", "pack_offset"
-    ).orderBy("doc_id")
+    )
 
 
 _register(
@@ -1416,7 +1393,7 @@ _register(
     SELECT doc_id, source, n_words, tape_start,
            (tape_start // {PACK_CAPACITY})::BIGINT AS pack_id,
            (tape_start % {PACK_CAPACITY})::BIGINT AS pack_offset
-    FROM tape ORDER BY doc_id
+    FROM tape
     """,
 )
 
@@ -1443,7 +1420,7 @@ def q_pack_stats(spark, sf_dir):
         "source", "pack_id", "n_docs",
         F.col("pack_tokens").alias("pack_words"),
         "first_doc", "last_doc", "utilization",
-    ).orderBy("source", "pack_id")
+    )
 
 
 _register(
@@ -1460,7 +1437,7 @@ _register(
            SUM(n_words)::BIGINT AS pack_words,
            MIN(doc_id) AS first_doc, MAX(doc_id) AS last_doc,
            SUM(n_words)::DOUBLE / {float(PACK_CAPACITY)} AS utilization
-    FROM p GROUP BY source, pack_id ORDER BY source, pack_id
+    FROM p GROUP BY source, pack_id
     """,
 )
 
@@ -1483,7 +1460,7 @@ def q_chunk_text(spark, sf_dir):
         F.col("chunk_start").cast("long").alias("chunk_start"),
         "chunk_n_words",
         "chunk_digest",
-    ).orderBy("doc_id", "chunk_idx")
+    )
 
 
 _register(
@@ -1500,7 +1477,7 @@ _register(
            cs::BIGINT AS chunk_start,
            len(w[cs + 1 : cs + {CHUNK_WORDS}])::BIGINT AS chunk_n_words,
            md5(array_to_string(w[cs + 1 : cs + {CHUNK_WORDS}], ' ')) AS chunk_digest
-    FROM starts ORDER BY doc_id, chunk_idx
+    FROM starts
     """,
 )
 
@@ -1536,7 +1513,7 @@ def q_knn_ivf(spark, sf_dir):
         F.col("rank").cast("long").alias("rank"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
         "cosine",
-    ).orderBy("query_id", "rank")
+    )
 
 
 def _round_half_up6(v: float) -> float:
@@ -1591,7 +1568,6 @@ def _knn_ivf_sql() -> str:
            CAST(neighbor_id AS BIGINT) AS neighbor_id, cosine
     FROM (VALUES {", ".join(vals)})
          AS t(query_id, rank, neighbor_id, cosine)
-    ORDER BY query_id, rank
     """
 
 
@@ -1610,7 +1586,7 @@ def q_repetition(spark, sf_dir):
     """Gopher-style repetition signals over word bigrams: duplicate-gram
     fraction + top-gram character fraction per doc."""
     d = _t(spark, sf_dir, "documents")
-    return CU.repetition_stats(d, n=2).orderBy("doc_id")
+    return CU.repetition_stats(d, n=2)
 
 
 _register(
@@ -1648,7 +1624,6 @@ _register(
            ROUND((top_c * length(top_g))::DOUBLE / w.nc::DOUBLE, 6)
              AS top_gram_char_frac
     FROM words w LEFT JOIN agg ON agg.doc_id = w.doc_id
-    ORDER BY w.doc_id
     """,
 )
 
@@ -1660,7 +1635,7 @@ def q_decontaminate(spark, sf_dir):
     """Eval-set decontamination: per non-eval doc, 5-gram overlap with the
     deterministic ~5% eval subset (broadcast of the small eval gram set)."""
     d = _t(spark, sf_dir, "documents")
-    return CU.decontaminate(d, n=DECONTAM_N, eval_mod=DECONTAM_MOD).orderBy("doc_id")
+    return CU.decontaminate(d, n=DECONTAM_N, eval_mod=DECONTAM_MOD)
 
 
 _register(
@@ -1694,7 +1669,6 @@ _register(
            COALESCE(n_cont, 0) > 0 AS is_contaminated
     FROM marked m LEFT JOIN agg ON agg.doc_id = m.doc_id
     WHERE NOT m.ev
-    ORDER BY m.doc_id
     """,
 )
 
@@ -1715,7 +1689,7 @@ def q_hash_split(spark, sf_dir):
     under corpus growth, reproducible across engines."""
     d = _t(spark, sf_dir, "documents")
     out = CU.hash_split(d)
-    return out.select("doc_id", "source", "split_bucket", "split").orderBy("doc_id")
+    return out.select("doc_id", "source", "split_bucket", "split")
 
 
 _register(
@@ -1729,7 +1703,6 @@ _register(
              {MD5L.format(x="doc_id || ':split'")} % {CU.HASH_SPLIT_BUCKETS} AS b
       FROM documents
     )
-    ORDER BY doc_id
     """,
 )
 
@@ -1748,7 +1721,7 @@ def q_temporal_holdout(spark, sf_dir):
     )
     return out.select(
         "event_id", "user_id", "holdout_rn", "holdout_n", "split"
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -1766,7 +1739,6 @@ _register(
              COUNT(*) OVER (PARTITION BY user_id) AS holdout_n
       FROM events
     )
-    ORDER BY event_id
     """,
 )
 
@@ -1777,7 +1749,7 @@ def q_temperature_sample(spark, sf_dir):
     flag compares UNROUNDED doubles built from identical IEEE expression
     trees on both engines."""
     d = _t(spark, sf_dir, "documents")
-    return CU.source_temperature_sample(d).orderBy("doc_id")
+    return CU.source_temperature_sample(d)
 
 
 _register(
@@ -1792,7 +1764,6 @@ _register(
            (({MD5L.format(x="d.doc_id || ':tsample'")} % 1000000)::DOUBLE
              / 1000000.0) < kp AS kept
     FROM documents d JOIN w USING (source)
-    ORDER BY d.doc_id
     """,
 )
 
@@ -1813,8 +1784,7 @@ def q_scrub_pii(spark, sf_dir):
         (F.shiftright(h, 8) % 256).cast("string"),
         F.lit(" ext 555-01"), F.lpad((h % 100).cast("string"), 2, "0"),
     )
-    out = CU.scrub_pii(d.withColumn("text", aug))
-    return out.orderBy("doc_id")
+    return CU.scrub_pii(d.withColumn("text", aug))
 
 
 def _scrub_pii_sql() -> str:
@@ -1843,7 +1813,7 @@ def _scrub_pii_sql() -> str:
     SELECT doc_id, n_emails::BIGINT AS n_emails, n_ipv4::BIGINT AS n_ipv4,
            len(regexp_extract_all(t, '""" + phone + """'))::BIGINT AS n_phones,
            regexp_replace(t, '""" + phone + """', '<PHONE>', 'g') AS clean_text
-    FROM s2 ORDER BY doc_id
+    FROM s2
     """
     )
 
@@ -1863,7 +1833,7 @@ def q_token_novelty(spark, sf_dir):
     from .. import synth
 
     df = synth.token_table(spark, NOVELTY_DOCS)
-    return CU.token_ngram_novelty(df, n=NOVELTY_N).orderBy("doc_id")
+    return CU.token_ngram_novelty(df, n=NOVELTY_N)
 
 
 def _token_novelty_sql() -> str:
@@ -1896,7 +1866,6 @@ def _token_novelty_sql() -> str:
            CAST(n_novel AS BIGINT) AS n_novel, novelty_frac
     FROM (VALUES {", ".join(vals)})
          AS t(doc_id, n_grams, n_novel, novelty_frac)
-    ORDER BY doc_id
     """
 
 
@@ -1908,7 +1877,7 @@ def q_quality_filter(spark, sf_dir):
     stopword-ratio, duplicate-bigram and top-bigram rules folded into a
     reason bitmask + keep flag per doc."""
     d = _t(spark, sf_dir, "documents")
-    return CU.quality_filter(d).orderBy("doc_id")
+    return CU.quality_filter(d)
 
 
 def _quality_mask_ctes() -> str:
@@ -1970,7 +1939,7 @@ def _quality_filter_sql() -> str:
     WITH {_quality_mask_ctes()}
     SELECT doc_id, fail_mask::BIGINT AS fail_mask,
            (fail_mask = 0) AS kept
-    FROM mask ORDER BY doc_id
+    FROM mask
     """
 
 
@@ -1981,7 +1950,7 @@ def q_corpus_mix(spark, sf_dir):
     """Corpus-mix manifest: per (split, source) doc counts, survivors of
     temperature sampling + quality filtering, and surviving char mass."""
     d = _t(spark, sf_dir, "documents")
-    return CU.corpus_mix_report(d).orderBy("split", "source")
+    return CU.corpus_mix_report(d)
 
 
 def _corpus_mix_sql() -> str:
@@ -2015,7 +1984,6 @@ def _corpus_mix_sql() -> str:
     JOIN ts ON ts.doc_id = hs.doc_id
     JOIN mask ON mask.doc_id = hs.doc_id
     GROUP BY hs.split, hs.source
-    ORDER BY hs.split, hs.source
     """
 
 
@@ -2033,7 +2001,7 @@ def q_token_vocab_stats(spark, sf_dir):
     from .. import synth
 
     df = synth.token_table(spark, VOCAB_STATS_DOCS)
-    return CU.token_vocab_stats(df, vocab_size=synth.VOCAB).orderBy("source")
+    return CU.token_vocab_stats(df, vocab_size=synth.VOCAB)
 
 
 def _token_vocab_stats_sql() -> str:
@@ -2069,7 +2037,6 @@ def _token_vocab_stats_sql() -> str:
     FROM (VALUES {", ".join(vals)})
          AS t(source, n_docs, n_tokens, n_distinct_tokens,
               vocab_coverage, top_token, top_token_count)
-    ORDER BY source
     """
 
 
@@ -2092,7 +2059,7 @@ def q_expanding_zscore(spark, sf_dir):
     out = EN.expanding_zscore(ev, by="user_id", ts="ts", value="value")
     return out.select(
         "event_id", "user_id", "z_n_prev", "z_mean_prev", "z_var_prev", "z_score"
-    ).orderBy("event_id")
+    )
 
 
 # NULL-ts rows contribute nothing to any row's history (they may be
@@ -2143,7 +2110,7 @@ _ZS_ORACLE_CORE = f"""
 _register(
     "q_expanding_zscore",
     q_expanding_zscore,
-    _ZS_ORACLE_CORE + " ORDER BY event_id",
+    _ZS_ORACLE_CORE,
 )
 
 
@@ -2162,7 +2129,7 @@ def q_target_encode(spark, sf_dir):
     )
     return out.select(
         "event_id", "event_type", "te_bucket", "te_n_prev", "te_mean_prev", "te_enc"
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -2175,8 +2142,7 @@ _register(
         label="value",
         time_bucket=TE_BUCKET_SEC,
         select_cols="d.event_id, d.event_type, d.te_bucket",
-    )
-    + " ORDER BY event_id",
+    ),
 )
 
 
@@ -2220,7 +2186,7 @@ def q_asof_lagged_snapshots(spark, sf_dir):
     return out.select(
         "event_id", "user_id",
         *[f"pv_{tag}" for _, tag in LAG_SNAPSHOTS],
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -2245,7 +2211,6 @@ _register(
     FROM l1
     ASOF LEFT JOIN purchases p
       ON l1.user_id = p.user_id AND p.ts <= l1.ts - INTERVAL 24 HOURS
-    ORDER BY l1.event_id
     """,
 )
 
@@ -2256,9 +2221,7 @@ def q_frequency_encode(spark, sf_dir):
     one exchange."""
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     out = EN.frequency_encode(ev, by=["user_id", "event_type"], ts="ts")
-    return out.select("event_id", "user_id", "event_type", "fe_n_prev").orderBy(
-        "event_id"
-    )
+    return out.select("event_id", "user_id", "event_type", "fe_n_prev")
 
 
 _register(
@@ -2275,7 +2238,6 @@ _register(
                     RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
          peer AS (PARTITION BY user_id, event_type ORDER BY e ASC NULLS FIRST
                   RANGE BETWEEN CURRENT ROW AND CURRENT ROW)
-    ORDER BY event_id
     """,
 )
 
@@ -2294,9 +2256,7 @@ def q_decayed_features(spark, sf_dir):
     out = EN.decayed_features(
         ev, by="user_id", ts="ts", value="value", bucket_seconds=DECAY_BUCKET_SEC
     )
-    return out.select("event_id", "user_id", "decay_sum", "decay_cnt").orderBy(
-        "event_id"
-    )
+    return out.select("event_id", "user_id", "decay_sum", "decay_cnt")
 
 
 _register(
@@ -2309,8 +2269,7 @@ _register(
         value="value",
         select_cols="w.event_id, w.user_id",
         bucket_seconds=DECAY_BUCKET_SEC,
-    )
-    + " ORDER BY event_id",
+    ),
 )
 
 
@@ -2354,7 +2313,7 @@ def q_feature_assembly(spark, sf_dir):
     return out.select(
         "event_id", "user_id", "click_value",
         "z_score", "decay_sum", "decay_cnt", "purchase_value",
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -2386,7 +2345,6 @@ _register(
       ON c.user_id = p.user_id AND p.ts <= c.ts
     JOIN zd ON zd.event_id = c.event_id
     JOIN dc ON dc.event_id = c.event_id
-    ORDER BY c.event_id
     """,
 )
 
@@ -2424,7 +2382,7 @@ def q_bpe_train(spark, sf_dir):
         rows,
         schema="iteration int, t1 int, t2 int, new_token int, "
         "pair_count long, tokens_after long",
-    ).orderBy("iteration")
+    )
 
 
 def _bpe_train_sql() -> str:
@@ -2474,7 +2432,6 @@ def _bpe_train_sql() -> str:
            CAST(tokens_after AS BIGINT) AS tokens_after
     FROM (VALUES {", ".join(vals)})
          AS t(iteration, t1, t2, new_token, pair_count, tokens_after)
-    ORDER BY iteration
     """
 
 
@@ -2493,7 +2450,7 @@ def q_robust_outlier(spark, sf_dir):
     return out.select(
         "event_id", "user_id", "rb_n_prev", "rb_median_prev", "rb_iqr_prev",
         F.col("rb_is_outlier").cast("long").alias("rb_is_outlier"),
-    ).orderBy("event_id")
+    )
 
 
 _RB_FRAME = (
@@ -2524,7 +2481,7 @@ _register(
              (CAST(value AS DOUBLE) < q1 - 1.5 * (q3 - q1)
               OR CAST(value AS DOUBLE) > q3 + 1.5 * (q3 - q1))
            END AS BIGINT) AS rb_is_outlier
-    FROM w ORDER BY event_id
+    FROM w
     """,
 )
 
@@ -2546,7 +2503,7 @@ def q_robust_outlier_bucketed(spark, sf_dir):
         "event_id", "user_id", "rb_bucket", "rb_n_prev", "rb_median_prev",
         "rb_iqr_prev",
         F.col("rb_is_outlier").cast("long").alias("rb_is_outlier"),
-    ).orderBy("event_id")
+    )
 
 
 _RB2_VAL = "CASE WHEN bk IS NOT NULL THEN value END"
@@ -2580,7 +2537,7 @@ _register(
              (CAST(value AS DOUBLE) < q1 - 1.5 * (q3 - q1)
               OR CAST(value AS DOUBLE) > q3 + 1.5 * (q3 - q1))
            END AS BIGINT) AS rb_is_outlier
-    FROM w ORDER BY event_id
+    FROM w
     """,
 )
 
@@ -2609,10 +2566,9 @@ def q_lm_score(spark, sf_dir):
     corpus = corpus.persist()
     try:
         model = LM.bigram_model(corpus)
-        out = LM.score_docs(
+        return LM.score_docs(
             corpus, model, alphabet=LM_ALPHABET, rare_threshold=LM_RARE_THR
         )
-        return out.orderBy("doc_id")
     finally:
         # score_docs already collected the model; the returned plan
         # re-reads the cached corpus once when the driver materializes it.
@@ -2663,7 +2619,6 @@ def _lm_score_sql() -> str:
            CAST(lm_n_rare AS BIGINT) AS lm_n_rare
     FROM (VALUES {", ".join(vals)})
          AS t(doc_id, n_bigrams, lm_mean_prob, lm_min_prob, lm_n_rare)
-    ORDER BY doc_id
     """
 
 
@@ -2691,7 +2646,7 @@ def q_feature_drift(spark, sf_dir):
     return MO.feature_drift(
         ev, by="event_type", ts="ts", value_col="value",
         cut_ts=DRIFT_CUT, bin_width=DRIFT_BIN_W, n_bins=DRIFT_BINS,
-    ).orderBy("event_type")
+    )
 
 
 _register(
@@ -2700,7 +2655,7 @@ _register(
     MO.drift_oracle_sql(
         "events", by="event_type", ts="ts", value_col="value",
         cut_ts=DRIFT_CUT, bin_width=DRIFT_BIN_W, n_bins=DRIFT_BINS,
-    ) + " ORDER BY event_type",
+    ),
 )
 
 
@@ -2719,7 +2674,7 @@ def q_backtest_folds(spark, sf_dir):
     return MO.backtest_folds(
         ev, ts="ts", by="event_type", value_col="value", user_col="user_id",
         origin=BT_ORIGIN, step_days=BT_STEP_DAYS, n_folds=BT_FOLDS,
-    ).orderBy("fold", "role", "event_type")
+    )
 
 
 _register(
@@ -2729,7 +2684,7 @@ _register(
         "events", ts="ts", by="event_type", value_col="value",
         user_col="user_id", origin=BT_ORIGIN, step_days=BT_STEP_DAYS,
         n_folds=BT_FOLDS,
-    ) + " ORDER BY fold, role, event_type",
+    ),
 )
 
 
@@ -2743,14 +2698,13 @@ def q_bm25_topk(spark, sf_dir):
     has the measurements); production uses idf="native" (in-engine
     F.log, no LUT) at the cost of 1-ulp oracle agreement."""
     d = _t(spark, sf_dir, "documents")
-    return RV.bm25_topk(d, k=BM25_TOPK, idf="lut").orderBy("doc_id", "rank")
+    return RV.bm25_topk(d, k=BM25_TOPK, idf="lut")
 
 
 _register(
     "q_bm25_topk",
     q_bm25_topk,
-    RV.bm25_oracle_sql("documents", k=BM25_TOPK)
-    + " ORDER BY doc_id, rank",
+    RV.bm25_oracle_sql("documents", k=BM25_TOPK),
 )
 
 
@@ -2776,7 +2730,7 @@ def q_drift_windowed(spark, sf_dir):
         F.col("win_start").cast("timestamp").cast("long").alias("win_start_epoch"),
         "event_type", "n_ref", "n_cur", "null_ref", "null_cur",
         "tv_distance", "max_bin_shift", "worst_bin",
-    ).orderBy("win_start_epoch", "event_type")
+    )
 
 
 _register(
@@ -2786,7 +2740,7 @@ _register(
         "events", by="event_type", ts="ts", value_col="value",
         cut_ts=DRIFT_CUT, bin_width=DRIFT_BIN_W, n_bins=DRIFT_BINS,
         window_sec=86400,
-    ) + " ORDER BY win_start_epoch, event_type",
+    ),
 )
 
 
@@ -2809,7 +2763,7 @@ def q_winsorize(spark, sf_dir):
         F.col("value").cast("double").alias("value"),
         "wz_lo", "wz_hi", "wz_value",
         F.col("wz_clipped").cast("long").alias("wz_clipped"),
-    ).orderBy("event_id")
+    )
 
 
 _register(
@@ -2834,7 +2788,6 @@ _register(
                            OR CAST(e.value AS DOUBLE) > q.wz_hi)
                 END AS BIGINT) AS wz_clipped
     FROM events e LEFT JOIN q USING (event_type)
-    ORDER BY e.event_id
     """,
 )
 
@@ -2863,7 +2816,7 @@ def q_categorical_drift(spark, sf_dir):
         ev, by="cohort", ts="ts", value_col="event_type",
         cut_ts=DRIFT_CUT, bin_width=1.0, n_bins=CAT_BINS,
         bin_sql=_CAT_BIN_SPARK,
-    ).orderBy("cohort")
+    )
 
 
 _register(
@@ -2874,5 +2827,5 @@ _register(
         by="cohort", ts="ts", value_col="event_type",
         cut_ts=DRIFT_CUT, bin_width=1.0, n_bins=CAT_BINS,
         bin_sql=_CAT_BIN_DUCK,
-    ) + " ORDER BY cohort",
+    ),
 )

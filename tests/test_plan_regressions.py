@@ -17,8 +17,9 @@ counts are pinned exactly as audited (PLANS.md documents each shape).
 
 The similarity operators are pinned too (Window, Exchange and Arrow
 counts, no row-at-a-time Python), so their single numpy path keeps its
-shape, and so are the chained Arrow stages of the flagship, its
-checkpoint unit and the scan -> as-of -> features pipeline.
+shape, and so are the dedup band joins, the chained Arrow stages of the
+flagship, its checkpoint unit and the scan -> as-of -> features
+pipeline. No registered query may end in a display sort.
 """
 
 from __future__ import annotations
@@ -308,9 +309,10 @@ SIMILARITY_CASES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(SIMILARITY_CASES))
-def test_similarity_plan_pinned(spark, name):
-    build, want_win, want_ex, want_arrow, why = SIMILARITY_CASES[name]
+def _assert_pinned(spark, name, case) -> dict[str, int]:
+    """Check a (builder, Window, Exchange, Arrow, why) case; return the
+    plan's counts."""
+    build, want_win, want_ex, want_arrow, why = case
     c = plan_counts(build(spark))
     assert c["pyrow"] == 0, f"{name}: row-at-a-time Python in the plan"
     got = (c["win"], c["exch"], c["arrow"])
@@ -318,3 +320,68 @@ def test_similarity_plan_pinned(spark, name):
         f"{name}: (Window, Exchange, Arrow) = {got}, audited shape is "
         f"{(want_win, want_ex, want_arrow)} ({why})"
     )
+    return c
+
+
+@pytest.mark.parametrize("name", sorted(SIMILARITY_CASES))
+def test_similarity_plan_pinned(spark, name):
+    _assert_pinned(spark, name, SIMILARITY_CASES[name])
+
+
+def _docs(spark):
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    rows = [
+        (f"d{i:02d}", " ".join(words[(i + j) % 10] for j in range(8 + i % 3)))
+        for i in range(20)
+    ]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+# name -> (builder(spark), expected Window, Exchange, Arrow counts, why).
+# The band joins are equi-joins: no Cartesian product may appear.
+DEDUP_CASES = {
+    "minhash_lsh_pairs": (
+        lambda s: D.minhash_lsh_pairs(_docs(s), num_hashes=4, band_rows=1),
+        0, 5, 0,
+        "signature groupBy(doc_id) per join side + the (band, key) "
+        "equi-join's two sides + the per-pair band count",
+    ),
+    "ngram_jaccard_pairs": (
+        lambda s: D.ngram_jaccard_pairs(_docs(s), n=2, threshold=0.1),
+        0, 7, 0,
+        "shingle equi-join's two sides + the common count + one "
+        "shingle-count groupBy per side + the re-keys to doc_a and doc_b",
+    ),
+    "embedding_neardup_pairs": (
+        lambda s: D.embedding_neardup_pairs(_embeddings(s), threshold=0.5),
+        0, 0, 1,
+        "the corpus matrix rides a SparkContext broadcast; one "
+        "mapInPandas over a row-index range, no shuffle",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DEDUP_CASES))
+def test_dedup_plan_pinned(spark, name):
+    c = _assert_pinned(spark, name, DEDUP_CASES[name])
+    assert c["cartesian"] == 0, f"{name}: a band join became a cross join"
+
+
+def test_registered_queries_have_no_display_sort(spark):
+    """Results are multisets: every consumer (the driver, check_oracle,
+    the benchmark's EXCEPT ALL check) compares them order-insensitively,
+    so no registered query may end in a global sort. Walking down from
+    the optimized plan's root through Projects must not reach one. A
+    sort under a LIMIT (q_topk plans as GlobalLimit, then
+    TakeOrderedAndProject) is not a display sort and passes."""
+    import __spark_entry__ as entry
+    from scripts.plan_audit import SF_DIR
+
+    offenders = []
+    for name, build in sorted(entry.queries().items()):
+        node = build(spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+        while node.nodeName() == "Project":
+            node = node.child()
+        if node.nodeName() == "Sort" and getattr(node, "global")():
+            offenders.append(name)
+    assert not offenders, f"queries ending in a global sort: {offenders}"
