@@ -4,10 +4,14 @@ Runs the headline workload (as-of join + feature extraction over the
 deterministic token table, BASELINE.json's primary metric) plus every
 relational query from ``__spark_entry__.queries()`` at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]``, and prints ONE JSON line:
+``local[$SPARK_GRAFT_CPUS]``. The full record — every query's best time
+and rep list, the flagship shots, errors — goes to ``BENCH_LOCAL_latest.json``
+next to this file; the last stdout line is a headline of at most 1 KB:
 
-    {"metric": ..., "value": <total sec>, "unit": "sec",
-     "queries": {name: sec, ...}, "sf": ..., "extras": {...}}
+    {"metric": "bench_suite_seconds", "value": <total sec>, "unit": "sec",
+     "sequences_per_sec": ..., "sequences_per_sec_best": ...,
+     "queries": <count>, "failed_queries": <count>, "methodology": 4,
+     "cores": ..., "sf": ..., "record": "BENCH_LOCAL_latest.json"}
 
 Timing methodology (v4, tagged in the output JSON): each query is
 materialized with a noop-format write (full execution, no driver
@@ -39,12 +43,33 @@ from image_feature_extraction_spark.plans.flagship import (  # noqa: E402
 # docs/s at local[32] — 48k docs ≈ 2-3 s steady-state, enough to amortize
 # scheduling while keeping the per-round bench fast.
 FLAGSHIP_DOCS = int(os.environ.get("BENCH_FLAGSHIP_DOCS", "48000"))
+RECORD_FILE = "BENCH_LOCAL_latest.json"
 
 
 def _materialize(df) -> int:
     """Full execution without driver transfer."""
     df.write.format("noop").mode("overwrite").save()
     return 0
+
+
+def headline(record: dict) -> str:
+    """The full record's one-line summary, printed last. Its size does not
+    grow with the suite, so it fits a 2 KB log tail; the full record on one
+    line is ~2.5 KB at 84 queries."""
+    extras = record["extras"]
+    return json.dumps({
+        "metric": record["metric"],
+        "value": record["value"],
+        "unit": record["unit"],
+        "sequences_per_sec": extras.get("sequences_per_sec"),
+        "sequences_per_sec_best": extras.get("sequences_per_sec_best"),
+        "queries": len(record["queries"]),
+        "failed_queries": sum(v < 0 for v in record["queries"].values()),
+        "methodology": record["methodology"]["version"],
+        "cores": record["cores"],
+        "sf": record["sf"],
+        "record": RECORD_FILE,
+    })
 
 
 def _scaling_worker(cpus: int, n_docs: int) -> None:
@@ -179,6 +204,7 @@ def main() -> None:
     _materialize(flagship_pipeline(spark, 2000))
 
     timings: dict[str, float] = {}
+    reps_by_query: dict[str, list[float]] = {}
     extras: dict[str, float] = {}
 
     # stats prepared once OUTSIDE the timer (it pre-exists in production;
@@ -249,6 +275,7 @@ def main() -> None:
                 if len(reps) >= 2 and reps[-1] > 0.7 * min(reps[:-1]):
                     break  # plateau: last rep no longer materially faster
             timings[name] = round(min(reps), 3)
+            reps_by_query[name] = [round(r, 3) for r in reps]
         except Exception as e:  # a failing query must not kill the bench
             timings[name] = -1.0
             extras[f"error_{name}"] = f"{type(e).__name__}: {e}"[:200]
@@ -271,35 +298,37 @@ def main() -> None:
     extras["flagship_shots_sec"] = [round(s, 3) for s in flag_shots]
 
     total = round(sum(v for v in timings.values() if v > 0), 3)
-    print(
-        json.dumps(
-            {
-                "metric": "bench_suite_seconds",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "extras": extras,
-                # ADVICE r4: tag the methodology so BENCH_*.json diffs can
-                # detect incomparable runs. v1 = cold best-of-2 (<= r3);
-                # v2 = untimed warm-up + rep escalation (r4); v3 = v2 +
-                # flagship median of 5 suite-interleaved shots (r5);
-                # v4 = v3, but the queries no longer end in a display
-                # sort, so per-query times are not comparable with v3.
-                "methodology": {
-                    "version": 4,
-                    "queries": "untimed warm-up + best of 2-5 escalating reps",
-                    # actual shot count, not an aspirational label: a
-                    # filtered/partial registry yields fewer interleave
-                    # positions, and a shot can fail
-                    "flagship": (
-                        f"median of {len(flag_shots)} shots "
-                        "interleaved across the suite"
-                    ),
-                },
-            }
-        )
-    )
+    record = {
+        "metric": "bench_suite_seconds",
+        "value": total,
+        "unit": "sec",
+        "queries": timings,
+        "reps": reps_by_query,
+        "sf": sf,
+        "cores": int(cpus),
+        "extras": extras,
+        # ADVICE r4: tag the methodology so BENCH_*.json diffs can
+        # detect incomparable runs. v1 = cold best-of-2 (<= r3);
+        # v2 = untimed warm-up + rep escalation (r4); v3 = v2 +
+        # flagship median of 5 suite-interleaved shots (r5);
+        # v4 = v3, but the queries no longer end in a display
+        # sort, so per-query times are not comparable with v3.
+        "methodology": {
+            "version": 4,
+            "queries": "untimed warm-up + best of 2-5 escalating reps",
+            # actual shot count, not an aspirational label: a
+            # filtered/partial registry yields fewer interleave
+            # positions, and a shot can fail
+            "flagship": (
+                f"median of {len(flag_shots)} shots "
+                "interleaved across the suite"
+            ),
+        },
+    }
+    record_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), RECORD_FILE)
+    with open(record_path, "w") as f:
+        json.dump(record, f, indent=1)
+    print(headline(record))
     spark.stop()
 
 
