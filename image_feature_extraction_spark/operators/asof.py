@@ -9,21 +9,16 @@ Zero temporal leakage: a matched right timestamp NEVER exceeds the left
 timestamp in backward mode.
 
 Physical strategies (``asof_join_auto`` picks between the first two by a
-bounded right-side row-count probe; the rest are opt-in):
+bounded right-side row-count probe):
 
-1. ``asof_join`` — salted/range-bucketed union-window merge (the 100 TB
-   path), 100% JVM-side / whole-stage codegen. Both sides are bucketed on
-   (entity, floor(ts/W)). Per (entity, bucket) the latest-earlier /
-   earliest-later right payload is computed with one SMALL bucket-level
-   aggregation + a bucket-granularity window (rows = #buckets, not
-   #events), and replicated into each left bucket ("carry-in boundary
-   rows"). Left rows, in-bucket right rows, and carry rows are then
-   unioned and merged with one window partitioned by (entity, bucket) —
-   so a hot entity's year of history splits into many independent tasks
-   and no single task ever sees the whole entity (the skew story a plain
-   entity-partitioned window cannot give). Shuffle cost: one exchange of
-   left+right on (entity, bucket) plus one tiny exchange of bucket
-   aggregates.
+1. ``asof_join`` — the entity-window merge, all in the JVM. Left rows and
+   right payload rows are unioned and partitioned by the ``by`` keys
+   alone (one exchange). Each direction is one ``last(ignorenulls)``
+   over a running frame: backward walks time ascending, forward walks it
+   descending, nearest and interpolate combine the two. A running frame
+   costs O(n) per partition. Limit: one entity's whole history is one
+   task. Spark's window buffer spills to disk, so memory stays safe, but
+   wall time is bounded by the hottest entity.
 
 2. ``asof_join_broadcast`` — for a SMALL right side (dimension/stats
    table): broadcast + map-side vectorized searchsorted, ZERO shuffle of
@@ -32,17 +27,16 @@ bounded right-side row-count probe; the rest are opt-in):
    the 10^12-left-rows x 10^5-right-rows production shape.
 
 3. ``asof_join_cogroup`` — per-partition index slices for a right side
-   ABOVE broadcast size with benign entity skew: both sides hash-shuffled
-   on entity, per-entity searchsorted merge; each task holds only its
-   entities' slice of the index (never the whole 3 GB stats table).
+   ABOVE broadcast size: both sides hash-shuffled on entity, per-entity
+   searchsorted merge; each task holds only its entities' slice of the
+   index (never the whole 3 GB stats table). The only large-right-side
+   home of direction="cubic".
 
-4. ``asof_join_window`` — union + last(ignorenulls) window partitioned by
-   entity alone. One shuffle, minimal plan — optimal when no entity's
-   history overwhelms one task. Used as a cross-check in tests.
-
-Directions: backward / forward / nearest, plus "interpolate" (linear
-interpolation between the bracketing samples, reference N8) on the
-bucketed, broadcast, and cogroup strategies.
+Directions: backward / forward / nearest and "interpolate" (linear
+interpolation between the bracketing samples, reference N8) on every
+strategy; "cubic" on broadcast and cogroup. Among duplicate right
+timestamps, backward matches the greatest payload and forward the least
+(Spark struct ordering: null smallest, NaN greatest).
 
 DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 """
@@ -117,17 +111,33 @@ def _tuple_sortable(dt) -> bool:
     return not isinstance(dt, (MapType, StructType))
 
 
+_NAN = "__asof_nan_"
+
+
+def _nan_flags(right: DataFrame, rcols, prefix: str = ""):
+    """isnan() of each float right column, to collect next to it: pandas
+    holds null and NaN alike, but Spark orders null smallest and NaN
+    greatest, and _dup_ts_sort follows Spark."""
+    from pyspark.sql.types import DoubleType, FloatType
+
+    return [
+        F.isnan(c).alias(_NAN + prefix + c)
+        for c in rcols
+        if isinstance(right.schema[c].dataType, (DoubleType, FloatType))
+    ]
+
+
 def _dup_ts_sort(rp, head_cols, payload_cols, rschema, prefix: str = ""):
     """Deterministic duplicate-timestamp sort shared by the broadcast index
     build and the cogroup merge: order by (keys, ts, payload...) replicating
-    the bucketed strategy's struct-max/min contract (backward matches the
-    greatest payload among duplicate right timestamps, forward the least;
-    null payload = smallest, hence na_position='first' like Spark struct
-    ordering). Array-typed payload columns — which pandas cannot natively
-    order — are sorted via order-equivalent nested tuples; Map/Struct
-    payloads are excluded from the tie-break (documented limitation: among
-    duplicate timestamps differing ONLY in a map/struct payload the stable
-    sort keeps input order)."""
+    asof_join's struct ordering (backward matches the greatest payload
+    among duplicate right timestamps, forward the least; null payload =
+    smallest, hence na_position='first', and a NaN flagged by _nan_flags
+    greatest, like Spark). Array-typed payload columns — which pandas
+    cannot natively order — are sorted via order-equivalent nested
+    tuples; Map/Struct payloads are excluded from the tie-break
+    (documented limitation: among duplicate timestamps differing ONLY in
+    a map/struct payload the stable sort keeps input order)."""
     from pyspark.sql.types import ArrayType
 
     keys = [prefix + c for c in head_cols]
@@ -142,11 +152,13 @@ def _dup_ts_sort(rp, head_cols, payload_cols, rschema, prefix: str = ""):
             assigns[sk] = rp[col].map(_spark_array_key, na_action="ignore")
             keys.append(sk)
         else:
+            if _NAN + col in rp:
+                keys.append(_NAN + col)
             keys.append(col)
     if assigns:
         rp = rp.assign(**assigns)
     rp = rp.sort_values(keys, kind="stable", na_position="first")
-    return rp.drop(columns=list(assigns)) if assigns else rp
+    return rp.drop(columns=[c for c in rp.columns if c.startswith(("__asof_sk_", _NAN))])
 
 
 def _np_asof_match(rts, t, direction: str, tolerance):
@@ -193,7 +205,7 @@ def _np_asof_match(rts, t, direction: str, tolerance):
         tb, tf = rts[bi], rts[fi]
         if tolerance is not None:
             ok &= np.maximum(t - tb, tf - t) <= tolerance
-        # expression tree mirrors the bucketed Catalyst strategy exactly
+        # expression tree mirrors asof_join's Catalyst expression exactly
         # (IEEE-identical): frac = (t - tb) / (tf - tb), 0 when tf == tb
         denom = tf - tb
         frac = np.where(denom > 0, (t - tb) / np.where(denom > 0, denom, 1.0), 0.0)
@@ -259,12 +271,12 @@ def _resolve_output_cols(
 ):
     """Shared strategy prologue: defaulted right columns, output renames,
     and the argument validations every strategy needs (kept in ONE place
-    so the four physical strategies cannot drift):
+    so the three physical strategies cannot drift):
 
     - right_cols must not contain `on` or a `by` key (a duplicate alias is
       an ambiguous-attribute error three plans later; include_right_on is
       the supported way to get the matched right timestamp);
-    - interpolate requires numeric right columns (the bucketed cast would
+    - interpolate requires numeric right columns (asof_join's cast would
       silently null strings while numpy would crash) and cannot return a
       single matched right timestamp.
 
@@ -305,13 +317,15 @@ def _resolve_output_cols(
 def _ts_double(df: DataFrame, on: str):
     """Any orderable time column -> double (epoch seconds for timestamps).
     TIMESTAMP_NTZ has no direct double cast in Spark 4; route via timestamp
-    (session timezone is pinned to UTC in session.py, so this is stable)."""
+    (session timezone is pinned to UTC in session.py, so this is stable).
+    A NaN time becomes null, so it never matches — Spark would otherwise
+    order it after every time, and broadcast/cogroup treat it as null."""
     from pyspark.sql.types import TimestampNTZType
 
     c = F.col(on)
     if isinstance(df.schema[on].dataType, TimestampNTZType):
         c = c.cast("timestamp")
-    return c.cast("double")
+    return F.nanvl(c.cast("double"), F.lit(None).cast("double"))
 
 
 def asof_join(
@@ -323,15 +337,13 @@ def asof_join(
     direction: str = "backward",
     tolerance: float | None = None,
     suffix: str = "_right",
-    bucket_width: float = 86400.0,
+    bucket_width: float | None = None,
     include_right_on: bool = False,
 ) -> DataFrame:
-    """Bucketed as-of join. See module docstring.
+    """Entity-window as-of join, all in the JVM. See module docstring.
 
-    bucket_width is in the units of ``cast(on AS double)`` (seconds for
-    timestamps). Choose it so one entity-bucket of events fits a task
-    comfortably; at 10^12 rows with hourly hot-entity bursts, one day is a
-    sane default. Correctness is bucket-width invariant (tested).
+    ``bucket_width`` is accepted and ignored, for callers that still pass
+    it.
 
     direction="interpolate" (reference N8: linear interpolation between
     grid samples, tools/Resample.cxx:83-99, ExtractWindow.cxx:134-150)
@@ -353,166 +365,70 @@ def asof_join(
     )
     if direction == "cubic":
         # the 4-point stencil needs two rows on EACH side of every probe;
-        # the bucketed carry machinery replicates only the single nearest
-        # boundary row per side, so cubic lives on the index-based
-        # strategies (broadcast/cogroup) where the full per-entity sorted
-        # history is addressable
+        # a running fill carries only the nearest one
         raise ValueError(
             "direction='cubic' is supported by asof_join_broadcast and "
-            "asof_join_cogroup (index-based strategies), not the bucketed "
-            "strategy"
+            "asof_join_cogroup (index-based strategies), not asof_join"
         )
-    want_back = direction in ("backward", "nearest", "interpolate")
-    want_fwd = direction in ("forward", "nearest", "interpolate")
 
-    W = float(bucket_width)
-    if not (W > 0):  # also catches NaN
-        raise ValueError(
-            f"bucket_width must be a positive finite number, got {bucket_width!r}"
-            " (a negative width inverts bucket order vs time and silently"
-            " loses cross-bucket matches)"
-        )
-    lf = left.withColumn("_ts_d", _ts_double(left, on)).withColumn(
-        "_b", F.floor(F.col("_ts_d") / F.lit(W)).cast("long")
-    )
-    # Rename right-side columns up front so self-lineage (left and right
-    # derived from one scan) can't collide on attribute names.
+    # Right rows are renamed so self-lineage (left and right derived from
+    # one scan) can't collide on attribute names. Null right timestamps are
+    # unmatchable and null BY keys never join under SQL equality (the
+    # oracle's ASOF ... ON a.k = b.k), so both are dropped; left rows with
+    # a null ts or key come back unmatched. The payload struct leads with
+    # the ts, so struct order ranks duplicate right timestamps by payload.
     P = "_r_"
-    right2 = right.select(
-        *[F.col(c).alias(P + c) for c in by_l],
-        _ts_double(right, on).alias("_ts_d"),
-        F.col(on).alias(P + on),
+    r_by = [P + c for c in by_l]
+    r_ts = _ts_double(right, on)
+    r_ok = r_ts.isNotNull()
+    for c in by_l:
+        r_ok = r_ok & F.col(c).isNotNull()
+    payload = F.struct(
+        r_ts.alias("_p_ts"),
+        F.col(on).alias("_p_on"),
         *[F.col(c).alias(P + c) for c in rcols],
     )
-    # null right timestamps are unmatchable (every direction compares
-    # against them) and null BY keys never join under SQL equality (the
-    # oracle's ASOF ... ON a.k = b.k semantics; the pandas strategies drop
-    # them via groupby) — filter both so every strategy agrees. Left rows
-    # with null ts/keys land in partitions with no right rows and come
-    # back unmatched.
-    r_nonnull = F.col("_ts_d").isNotNull()
-    for c in by_l:
-        r_nonnull = r_nonnull & F.col("_r_" + c).isNotNull()
-    rf = right2.where(r_nonnull).withColumn(
-        "_b", F.floor(F.col("_ts_d") / F.lit(W)).cast("long")
-    )
-    r_by = [P + c for c in by_l]
-    r_on = P + on
-    r_rcols = [P + c for c in rcols]
-
-    # Payload struct: ts first, then the right columns — struct ordering
-    # gives a deterministic max/min among equal-timestamp right rows.
-    payload = F.struct(
-        F.col("_ts_d").alias("_p_ts"),
-        F.col(r_on).alias("_p_on"),
-        *[F.col(c).alias(c) for c in r_rcols],
-    )
-    rpay = rf.select(*r_by, "_b", "_ts_d", payload.alias("_p"))
-    ptype = rpay.schema["_p"].dataType
-    # null-ts left rows live in the NULL bucket; it must never receive a
-    # carry (NULL sorts first in the carry window, so a forward carry
-    # would hand a null-ts row the globally earliest right payload — a
-    # match a null timestamp can't have)
-    lbuckets = (
-        lf.select(*[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)], "_b")
-        .where(F.col("_b").isNotNull())
-        .distinct()
-    )
-
-    def _carries(forward: bool):
-        """Bucket-granularity carry: for each LEFT bucket, the latest right
-        payload from strictly-earlier buckets (backward) or the earliest
-        from strictly-later buckets (forward). Window rows = #buckets."""
-        if forward:
-            agg = rpay.groupBy(*r_by, "_b").agg(F.min("_p").alias("_p"))
-            marker_tag = 2  # marker sorts AFTER same-bucket right aggregates
-        else:
-            agg = rpay.groupBy(*r_by, "_b").agg(F.max("_p").alias("_p"))
-            marker_tag = 0  # marker sorts BEFORE same-bucket right aggregates
-        u = agg.select(*r_by, "_b", F.lit(1).alias("_mtag"), "_p").unionByName(
-            lbuckets.select(
-                *r_by, "_b", F.lit(marker_tag).alias("_mtag"),
-                F.lit(None).cast(ptype).alias("_p"),
-            )
-        )
-        w = Window.partitionBy(*r_by).orderBy("_b", "_mtag")
-        if forward:
-            carry = F.first("_p", ignorenulls=True).over(
-                w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-            )
-        else:
-            carry = F.last("_p", ignorenulls=True).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-        return (
-            u.withColumn("_c", carry)
-            .where((F.col("_mtag") == marker_tag) & F.col("_c").isNotNull())
-            .select(*r_by, "_b", F.col("_c._p_ts").alias("_ts_d"), F.col("_c").alias("_p"))
-        )
-
-    # ---- the merge union: left rows + in-bucket right rows (+ carries) ----
-    # _tag: 0 = right-ish row, 1 = left row. _pb / _pf carry the payload for
-    # the backward / forward fill respectively (carry rows feed only their
-    # own direction; in-bucket right rows feed both).
-    null_p = F.lit(None).cast(ptype)
-    lkeep = [c for c in left.columns]
-    l_u = lf.select(
+    rpay = right.where(r_ok).select(
         *[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)],
-        "_b", "_ts_d", F.lit(1).alias("_tag"),
-        null_p.alias("_pb"), null_p.alias("_pf"),
-        *[F.col(c).alias("_l_" + c) for c in lkeep],
+        r_ts.alias("_ts_d"),
+        payload.alias("_p"),
     )
-    null_lcols = [
-        F.lit(None).cast(left.schema[c].dataType).alias("_l_" + c) for c in lkeep
-    ]
-    r_u = rpay.select(
-        *r_by, "_b", "_ts_d", F.lit(0).alias("_tag"),
-        F.col("_p").alias("_pb") if want_back else null_p.alias("_pb"),
-        F.col("_p").alias("_pf") if want_fwd else null_p.alias("_pf"),
-        *null_lcols,
-    )
-    parts = [l_u, r_u]
-    if want_back:
-        parts.append(
-            _carries(forward=False).select(
-                *r_by, "_b", "_ts_d", F.lit(0).alias("_tag"),
-                F.col("_p").alias("_pb"), null_p.alias("_pf"), *null_lcols,
-            )
-        )
-    if want_fwd:
-        parts.append(
-            _carries(forward=True).select(
-                *r_by, "_b", "_ts_d", F.lit(0).alias("_tag"),
-                null_p.alias("_pb"), F.col("_p").alias("_pf"), *null_lcols,
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
+    ptype = rpay.schema["_p"].dataType
 
-    # Backward: right sorts before left at equal ts -> inclusive match; among
-    # equal-ts right rows last() takes the struct-max payload (deterministic).
-    wb = (
-        Window.partitionBy(*r_by, "_b")
-        .orderBy(F.col("_ts_d").asc(), F.col("_tag").asc(), F.col("_pb").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    lkeep = left.columns
+    u = left.select(
+        *[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)],
+        _ts_double(left, on).alias("_ts_d"),
+        F.lit(1).alias("_tag"),
+        F.lit(None).cast(ptype).alias("_p"),
+        *[F.col(c).alias("_l_" + c) for c in lkeep],
+    ).unionByName(
+        rpay.select(
+            *r_by, "_ts_d", F.lit(0).alias("_tag"), "_p",
+            *[F.lit(None).cast(left.schema[c].dataType).alias("_l_" + c) for c in lkeep],
+        )
     )
-    # Forward: left sorts before right at equal ts -> the equal-ts right row
-    # is in the following frame; first() takes the struct-min payload (_pf
-    # ASC), agreeing with the carry aggregate's F.min for duplicate right
-    # timestamps — the match is identical whether it arrives via carry or
-    # in-bucket, for any bucket_width.
-    wf = (
-        Window.partitionBy(*r_by, "_b")
-        .orderBy(F.col("_ts_d").asc(), F.col("_tag").desc(), F.col("_pf").asc())
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    filled = u
-    if want_back:
-        filled = filled.withColumn("_fb", F.last("_pb", ignorenulls=True).over(wb))
-    if want_fwd:
-        filled = filled.withColumn("_ff", F.first("_pf", ignorenulls=True).over(wf))
-    filled = filled.where(F.col("_tag") == 1)
+
+    # Both fills are last(ignorenulls) over a running frame, O(n) per
+    # partition. Right rows (_tag 0) sort before left rows at an equal ts,
+    # so matches are inclusive. Backward walks time ascending and takes the
+    # greatest payload among duplicate right timestamps; forward walks it
+    # descending and takes the least. NULLS FIRST keeps a null-ts left row
+    # ahead of every right row in the forward walk too.
+    part = Window.partitionBy(*r_by)
+    running = (Window.unboundedPreceding, Window.currentRow)
+    wb = part.orderBy(
+        F.col("_ts_d").asc(), F.col("_tag").asc(), F.col("_p").asc()
+    ).rowsBetween(*running)
+    wf = part.orderBy(
+        F.col("_ts_d").desc_nulls_first(), F.col("_tag").asc(), F.col("_p").desc()
+    ).rowsBetween(*running)
+    fills = []
+    if direction in ("backward", "nearest", "interpolate"):
+        fills.append(F.last("_p", ignorenulls=True).over(wb).alias("_fb"))
+    if direction in ("forward", "nearest", "interpolate"):
+        fills.append(F.last("_p", ignorenulls=True).over(wf).alias("_ff"))
+    filled = u.select("*", *fills).where(F.col("_tag") == 1)
 
     if direction == "interpolate":
         t = F.col("_ts_d")
@@ -550,92 +466,6 @@ def asof_join(
 
     sel = [F.col("_l_" + c).alias(c) for c in lkeep] + [
         F.col(f"_m.{P}{c}").alias(oc) for c, oc in zip(rcols, out_rnames)
-    ]
-    if right_on_out:
-        sel.append(F.col("_m._p_on").alias(right_on_out))
-    return filled.select(*sel)
-
-
-def asof_join_window(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by="entity_id",
-    right_cols=None,
-    tolerance: float | None = None,
-    suffix: str = "_right",
-    include_right_on: bool = False,
-) -> DataFrame:
-    """Backward as-of join via union + last(ignorenulls) window — one
-    shuffle, no Python. At equal timestamps the right row sorts first, so
-    matches are inclusive (right.ts <= left.ts), identical to DuckDB
-    ASOF JOIN semantics.
-
-    The right payload travels as ONE struct, so all fill columns come
-    from the same winning row even when that row has null fields (per-
-    column fills could mix rows); duplicate (entity, ts) right rows
-    tie-break to the greatest payload struct (struct comparison, null
-    fields smallest) — the same contract as the other strategies. Right
-    rows with a null timestamp are unmatchable and dropped."""
-    by_l = _as_list(by)
-    rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left.columns, right, on, by_l, right_cols, suffix, include_right_on, "backward"
-    )
-
-    lkeep = [c for c in left.columns if c not in set(by_l) | {on}]
-    pay = F.struct(
-        F.col(on).alias("_p_on"), *[F.col(c).alias(c) for c in rcols]
-    )
-    l2 = left.select(
-        *by_l,
-        F.col(on),
-        F.lit(1).alias("_tag"),
-        *[F.col(c) for c in lkeep],
-        F.lit(None)
-        .cast(
-            right.select(pay.alias("_p")).schema["_p"].dataType
-        )
-        .alias("_p"),
-    )
-    r_nonnull = F.col(on).isNotNull()
-    for c in by_l:
-        r_nonnull = r_nonnull & F.col(c).isNotNull()
-    r2 = right.where(r_nonnull).select(
-        *by_l,
-        F.col(on),
-        F.lit(0).alias("_tag"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lkeep],
-        pay.alias("_p"),
-    )
-    u = l2.unionByName(r2)
-    w = (
-        Window.partitionBy(*by_l)
-        .orderBy(on, "_tag", "_p")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u.select(
-        *by_l,
-        F.col(on),
-        "_tag",
-        *lkeep,
-        F.last("_p", ignorenulls=True).over(w).alias("_f"),
-    ).where(F.col("_tag") == 1)
-
-    match = F.col("_f")
-    if tolerance is not None:
-        from pyspark.sql.types import TimestampNTZType
-
-        lc, rc = F.col(on), F.col("_f._p_on")
-        if isinstance(left.schema[on].dataType, TimestampNTZType):
-            lc = lc.cast("timestamp")
-        if isinstance(right.schema[on].dataType, TimestampNTZType):
-            rc = rc.cast("timestamp")
-        within = (lc.cast("double") - rc.cast("double")) <= F.lit(float(tolerance))
-        match = F.when(within, F.col("_f"))
-
-    filled = filled.withColumn("_m", match)
-    sel = [F.col(c) for c in left.columns] + [
-        F.col(f"_m.{c}").alias(oc) for c, oc in zip(rcols, out_rnames)
     ]
     if right_on_out:
         sel.append(F.col("_m._p_on").alias(right_on_out))
@@ -705,12 +535,16 @@ def asof_broadcast_stage(
     # Known pandas round-trip limitation (also applies to cogroup): a
     # NULLABLE integer right column travels as float64, so int64 values
     # above 2^53 in a column that also has nulls lose precision; the
-    # bucketed (JVM) strategy is exact for that shape.
-    rp = right.select(*by_l, on, *rcols).limit(max_right_rows + 1).toPandas()
+    # JVM strategy (asof_join) is exact for that shape.
+    rp = (
+        right.select(*by_l, on, *rcols, *_nan_flags(right, rcols))
+        .limit(max_right_rows + 1)
+        .toPandas()
+    )
     if len(rp) > max_right_rows:
         raise ValueError(
             f"asof_join_broadcast: right side exceeds {max_right_rows} rows; "
-            "use asof_join (bucketed) or asof_join_cogroup instead "
+            "use asof_join or asof_join_cogroup instead "
             "(asof_join_auto picks automatically)"
         )
 
@@ -722,7 +556,7 @@ def asof_broadcast_stage(
         # secondary sort on the payload columns (see _dup_ts_sort): among
         # duplicate right timestamps, backward deterministically matches
         # the greatest payload and forward the least — same contract as
-        # the bucketed strategy's struct-max/min
+        # asof_join's struct ordering
         rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema)
         for key, grp in rp.groupby(by_l, sort=False):
             k = key if isinstance(key, tuple) else (key,)
@@ -863,9 +697,7 @@ def asof_join_cogroup(
     and direction="interpolate".
 
     Skew note: a single entity's whole left+right history lands in one
-    bucket, so this is the mid-tier for many-entity, non-pathological
-    distributions; a hot-entity workload should use asof_join (bucketed),
-    which additionally splits entities across time buckets.
+    bucket, as in asof_join's entity window.
     """
     import numpy as np
     import pandas as pd
@@ -980,6 +812,7 @@ def asof_join_cogroup(
         *[F.col(c).alias(RP + c) for c in by_l],
         F.col(on).alias(RP + on),
         *[F.col(c).alias(RP + c) for c in rcols],
+        *_nan_flags(right, rcols, RP),
     ).withColumn("_g", bucket_of([RP + c for c in by_l]))
     return (
         l2.groupBy("_g")
@@ -991,12 +824,9 @@ def asof_join_cogroup(
 def choose_asof_strategy(right: DataFrame, broadcast_max_rows: int = 2_000_000) -> str:
     """Right-side size probe for asof_join_auto: one bounded count
     (limit(cap+1).count(), so a huge right side never runs a full count).
-    Small -> 'broadcast'; otherwise 'bucketed' — the skew-safe default at
-    scale. 'cogroup' and 'window' are opt-in (see asof_join_auto) because
-    choosing them safely needs per-entity skew knowledge a cheap probe
-    can't give."""
+    Small -> 'broadcast'; otherwise 'window' (asof_join, the JVM merge)."""
     n = right.limit(broadcast_max_rows + 1).count()
-    return "broadcast" if n <= broadcast_max_rows else "bucketed"
+    return "broadcast" if n <= broadcast_max_rows else "window"
 
 
 def asof_join_auto(
@@ -1010,61 +840,41 @@ def asof_join_auto(
     suffix: str = "_right",
     include_right_on: bool = False,
     broadcast_max_rows: int = 2_000_000,
-    bucket_width: float = 86400.0,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Physical-strategy selector for the as-of join.
 
-    Auto mode probes the right side once (bounded count) and picks:
+    Probes the right side once (bounded count) and picks:
 
     - 'broadcast' (<= broadcast_max_rows): zero shuffle of the left side,
       map-side searchsorted against a driver-built index;
-    - 'bucketed' (otherwise): the (entity, time-bucket) merge — big right
-      sides never cross the driver, and hot entities split across buckets.
+    - 'window' (otherwise): asof_join, the entity-window merge — a big
+      right side never crosses the driver;
+    - 'cogroup' for direction='cubic' above the cap, which the window
+      merge does not implement.
 
-    Pass ``strategy`` to force 'broadcast' | 'bucketed' | 'cogroup' |
-    'window' ('cogroup' = per-partition index slices, right for a large
-    stats table with benign entity skew; 'window' = single entity-
-    partitioned window, backward-only, right when entities are small).
     The choice is recorded on the result as ``df._asof_strategy``.
     """
-    chose = False
-    if strategy is None:
-        # persist across probe + (eager) broadcast collect so a DERIVED
-        # right side (e.g. an aggregated stats table) is computed once;
-        # lazy strategies unpersist immediately (nothing collected yet)
-        right = right.persist()
-        chose = True
-        strategy = choose_asof_strategy(right, broadcast_max_rows)
-        if direction == "cubic" and strategy == "bucketed":
-            # cubic is index-strategy-only (see asof_join); above the
-            # broadcast cap the per-partition index tier is the right home
-            strategy = "cogroup"
     kw = dict(
         on=on, by=by, right_cols=right_cols, direction=direction,
         tolerance=tolerance, suffix=suffix, include_right_on=include_right_on,
     )
-    if strategy == "broadcast":
-        out = asof_join_broadcast(
-            left, right, max_right_rows=broadcast_max_rows, **kw
-        )
-    elif strategy == "bucketed":
-        out = asof_join(left, right, bucket_width=bucket_width, **kw)
-    elif strategy == "cogroup":
-        out = asof_join_cogroup(left, right, **kw)
-    elif strategy == "window":
-        if direction != "backward":
-            raise ValueError("window strategy implements backward only")
-        out = asof_join_window(
-            left, right, on=on, by=by, right_cols=right_cols,
-            tolerance=tolerance, suffix=suffix,
-            include_right_on=include_right_on,
-        )
-    else:
-        raise ValueError(f"unknown asof strategy {strategy!r}")
-    if chose:
-        # broadcast collected eagerly above; for lazy strategies this just
-        # returns to the un-cached status quo
+    # persist across probe + (eager) broadcast collect so a DERIVED right
+    # side (e.g. an aggregated stats table) is computed once; the lazy
+    # strategies have collected nothing yet, so unpersisting only returns
+    # to the un-cached status quo — also when a strategy raises
+    right = right.persist()
+    try:
+        strategy = choose_asof_strategy(right, broadcast_max_rows)
+        if strategy == "broadcast":
+            out = asof_join_broadcast(
+                left, right, max_right_rows=broadcast_max_rows, **kw
+            )
+        elif direction == "cubic":
+            strategy = "cogroup"
+            out = asof_join_cogroup(left, right, **kw)
+        else:
+            out = asof_join(left, right, **kw)
+    finally:
         right.unpersist()
     out._asof_strategy = strategy
     return out

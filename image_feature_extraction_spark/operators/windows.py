@@ -117,7 +117,7 @@ def nearest_event_distance(
     backward + forward as-of against marker rows, then least().
 
     Null when the entity has no marker rows. One shuffle, two sorts
-    (same partitioning, opposite frame directions).
+    (same partitioning, opposite time directions).
     """
     from pyspark.sql.types import TimestampNTZType
 
@@ -131,21 +131,21 @@ def nearest_event_distance(
     # unspecified tie order (a same-ts marker may sort after the current
     # row and be missed); a value-range frame always includes ties, and
     # every tied marker carries the same time value, so the result is
-    # order-independent by construction.
+    # order-independent by construction. Both frames run from the
+    # partition start to the current row, so each costs O(n): the next
+    # marker is the last one seen walking time descending (a frame to
+    # UNBOUNDED FOLLOWING is re-aggregated per row, O(n^2)).
     by_l = _as_list(by)
     d = df.withColumn("_td", td)
-    wb = (
-        Window.partitionBy(*by_l)
-        .orderBy("_td")
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    running = (Window.unboundedPreceding, Window.currentRow)
+    wb = Window.partitionBy(*by_l).orderBy("_td").rangeBetween(*running)
     wf = (
         Window.partitionBy(*by_l)
-        .orderBy("_td")
-        .rangeBetween(Window.currentRow, Window.unboundedFollowing)
+        .orderBy(F.col("_td").desc())
+        .rangeBetween(*running)
     )
     prev = F.last(mts, ignorenulls=True).over(wb)
-    nxt = F.first(mts, ignorenulls=True).over(wf)
+    nxt = F.last(mts, ignorenulls=True).over(wf)
     dist = F.least(
         F.coalesce(F.col("_td") - prev, F.lit(float("inf"))),
         F.coalesce(nxt - F.col("_td"), F.lit(float("inf"))),

@@ -560,12 +560,9 @@ _register(
 # As-of join (J3/N6) — DuckDB ASOF JOIN oracle
 # ---------------------------------------------------------------------------
 
-def q_asof_join(spark, sf_dir):
-    """J3 point-in-time join: for each click, the latest purchase value at
-    or before it, per user. Right side deduped on (user, ts) by max(value)
-    so the match is unambiguous in every engine."""
-    from ..operators.asof import asof_join
-
+def _clicks_purchases(spark, sf_dir):
+    """The as-of queries' two sides: clicks, and purchases deduped on
+    (user, ts) by max(value) so a match is unambiguous in every engine."""
     ev = _t(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         "user_id", "ts", "event_id", F.col("value").alias("click_value")
@@ -575,35 +572,48 @@ def q_asof_join(spark, sf_dir):
         .groupBy("user_id", "ts")
         .agg(F.max("value").alias("purchase_value"))
     )
-    out = asof_join(
-        clicks, purchases, on="ts", by="user_id", bucket_width=86400.0
-    )
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
-    )
+    return clicks, purchases
 
 
-_register(
-    "q_asof_join",
-    q_asof_join,
-    f"""
-    WITH clicks AS (
+_SQL_CLICKS_PURCHASES = """
+    clicks AS (
       SELECT user_id, ts, event_id, value AS click_value
       FROM events WHERE event_type = 'click'
     ), purchases AS (
       SELECT user_id, ts, MAX(value) AS purchase_value
       FROM events WHERE event_type = 'purchase'
       GROUP BY user_id, ts
+    )"""
+
+
+def _clicks_asof_out(out, value="purchase_value"):
+    """The as-of queries' output columns; `value` names the matched one."""
+    return out.select(
+        "event_id", "user_id",
+        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
+        "click_value", value,
     )
+
+
+def q_asof_join(spark, sf_dir):
+    """J3 point-in-time join: for each click, the latest purchase value at
+    or before it, per user (the entity-window merge, backward)."""
+    from ..operators.asof import asof_join
+
+    clicks, purchases = _clicks_purchases(spark, sf_dir)
+    return _clicks_asof_out(asof_join(clicks, purchases, on="ts", by="user_id"))
+
+
+_ASOF_BACKWARD_SQL = f"""
+    WITH {_SQL_CLICKS_PURCHASES}
     SELECT c.event_id, c.user_id,
            strftime(c.ts, '{_TS_FMT_DUCK}') AS ts_s,
            c.click_value, p.purchase_value
     FROM clicks c ASOF LEFT JOIN purchases p
       ON c.user_id = p.user_id AND c.ts >= p.ts
-    """,
-)
+    """
+
+_register("q_asof_join", q_asof_join, _ASOF_BACKWARD_SQL)
 
 
 # ---------------------------------------------------------------------------

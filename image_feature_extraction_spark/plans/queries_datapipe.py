@@ -23,7 +23,16 @@ from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as T
 from ..operators import windows as W
-from .queries import _register, _t
+from .queries import (
+    _ASOF_BACKWARD_SQL,
+    _SQL_CLICKS_PURCHASES,
+    _TS_FMT_DUCK,
+    _clicks_asof_out,
+    _clicks_purchases,
+    _register,
+    _t,
+    q_asof_join,
+)
 
 MD5L = "('0x'||substr(md5({x}),1,8))::BIGINT"
 
@@ -759,51 +768,17 @@ _register(
 )
 
 
-def _clicks_purchases(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", "event_id", F.col("value").alias("click_value")
-    )
-    purchases = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("purchase_value"))
-    )
-    return clicks, purchases
-
-
-_SQL_CLICKS_PURCHASES = """
-    clicks AS (
-      SELECT user_id, ts, event_id, value AS click_value
-      FROM events WHERE event_type = 'click'
-    ), purchases AS (
-      SELECT user_id, ts, MAX(value) AS purchase_value
-      FROM events WHERE event_type = 'purchase'
-      GROUP BY user_id, ts
-    )"""
-
-
 def q_asof_forward(spark, sf_dir):
     """Forward (next-event) as-of join: for each click, the EARLIEST
-    purchase at or after it per user — bucketed JVM strategy, forward
+    purchase at or after it per user — the entity-window merge, forward
     direction; DuckDB ASOF with the inequality reversed is the oracle."""
     from ..operators.asof import asof_join
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join(
-        clicks, purchases, on="ts", by="user_id",
-        direction="forward", bucket_width=86400.0,
-    )
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
+    return _clicks_asof_out(
+        asof_join(clicks, purchases, on="ts", by="user_id", direction="forward")
     )
 
-
-from .queries import _TS_FMT_DUCK  # noqa: E402
 
 _register(
     "q_asof_forward",
@@ -828,17 +803,9 @@ def q_asof_interpolate(spark, sf_dir):
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
     out = asof_join(
-        clicks, purchases, on="ts", by="user_id",
-        direction="interpolate", bucket_width=86400.0,
+        clicks, purchases, on="ts", by="user_id", direction="interpolate"
     )
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value",
-        F.col("purchase_value").alias("purchase_interp"),
-    )
+    return _clicks_asof_out(out, F.col("purchase_value").alias("purchase_interp"))
 
 
 _register(
@@ -862,21 +829,11 @@ _register(
 )
 
 
-_ASOF_BACKWARD_SQL = f"""
-    WITH {_SQL_CLICKS_PURCHASES}
-    SELECT c.event_id, c.user_id,
-           strftime(c.ts, '{_TS_FMT_DUCK}') AS ts_s,
-           c.click_value, p.purchase_value
-    FROM clicks c ASOF LEFT JOIN purchases p
-      ON c.user_id = p.user_id AND c.ts >= p.ts
-    """
-
-
 def q_asof_auto_bucketed(spark, sf_dir):
     """asof_join_auto with the broadcast cap forced BELOW the right-side
-    size: the probe must route to the bucketed strategy (the production
-    fallback when the stats table outgrows broadcast). Same oracle as
-    q_asof_join."""
+    size: the probe must route to the window merge (the production
+    fallback when the stats table outgrows broadcast). The name predates
+    the merge. Same oracle as q_asof_join."""
     from ..operators.asof import asof_join_auto
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
@@ -885,18 +842,12 @@ def q_asof_auto_bucketed(spark, sf_dir):
     )
     # explicit raise, not `assert`: this probe-routing check must survive
     # `python -O` (assertions stripped) — it IS the point of the query
-    if out._asof_strategy != "bucketed":
+    if out._asof_strategy != "window":
         raise RuntimeError(
             f"auto strategy probe picked {out._asof_strategy!r}, "
-            "expected 'bucketed' for a right side above the broadcast cap"
+            "expected 'window' for a right side above the broadcast cap"
         )
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
-    )
+    return _clicks_asof_out(out)
 
 
 _register("q_asof_auto_bucketed", q_asof_auto_bucketed, _ASOF_BACKWARD_SQL)
@@ -908,13 +859,8 @@ def q_asof_cogroup(spark, sf_dir):
     from ..operators.asof import asof_join_cogroup
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join_cogroup(clicks, purchases, on="ts", by="user_id")
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
+    return _clicks_asof_out(
+        asof_join_cogroup(clicks, purchases, on="ts", by="user_id")
     )
 
 
@@ -928,36 +874,16 @@ def q_asof_broadcast(spark, sf_dir):
     from ..operators.asof import asof_join_broadcast
 
     clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join_broadcast(clicks, purchases, on="ts", by="user_id")
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
+    return _clicks_asof_out(
+        asof_join_broadcast(clicks, purchases, on="ts", by="user_id")
     )
 
 
 _register("q_asof_broadcast", q_asof_broadcast, _ASOF_BACKWARD_SQL)
 
-
-def q_asof_window(spark, sf_dir):
-    """Entity-window as-of strategy standalone (single exchange, union +
-    last-ignorenulls fill). Same oracle as q_asof_join."""
-    from ..operators.asof import asof_join_window
-
-    clicks, purchases = _clicks_purchases(spark, sf_dir)
-    out = asof_join_window(clicks, purchases, on="ts", by="user_id")
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value", "purchase_value",
-    )
-
-
-_register("q_asof_window", q_asof_window, _ASOF_BACKWARD_SQL)
+# The entity-window strategy is asof_join itself: a second registered name
+# for q_asof_join and its oracle, since callers pin both names.
+_register("q_asof_window", q_asof_join, _ASOF_BACKWARD_SQL)
 
 
 def q_checkpoint_ledger(spark, sf_dir):
@@ -1278,14 +1204,7 @@ def q_asof_cubic(spark, sf_dir):
     out = asof_join_broadcast(
         clicks, purchases, on="ts", by="user_id", direction="cubic"
     )
-    from .queries import _TS_FMT_SPARK
-
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", _TS_FMT_SPARK).alias("ts_s"),
-        "click_value",
-        F.col("purchase_value").alias("purchase_cubic"),
-    )
+    return _clicks_asof_out(out, F.col("purchase_value").alias("purchase_cubic"))
 
 
 # The SELECT expressions mirror asof._cubic_eval TERM FOR TERM (same
@@ -2155,7 +2074,7 @@ def q_asof_lagged_snapshots(spark, sf_dir):
     shape feature stores use when labels/features arrive late and the
     freshest state must NOT be visible at serving time. Implemented as
     as-of joins on interval-shifted probe timestamps; each lag reuses
-    the bucketed strategy unchanged."""
+    the entity-window merge unchanged."""
     from ..operators.asof import asof_join
 
     ev = _t(spark, sf_dir, "events")
@@ -2177,7 +2096,6 @@ def q_asof_lagged_snapshots(spark, sf_dir):
             purchases.withColumnRenamed("pv", f"pv_{tag}"),
             on="ts",
             by="user_id",
-            bucket_width=86400.0,
         ).select(
             "event_id", "user_id", F.col("_ts_orig").alias("ts"),
             *[c for c in probe.columns if c.startswith("pv_")],
@@ -2307,9 +2225,7 @@ def q_feature_assembly(spark, sf_dir):
         F.col("value").alias("click_value"),
         "z_score", "decay_sum", "decay_cnt",
     )
-    out = asof_join(
-        clicks, purchases, on="ts", by="user_id", bucket_width=86400.0
-    )
+    out = asof_join(clicks, purchases, on="ts", by="user_id")
     return out.select(
         "event_id", "user_id", "click_value",
         "z_score", "decay_sum", "decay_cnt", "purchase_value",

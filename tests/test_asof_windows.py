@@ -1,6 +1,5 @@
 """As-of join and window operator tests: DuckDB ASOF JOIN oracle, pandas
-merge_asof oracle, leakage property, strategy cross-check, bucket-width
-invariance."""
+merge_asof oracle, leakage property, strategy cross-check."""
 
 import duckdb
 import numpy as np
@@ -8,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from image_feature_extraction_spark.operators.asof import asof_join, asof_join_window
+from image_feature_extraction_spark.operators.asof import asof_join
 from image_feature_extraction_spark.operators.windows import (
     backfill,
     lag_lead,
@@ -43,15 +42,15 @@ def _mk_frames():
     return left.reset_index(drop=True), right.reset_index(drop=True)
 
 
-def _duck_asof(left, right):
+def _duck_asof(left, right, op=">="):
     con = duckdb.connect()
     con.register("l", left)
     con.register("r", right)
     return con.sql(
-        """
+        f"""
         SELECT l.entity_id, l.ts, l.lval, r.rval
         FROM l ASOF LEFT JOIN r
-          ON l.entity_id = r.entity_id AND l.ts >= r.ts
+          ON l.entity_id = r.entity_id AND l.ts {op} r.ts
         ORDER BY l.entity_id, l.ts, l.lval
         """
     ).df()
@@ -67,31 +66,22 @@ def frames(spark):
     return left, right, spark.createDataFrame(left), spark.createDataFrame(right)
 
 
-def test_asof_bucketed_matches_duckdb(spark, frames):
+def test_asof_join_matches_duckdb(spark, frames):
+    """Backward and forward against DuckDB's ASOF JOIN (>= and <=)."""
     left, right, ldf, rdf = frames
-    want = _key(_duck_asof(left, right))
-    for width in (1000.0, 7919.0, 1_000_000.0):
+    for direction, op in (("backward", ">="), ("forward", "<=")):
+        want = _key(_duck_asof(left, right, op))
         got = _key(
-            asof_join(ldf, rdf, on="ts", by="entity_id", bucket_width=width)
+            asof_join(ldf, rdf, on="ts", by="entity_id", direction=direction)
             .toPandas()[["entity_id", "ts", "lval", "rval"]]
         )
         pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
 
 
-def test_asof_window_matches_duckdb(spark, frames):
-    left, right, ldf, rdf = frames
-    want = _key(_duck_asof(left, right))
-    got = _key(
-        asof_join_window(ldf, rdf, on="ts", by="entity_id")
-        .toPandas()[["entity_id", "ts", "lval", "rval"]]
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
-
-
 def test_asof_zero_leakage(spark, frames):
     left, right, ldf, rdf = frames
     out = asof_join(
-        ldf, rdf, on="ts", by="entity_id", bucket_width=5000.0, include_right_on=True
+        ldf, rdf, on="ts", by="entity_id", include_right_on=True
     ).toPandas()
     matched = out.dropna(subset=["ts_right"])
     assert (matched["ts_right"] <= matched["ts"]).all()
@@ -102,10 +92,8 @@ def test_asof_forward_and_nearest(spark, frames):
     left, right, ldf, rdf = frames
     for direction in ("forward", "nearest"):
         got = _key(
-            asof_join(
-                ldf, rdf, on="ts", by="entity_id",
-                direction=direction, bucket_width=3000.0,
-            ).toPandas()[["entity_id", "ts", "lval", "rval"]]
+            asof_join(ldf, rdf, on="ts", by="entity_id", direction=direction)
+            .toPandas()[["entity_id", "ts", "lval", "rval"]]
         )
         want_pd = (
             pd.merge_asof(
@@ -126,9 +114,8 @@ def test_asof_tolerance(spark, frames):
     left, right, ldf, rdf = frames
     tol = 2000.0
     got = _key(
-        asof_join(
-            ldf, rdf, on="ts", by="entity_id", tolerance=tol, bucket_width=4000.0
-        ).toPandas()[["entity_id", "ts", "lval", "rval"]]
+        asof_join(ldf, rdf, on="ts", by="entity_id", tolerance=tol)
+        .toPandas()[["entity_id", "ts", "lval", "rval"]]
     )
     want_pd = pd.merge_asof(
         left.sort_values("ts"),
@@ -142,12 +129,6 @@ def test_asof_tolerance(spark, frames):
         got, _key(want_pd[["entity_id", "ts", "lval", "rval"]]),
         check_dtype=False, atol=1e-12,
     )
-    # window variant with tolerance agrees
-    got_w = _key(
-        asof_join_window(ldf, rdf, on="ts", by="entity_id", tolerance=tol)
-        .toPandas()[["entity_id", "ts", "lval", "rval"]]
-    )
-    pd.testing.assert_frame_equal(got_w, got, check_dtype=False, atol=1e-12)
 
 
 def test_asof_on_driver_events(spark):
@@ -159,8 +140,7 @@ def test_asof_on_driver_events(spark):
         "user_id", "ts", F.col("value").alias("purchase_value")
     )
     out = asof_join(
-        clicks, purchases, on="ts", by="user_id",
-        bucket_width=86400.0, include_right_on=True,
+        clicks, purchases, on="ts", by="user_id", include_right_on=True
     ).toPandas()
     assert len(out) == clicks.count()
     m = out.dropna(subset=["ts_right"])
@@ -365,7 +345,7 @@ def test_asof_multi_key_by(spark):
     from image_feature_extraction_spark.operators.asof import (
         asof_join,
         asof_join_broadcast,
-        asof_join_window,
+        asof_join_cogroup,
     )
 
     rng = np.random.default_rng(42)
@@ -393,13 +373,9 @@ def test_asof_multi_key_by(spark):
         )
         .sort_values(["k1", "k2", "ts", "lv"]).reset_index(drop=True)
     )[["k1", "k2", "ts", "lv", "rv"]]
-    for fn, kw in (
-        (asof_join, {"bucket_width": 2500.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-    ):
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
         got = (
-            fn(ldf, rdf, on="ts", by=["k1", "k2"], **kw)
+            fn(ldf, rdf, on="ts", by=["k1", "k2"])
             .toPandas()[["k1", "k2", "ts", "lv", "rv"]]
             .sort_values(["k1", "k2", "ts", "lv"]).reset_index(drop=True)
         )
@@ -407,8 +383,8 @@ def test_asof_multi_key_by(spark):
 
 
 def test_asof_bucketed_extreme_skew(spark):
-    """One entity holds 96% of all events (hot-entity skew): the bucketed
-    strategy must stay correct, with tasks bounded by bucket width."""
+    """One entity holds 96% of all events (hot-entity skew): the entity
+    window holds it in one task and must stay correct."""
     rng = np.random.default_rng(99)
     n_hot, n_cold = 20_000, 800
     left = pd.DataFrame(
@@ -435,9 +411,8 @@ def test_asof_bucketed_extreme_skew(spark):
         }
     ).drop_duplicates(["entity_id", "ts"])
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    # small bucket: the hot entity splits into ~100 independent tasks
     got = _key(
-        asof_join(ldf, rdf, on="ts", by="entity_id", bucket_width=10_000.0)
+        asof_join(ldf, rdf, on="ts", by="entity_id")
         .toPandas()[["entity_id", "ts", "lv", "rv"]]
         .rename(columns={"lv": "lval", "rv": "rval"})
     )
@@ -487,38 +462,33 @@ def test_flagship_fused_equals_unfused(spark):
 
 
 def test_asof_bucket_boundary_timestamps(spark):
-    """Timestamps exactly ON bucket-width multiples — the carry-row edge:
-    a right row at the first instant of bucket b must be matched by left
-    rows in the same bucket but NOT via the carry of bucket b+1's marker,
-    and a left row at a boundary matches the right row at the same ts
-    (inclusive)."""
-    W = 100.0
+    """Left rows on right timestamps match them inclusively in both
+    directions (right rows sort before left rows at an equal ts)."""
     left = pd.DataFrame(
         {
             "entity_id": [1] * 6,
-            "ts": [0, 100, 150, 200, 300, 399],  # 0,100,200,300 on boundaries
+            "ts": [0, 100, 150, 200, 300, 399],  # 0,100,200,300 exact hits
             "lval": [10.0, 11.0, 11.5, 12.0, 13.0, 13.9],
         }
     )
     right = pd.DataFrame(
         {
             "entity_id": [1] * 4,
-            "ts": [0, 100, 200, 300],  # all exactly on boundaries
+            "ts": [0, 100, 200, 300],
             "rval": [1.0, 2.0, 3.0, 4.0],
         }
     )
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
     got = (
-        asof_join(ldf, rdf, on="ts", by="entity_id", bucket_width=W)
+        asof_join(ldf, rdf, on="ts", by="entity_id")
         .toPandas()
         .sort_values("ts")
         .reset_index(drop=True)
     )
     assert got["rval"].tolist() == [1.0, 2.0, 2.0, 3.0, 4.0, 4.0]
-    # forward at boundaries: inclusive match at equal ts
+    # forward: inclusive match at equal ts
     gotf = (
-        asof_join(ldf, rdf, on="ts", by="entity_id", bucket_width=W,
-                  direction="forward")
+        asof_join(ldf, rdf, on="ts", by="entity_id", direction="forward")
         .toPandas()
         .sort_values("ts")
         .reset_index(drop=True)
@@ -557,17 +527,13 @@ def test_asof_randomized_property(spark, seed):
              ON l.entity_id = r.entity_id AND l.ts >= r.ts
            ORDER BY l.lval"""
     ).df().reset_index(drop=True)
-    for fn, kw in (
-        (asof_join, {"bucket_width": 997.0}),
-        (asof_join_window, {}),
-    ):
-        got = (
-            fn(ldf, rdf, on="ts", by="entity_id", **kw)
-            .toPandas()[["entity_id", "ts", "lval", "rval"]]
-            .sort_values("lval")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
+    got = (
+        asof_join(ldf, rdf, on="ts", by="entity_id")
+        .toPandas()[["entity_id", "ts", "lval", "rval"]]
+        .sort_values("lval")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
 
 
 # ---------------------------------------------------------------------------
@@ -578,7 +544,7 @@ def test_asof_randomized_property(spark, seed):
 def _dup_ts_frames():
     """Right side with DUPLICATE (entity, ts) rows: the tie-break contract
     is backward -> greatest payload, forward -> least payload, identical
-    across strategies and bucket widths."""
+    across strategies."""
     left = pd.DataFrame(
         {
             "entity_id": [1, 1, 1, 2],
@@ -620,26 +586,9 @@ def test_asof_duplicate_right_ts_tie_break(spark):
             else:
                 assert got[k] == v, (k, got[k], v)
 
-    # bucketed at several widths: ts=1000/2000 sit ON bucket boundaries for
-    # width=1000, exercising the carry-vs-in-bucket agreement the tie-break
-    # fix guarantees
-    for width in (300.0, 1000.0, 1_000_000.0):
-        check(
-            asof_join(ldf, rdf, on="ts", by="entity_id",
-                      direction="forward", bucket_width=width),
-            want_fwd,
-        )
-        check(
-            asof_join(ldf, rdf, on="ts", by="entity_id",
-                      direction="backward", bucket_width=width),
-            want_bwd,
-        )
-    for fn in (asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="forward"), want_fwd)
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="backward"), want_bwd)
-    # window strategy (backward-only): payload columns in the window
-    # ordering pin the duplicate-ts tie-break to struct-max
-    check(asof_join_window(ldf, rdf, on="ts", by="entity_id"), want_bwd)
 
 
 def test_asof_interpolate_manual_and_parity(spark):
@@ -651,8 +600,8 @@ def test_asof_interpolate_manual_and_parity(spark):
     left = pd.DataFrame(
         {
             "entity_id": [1, 1, 1, 1, 1, 2],
-            # 1000 exact hit; 1250 mid; 1999/2001 bucket-boundary straddle
-            # at width=1000; 500 outside hull (before first right row)
+            # 1000 exact hit; 1250 mid; 1999/2001 either side of the
+            # 2000 sample; 500 outside hull (before first right row)
             "ts": [1000, 1250, 1999, 2001, 500, 777],
             "lval": [0.0] * 6,
         }
@@ -680,12 +629,10 @@ def test_asof_interpolate_manual_and_parity(spark):
             for r in df.select("entity_id", "ts", "rval").collect()
         }
 
-    results = []
-    for width in (1000.0, 333.0, 1_000_000.0):
-        results.append(
-            got_of(asof_join(ldf, rdf, on="ts", by="entity_id",
-                             direction="interpolate", bucket_width=width))
-        )
+    results = [
+        got_of(asof_join(ldf, rdf, on="ts", by="entity_id",
+                         direction="interpolate"))
+    ]
     results.append(
         got_of(asof_join_broadcast(ldf, rdf, on="ts", by="entity_id",
                                    direction="interpolate"))
@@ -716,7 +663,7 @@ def test_asof_interpolate_tolerance(spark):
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
     out = asof_join(
         ldf, rdf, on="ts", by="entity_id", direction="interpolate",
-        tolerance=600.0, bucket_width=1000.0,
+        tolerance=600.0,
     )
     got = {(r.entity_id, r.ts): r.rval for r in out.collect()}
     # ts=1500: bracket gap sides 500/1500 -> far side exceeds tolerance -> null
@@ -725,7 +672,7 @@ def test_asof_interpolate_tolerance(spark):
     assert got[(1, 2990)] is None or pd.isna(got[(1, 2990)])
     out2 = asof_join(
         ldf, rdf, on="ts", by="entity_id", direction="interpolate",
-        tolerance=2000.0, bucket_width=1000.0,
+        tolerance=2000.0,
     )
     got2 = {(r.entity_id, r.ts): r.rval for r in out2.collect()}
     assert got2[(1, 1500)] == pytest.approx(10.0 + 20.0 * 0.25)
@@ -740,24 +687,32 @@ def test_asof_strategy_selector(spark, frames):
 
     left, right, ldf, rdf = frames
     assert choose_asof_strategy(rdf, broadcast_max_rows=10_000) == "broadcast"
-    assert choose_asof_strategy(rdf, broadcast_max_rows=10) == "bucketed"
+    assert choose_asof_strategy(rdf, broadcast_max_rows=10) == "window"
 
     want = _key(_duck_asof(left, right))
-    for kw in (
-        dict(broadcast_max_rows=10_000),          # routes to broadcast
-        dict(broadcast_max_rows=10),              # routes to bucketed
-        dict(strategy="cogroup"),
-        dict(strategy="window"),
-    ):
-        out = asof_join_auto(ldf, rdf, on="ts", by="entity_id", **kw)
+    for cap, strategy in ((10_000, "broadcast"), (10, "window")):
+        out = asof_join_auto(ldf, rdf, on="ts", by="entity_id", broadcast_max_rows=cap)
+        assert out._asof_strategy == strategy
         got = _key(out.toPandas()[["entity_id", "ts", "lval", "rval"]])
         pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
-    assert asof_join_auto(
-        ldf, rdf, on="ts", by="entity_id", broadcast_max_rows=10_000
-    )._asof_strategy == "broadcast"
-    assert asof_join_auto(
-        ldf, rdf, on="ts", by="entity_id", broadcast_max_rows=10
-    )._asof_strategy == "bucketed"
+
+
+def test_asof_auto_unpersists_right_when_strategy_raises(spark):
+    """asof_join_auto caches the right side for its probe; a strategy that
+    rejects its arguments must not leave the caller's frame cached."""
+    from image_feature_extraction_spark.operators.asof import asof_join_auto
+
+    left = spark.createDataFrame(pd.DataFrame({"entity_id": [1], "ts": [10.0]}))
+    right = spark.createDataFrame(
+        pd.DataFrame({"entity_id": [1], "ts": [5.0], "name": ["x"]})
+    )
+    for cap in (10, 0):  # broadcast, then the window merge
+        with pytest.raises(ValueError, match="numeric right columns"):
+            asof_join_auto(
+                left, right, on="ts", by="entity_id", direction="interpolate",
+                broadcast_max_rows=cap,
+            )
+        assert not right.is_cached, cap
 
 
 def test_asof_cogroup_matches_duckdb(spark, frames):
@@ -820,9 +775,8 @@ def test_asof_broadcast_and_cogroup_timestamp_ltz(spark):
 
 @pytest.mark.parametrize("seed", [11, 23])
 def test_asof_interpolate_randomized_property(spark, seed):
-    """Randomized lerp property vs a numpy oracle, with right timestamps
-    planted ON bucket boundaries and widths chosen so brackets straddle
-    buckets: for every left row inside the hull,
+    """Randomized lerp property vs a numpy oracle, a third of the right
+    timestamps on a 1000 grid: for every left row inside the hull,
     value = vb + (vf - vb) * (t - tb)/(tf - tb); null outside."""
     rng = np.random.default_rng(seed)
     n_l, n_r = 300, 60
@@ -834,7 +788,7 @@ def test_asof_interpolate_randomized_property(spark, seed):
         }
     ).drop_duplicates(["entity_id", "ts"])
     rts = rng.integers(-5000, 5000, n_r)
-    rts[: n_r // 3] = (rts[: n_r // 3] // 1000) * 1000  # on-boundary for W=1000
+    rts[: n_r // 3] = (rts[: n_r // 3] // 1000) * 1000
     right = pd.DataFrame(
         {
             "entity_id": rng.integers(0, 7, n_r).astype(np.int64),
@@ -861,18 +815,14 @@ def test_asof_interpolate_randomized_property(spark, seed):
         (r.entity_id, r.ts): oracle(r) for r in left.itertuples()
     }
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
-    for width in (1000.0, 77.0, 10_000_000.0):
-        out = asof_join(
-            ldf, rdf, on="ts", by="entity_id",
-            direction="interpolate", bucket_width=width,
-        )
-        got = {(r.entity_id, r.ts): r.rval for r in out.collect()}
-        assert set(got) == set(want)
-        for k, v in want.items():
-            if v is None:
-                assert got[k] is None or pd.isna(got[k]), (width, k, got[k])
-            else:
-                assert got[k] == pytest.approx(v, rel=1e-12), (width, k)
+    out = asof_join(ldf, rdf, on="ts", by="entity_id", direction="interpolate")
+    got = {(r.entity_id, r.ts): r.rval for r in out.collect()}
+    assert set(got) == set(want)
+    for k, v in want.items():
+        if v is None:
+            assert got[k] is None or pd.isna(got[k]), (k, got[k])
+        else:
+            assert got[k] == pytest.approx(v, rel=1e-12), k
 
 
 def test_gaussian_time_smooth_hand_values(spark):
@@ -916,9 +866,8 @@ def test_gaussian_time_smooth_hand_values(spark):
 @pytest.mark.parametrize("seed", [5])
 def test_asof_strategy_direction_matrix(spark, seed):
     """All physical strategies implement identical semantics: for random
-    frames (duplicate timestamps included), bucketed (2 widths),
-    broadcast, and cogroup agree pairwise on backward / forward / nearest
-    / interpolate; window agrees on backward."""
+    frames (duplicate timestamps included), asof_join, broadcast, and
+    cogroup agree pairwise on backward / forward / nearest / interpolate."""
     from image_feature_extraction_spark.operators.asof import (
         asof_join_broadcast,
         asof_join_cogroup,
@@ -950,16 +899,9 @@ def test_asof_strategy_direction_matrix(spark, seed):
 
     for direction in ("backward", "forward", "nearest", "interpolate"):
         outs = [
-            key(asof_join(ldf, rdf, on="ts", by="entity_id",
-                          direction=direction, bucket_width=w))
-            for w in (500.0, 1_000_000.0)
+            key(fn(ldf, rdf, on="ts", by="entity_id", direction=direction))
+            for fn in (asof_join, asof_join_broadcast, asof_join_cogroup)
         ]
-        outs.append(key(asof_join_broadcast(ldf, rdf, on="ts", by="entity_id",
-                                            direction=direction)))
-        outs.append(key(asof_join_cogroup(ldf, rdf, on="ts", by="entity_id",
-                                          direction=direction)))
-        if direction == "backward":
-            outs.append(key(asof_join_window(ldf, rdf, on="ts", by="entity_id")))
         for i, o in enumerate(outs[1:], 1):
             assert o == outs[0], f"{direction}: variant {i} disagrees"
 
@@ -1109,7 +1051,7 @@ def test_asof_cubic_strategy_restrictions(spark):
     )
     with pytest.raises(ValueError, match="cubic"):
         asof_join(left, right, on="ts", by="entity_id", direction="cubic")
-    # auto above the broadcast cap must route cubic to cogroup, not bucketed
+    # auto above the broadcast cap must route cubic to cogroup, not window
     out = asof_join_auto(
         left, right, on="ts", by="entity_id", direction="cubic",
         broadcast_max_rows=2,

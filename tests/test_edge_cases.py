@@ -13,7 +13,6 @@ from image_feature_extraction_spark.operators import text as T
 from image_feature_extraction_spark.operators.asof import (
     asof_join,
     asof_join_broadcast,
-    asof_join_window,
 )
 from image_feature_extraction_spark.operators.features import extract_features
 from image_feature_extraction_spark.operators.windows import sessionize
@@ -33,12 +32,8 @@ def test_asof_empty_right_all_strategies(spark):
     right = spark.createDataFrame(
         [], "entity_id long, ts long, rv double"
     )
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-    ):
-        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+    for fn in (asof_join, asof_join_broadcast):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert len(out) == 2
         assert out["rv"].isna().all()
 
@@ -46,12 +41,8 @@ def test_asof_empty_right_all_strategies(spark):
 def test_asof_single_rows(spark):
     left = spark.createDataFrame(pd.DataFrame({"entity_id": [1], "ts": [10], "lv": [1.0]}))
     right = spark.createDataFrame(pd.DataFrame({"entity_id": [1], "ts": [10], "rv": [9.0]}))
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-    ):
-        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+    for fn in (asof_join, asof_join_broadcast):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert out["rv"].tolist() == [9.0]  # inclusive equal-ts match
 
 
@@ -98,25 +89,18 @@ def test_asof_round2_strategies_empty_and_single(spark):
         pd.DataFrame({"entity_id": [1, 2], "ts": [10, 20], "lv": [1.0, 2.0]})
     )
     empty_right = spark.createDataFrame([], "entity_id long, ts long, rv double")
-    for kw in ({}, {"strategy": "cogroup"}):
-        out = asof_join_auto(
-            left, empty_right, on="ts", by="entity_id", **kw
-        ).toPandas()
-        assert len(out) == 2 and out["rv"].isna().all()
+    out = asof_join_auto(left, empty_right, on="ts", by="entity_id").toPandas()
+    assert len(out) == 2 and out["rv"].isna().all()
     # interpolate with a single right row: exact hit returns the sample,
     # everything else is outside the hull
     one = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [10], "rv": [7.5]})
     )
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_broadcast, {}),
-        (asof_join_cogroup, {}),
-    ):
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
         got = {
             (r.entity_id, r.ts): r.rv
             for r in fn(
-                left, one, on="ts", by="entity_id", direction="interpolate", **kw
+                left, one, on="ts", by="entity_id", direction="interpolate"
             ).collect()
         }
         assert got[(1, 10)] == 7.5
@@ -157,7 +141,7 @@ def test_embedding_bucketed_tiny_inputs(spark):
 def test_asof_null_timestamps_never_match(spark):
     """Review regression: a null left ts must never match (searchsorted on
     NaN would 'match' the last right row), identically across strategies;
-    null right ts rows are unmatchable."""
+    null right ts rows are unmatchable, and so is a NaN time."""
     from image_feature_extraction_spark.operators.asof import (
         asof_join_broadcast,
         asof_join_cogroup,
@@ -169,13 +153,8 @@ def test_asof_null_timestamps_never_match(spark):
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [10.0, None], "rv": [5.0, 9.0]})
     )
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-        (asof_join_cogroup, {}),
-    ):
-        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert len(out) == 2, fn.__name__
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert got[1.0] == 5.0, fn.__name__          # normal match
@@ -202,6 +181,23 @@ def test_asof_null_timestamps_never_match(spark):
         ).toPandas()
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert pd.isna(got[2.0]), fn.__name__  # NaT must not match FIRST row
+    # a NaN time in a double column never matches either, in any strategy
+    nan = float("nan")
+    left = spark.createDataFrame(
+        [(1, 20.0, 1.0), (1, nan, 2.0)], "entity_id long, ts double, lv double"
+    )
+    right = spark.createDataFrame(
+        [(1, 10.0, 5.0), (1, nan, 9.0)], "entity_id long, ts double, rv double"
+    )
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+        for direction, exp in (("backward", 5.0), ("forward", None)):
+            got = {
+                r["lv"]: r["rv"]
+                for r in fn(
+                    left, right, on="ts", by="entity_id", direction=direction
+                ).collect()
+            }
+            assert got == {1.0: exp, 2.0: None}, (fn.__name__, direction, got)
 
 
 def test_asof_null_payload_tie_break_parity(spark):
@@ -218,13 +214,8 @@ def test_asof_null_payload_tie_break_parity(spark):
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [10.0, 10.0], "rv": [None, 5.0]})
     )
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-        (asof_join_cogroup, {}),
-    ):
-        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert out["rv"].iloc[0] == 5.0, fn.__name__
 
 
@@ -244,7 +235,7 @@ def test_asof_window_fill_single_winning_row(spark):
             }
         )
     )
-    out = asof_join_window(left, right, on="ts", by="entity_id").toPandas()
+    out = asof_join(left, right, on="ts", by="entity_id").toPandas()
     assert out["a"].iloc[0] == 3.0
     assert pd.isna(out["b"].iloc[0])  # NOT 2.0 from the ts=10 row
 
@@ -496,8 +487,8 @@ def test_widen_small_scan_skips_large_single_file(spark, tmp_path):
 
 
 def test_asof_bucketed_null_ts_all_directions(spark):
-    """Review regression: bucketed forward/nearest must not hand a null-ts
-    left row the earliest right payload via the null-bucket carry."""
+    """Review regression: forward/nearest must not hand a null-ts left row
+    the earliest right payload (the forward walk sorts nulls first)."""
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [20.0, None], "lv": [1.0, 2.0]})
     )
@@ -507,16 +498,14 @@ def test_asof_bucketed_null_ts_all_directions(spark):
     want = {"backward": 5.0, "forward": 9.0, "nearest": 5.0}
     for direction, exp in want.items():
         out = asof_join(
-            left, right, on="ts", by="entity_id",
-            direction=direction, bucket_width=7.0,
+            left, right, on="ts", by="entity_id", direction=direction
         ).toPandas()
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert got[1.0] == exp, (direction, got)
         assert pd.isna(got[2.0]), (direction, got)
     # interpolate too
     out = asof_join(
-        left, right, on="ts", by="entity_id",
-        direction="interpolate", bucket_width=7.0,
+        left, right, on="ts", by="entity_id", direction="interpolate"
     ).toPandas()
     got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
     assert got[1.0] == pytest.approx(7.0)
@@ -588,13 +577,8 @@ def test_asof_null_entity_keys_never_match_all_strategies(spark):
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [None, 1.0], "ts": [5.0, 5.0], "rv": [7.0, 8.0]})
     )
-    for fn, kw in (
-        (asof_join, {"bucket_width": 100.0}),
-        (asof_join_window, {}),
-        (asof_join_broadcast, {}),
-        (asof_join_cogroup, {}),
-    ):
-        out = fn(left, right, on="ts", by="entity_id", **kw).toPandas()
+    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert len(out) == 2, fn.__name__
         assert pd.isna(got[1.0]), fn.__name__   # null key -> no match
@@ -614,8 +598,6 @@ def test_asof_argument_validation(spark):
     )
     with pytest.raises(ValueError, match="right_cols must not contain"):
         asof_join(left, right, on="ts", by="entity_id", right_cols=["ts", "rv"])
-    with pytest.raises(ValueError, match="bucket_width must be"):
-        asof_join(left, right, on="ts", by="entity_id", bucket_width=-5.0)
     for fn in (asof_join, asof_join_broadcast):
         with pytest.raises(ValueError, match="numeric right columns"):
             fn(left, right, on="ts", by="entity_id", direction="interpolate",
@@ -627,7 +609,7 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
     right payload columns (ndarray cells are unhashable in sort_values).
     Array payloads must join fine AND keep the duplicate-ts tie-break
     (backward = greatest payload, Spark array ordering) in parity with
-    the bucketed strategy."""
+    asof_join."""
     from image_feature_extraction_spark.operators.asof import asof_join_cogroup
 
     left = spark.createDataFrame(
@@ -651,10 +633,10 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
         (1, 20): [7, 7],
         (2, 10): [5, 5],
     }
-    bucketed = asof_join(left, right, on="ts", by="entity_id", bucket_width=100.0)
+    window = asof_join(left, right, on="ts", by="entity_id")
     broadcast = asof_join_broadcast(left, right, on="ts", by="entity_id")
     cogroup = asof_join_cogroup(left, right, on="ts", by="entity_id")
-    for name, df in (("bucketed", bucketed), ("broadcast", broadcast), ("cogroup", cogroup)):
+    for name, df in (("window", window), ("broadcast", broadcast), ("cogroup", cogroup)):
         got = {
             (r["entity_id"], r["ts"]): list(r["emb"])
             for r in df.collect()
@@ -786,7 +768,7 @@ def test_auto_bucketed_routing_check_survives_dash_O(spark, monkeypatch):
     from image_feature_extraction_spark.operators import asof as A
     from image_feature_extraction_spark.plans import queries_datapipe as QD
 
-    monkeypatch.setattr(A, "choose_asof_strategy", lambda *a, **k: "window")
+    monkeypatch.setattr(A, "choose_asof_strategy", lambda *a, **k: "bucketed")
     with pytest.raises(RuntimeError, match="auto strategy probe"):
         QD.q_asof_auto_bucketed(spark, "/root/testdata/sf0.001")
 

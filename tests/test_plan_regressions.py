@@ -91,7 +91,8 @@ CASES = {
         lambda s: W.nearest_event_distance(
             _events(s), by="ent", ts="ts", marker=F.col("value") > 5
         ),
-        1, 1, "backward+forward frames collapse into one operator",
+        2, 1, "running frames walking time up and down: two sorts over "
+              "one exchange (a single sort needs an O(n^2) frame)",
     ),
     "moving_aggregate": (
         lambda s: W.moving_aggregate(
@@ -149,14 +150,6 @@ CASES = {
         ),
         1, 1, "one running-sum exchange on the group key",
     ),
-    "asof_join_window": (
-        lambda s: AS.asof_join_window(
-            _events(s),
-            _events(s).withColumnRenamed("value", "rv").drop("id"),
-            on="ts", by="ent",
-        ),
-        1, 1, "union + last(ignorenulls): one shuffle, one window",
-    ),
     "mode_label": (
         lambda s: LB.mode_label(
             s.createDataFrame(
@@ -175,11 +168,10 @@ CASES = {
         lambda s: AS.asof_join(
             _events(s),
             _events(s).withColumnRenamed("value", "rv").drop("id"),
-            on="ts", by="ent", bucket_width=120.0,
+            on="ts", by="ent", direction="nearest",
         ),
-        2, 4, "main merge window + bucket-granularity carry window; "
-              "2 row-scale exchanges + 2 bucket-aggregate partials "
-              "(PLANS.md bucketed-as-of section)",
+        2, 1, "union partitioned by entity: one row-scale exchange, one "
+              "Window per fill direction (nearest fills both)",
     ),
     "gaussian_time_smooth": (
         lambda s: W.gaussian_time_smooth(
@@ -210,6 +202,27 @@ def test_windowed_operator_plan_pinned(spark, name):
     assert got_ex == want_ex, (
         f"{name}: {got_ex} Exchanges, audited shape has {want_ex} ({why})"
     )
+
+
+def test_no_window_frame_runs_to_unbounded_following(spark):
+    """Spark re-aggregates a frame from the current row to UNBOUNDED
+    FOLLOWING for every row (UnboundedFollowingWindowFunctionFrame), so
+    it costs O(n^2) per partition; a hot entity made that minutes. The
+    as-of merge (every direction) and nearest_event_distance walk time
+    descending over a running frame instead. Whole-partition frames are
+    O(n) and stay allowed."""
+    right = _events(spark).withColumnRenamed("value", "rv").drop("id")
+    builds = {
+        d: AS.asof_join(_events(spark), right, on="ts", by="ent", direction=d)
+        for d in ("backward", "forward", "nearest", "interpolate")
+    }
+    builds["nearest_event_distance"] = W.nearest_event_distance(
+        _events(spark), by="ent", ts="ts", marker=F.col("value") > 5
+    )
+    for name, df in builds.items():
+        plan = plan_of(df)
+        assert "unboundedpreceding$(), currentrow$()" in plan, name
+        assert "currentrow$(), unboundedfollowing$()" not in plan, name
 
 
 def test_flagship_is_one_python_stage(spark):

@@ -90,21 +90,17 @@ def test_partitioned_write_prunes(spark, tmp_path):
     assert rd.count() == want
 
 
-def test_bucketed_task_row_ceiling_vs_window(spark):
-    """SCALE.md's skew claim as a regression test (VERDICT r2 #7): with one
-    entity owning ~40% of all events, an entity-partitioned window puts the
-    WHOLE hot entity (8,000 rows here) into one task, while the bucketed
-    strategy's per-task ceiling is the (entity, time-bucket) occupancy —
-    ~80 mean / <200 max rows at W=10,000 over a 1e6 time range (100
-    buckets). The join stays correct at that bucket width."""
+def test_asof_hot_entity_forward_backward(spark):
+    """One entity owns 40% of the left rows, so the entity-window merge
+    holds its whole history in one task (SCALE.md). Backward and forward
+    matches there must still equal pandas merge_asof; both run over
+    running frames, so the hot task costs O(n)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F
 
     from image_feature_extraction_spark.operators.asof import asof_join
 
     rng = np.random.default_rng(7)
-    n_hot, n_cold = 8_000, 12_000  # hot entity = 40% of 20k left rows
+    n_hot, n_cold = 8_000, 12_000
     left = pd.DataFrame(
         {
             "entity_id": np.concatenate(
@@ -121,45 +117,22 @@ def test_bucketed_task_row_ceiling_vs_window(spark):
             "rv": rng.normal(size=2_000),
         }
     ).drop_duplicates(["entity_id", "ts"])
-    ldf = spark.createDataFrame(left)
-    W = 10_000.0
-
-    # ceiling of the window strategy: one task sees the whole hot entity
-    window_max = ldf.groupBy("entity_id").count().agg(F.max("count")).first()[0]
-    hot_rows = len(left[left["entity_id"] == 0])
-    assert window_max == hot_rows >= 7_000
-
-    # ceiling of the bucketed strategy: max (entity, bucket) occupancy —
-    # the hot entity splits across ~100 time buckets
-    bucket_max = (
-        ldf.groupBy(
-            "entity_id", F.floor(F.col("ts").cast("double") / F.lit(W)).alias("_b")
+    ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
+    assert (left["entity_id"] == 0).sum() >= 7_000
+    cols = ["entity_id", "ts", "lv", "rv"]
+    for direction in ("backward", "forward"):
+        got = (
+            asof_join(ldf, rdf, on="ts", by="entity_id", direction=direction)
+            .toPandas()[cols]
+            .sort_values(["entity_id", "ts"])
+            .reset_index(drop=True)
         )
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert bucket_max < 200, bucket_max
-    assert window_max / bucket_max > 40  # documented headroom
-
-    # and the bucketed join is still CORRECT at that width
-    got = (
-        asof_join(ldf, spark.createDataFrame(right), on="ts", by="entity_id",
-                  bucket_width=W)
-        .toPandas()
-        .sort_values(["entity_id", "ts"])
-        .reset_index(drop=True)
-    )
-    want = (
-        pd.merge_asof(
-            left.sort_values("ts"), right.sort_values("ts"),
-            on="ts", by="entity_id", direction="backward",
+        want = (
+            pd.merge_asof(
+                left.sort_values("ts"), right.sort_values("ts"),
+                on="ts", by="entity_id", direction=direction,
+            )[cols]
+            .sort_values(["entity_id", "ts"])
+            .reset_index(drop=True)
         )
-        .sort_values(["entity_id", "ts"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        got[["entity_id", "ts", "lv", "rv"]],
-        want[["entity_id", "ts", "lv", "rv"]],
-        check_dtype=False, atol=1e-12,
-    )
+        pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
