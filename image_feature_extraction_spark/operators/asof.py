@@ -8,17 +8,19 @@ with the greatest right.ts <= t (backward; forward/nearest variants mirror).
 Zero temporal leakage: a matched right timestamp NEVER exceeds the left
 timestamp in backward mode.
 
-Physical strategies (``asof_join_auto`` picks between the first two by a
-bounded right-side row-count probe):
+Physical strategies (``asof_join_auto`` picks one by a bounded
+right-side row-count probe):
 
-1. ``asof_join`` — the entity-window merge, all in the JVM. Left rows and
-   right payload rows are unioned and partitioned by the ``by`` keys
-   alone (one exchange). Each direction is one ``last(ignorenulls)``
-   over a running frame: backward walks time ascending, forward walks it
-   descending, nearest and interpolate combine the two. A running frame
-   costs O(n) per partition. Limit: one entity's whole history is one
-   task. Spark's window buffer spills to disk, so memory stays safe, but
-   wall time is bounded by the hottest entity.
+1. ``asof_join`` — the entity-window merge, all in the JVM, for a right
+   side of any size. Left rows and right payload rows are unioned and
+   partitioned by the ``by`` keys alone (one exchange). Each direction is
+   one ``last(ignorenulls)`` over a running frame: backward walks time
+   ascending, forward walks it descending, nearest and interpolate
+   combine the two, and cubic first gives every right row its stencil
+   neighbour in each walk. A running frame costs O(n) per partition.
+   Limit: one entity's whole history is one task. Spark's window buffer
+   spills to disk, so memory stays safe, but wall time is bounded by the
+   hottest entity.
 
 2. ``asof_join_broadcast`` — for a SMALL right side (dimension/stats
    table): broadcast + map-side vectorized searchsorted, ZERO shuffle of
@@ -26,17 +28,13 @@ bounded right-side row-count probe):
    with other Arrow batch functions inside one mapInArrow stage. This is
    the 10^12-left-rows x 10^5-right-rows production shape.
 
-3. ``asof_join_cogroup`` — per-partition index slices for a right side
-   ABOVE broadcast size: both sides hash-shuffled on entity, per-entity
-   searchsorted merge; each task holds only its entities' slice of the
-   index (never the whole 3 GB stats table). The only large-right-side
-   home of direction="cubic".
-
-Directions: backward / forward / nearest and "interpolate" (linear
-interpolation between the bracketing samples, reference N8) on every
-strategy; "cubic" on broadcast and cogroup. Among duplicate right
-timestamps, backward matches the greatest payload and forward the least
-(Spark struct ordering: null smallest, NaN greatest).
+Directions: backward / forward / nearest, "interpolate" (linear
+interpolation between the bracketing samples, reference N8) and "cubic"
+(non-uniform Catmull-Rom over a 4-point stencil) on both strategies.
+Among duplicate right timestamps, backward matches the greatest payload
+and forward the least (Spark struct ordering: null smallest, NaN
+greatest). Both return a matched NaN payload as NaN and a null one as
+null.
 
 DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 """
@@ -114,22 +112,23 @@ def _tuple_sortable(dt) -> bool:
 _NAN = "__asof_nan_"
 
 
-def _nan_flags(right: DataFrame, rcols, prefix: str = ""):
+def _nan_flags(right: DataFrame, rcols):
     """isnan() of each float right column, to collect next to it: pandas
     holds null and NaN alike, but Spark orders null smallest and NaN
-    greatest, and _dup_ts_sort follows Spark."""
+    greatest, and _dup_ts_sort follows Spark. The flag (false for null)
+    also tells the two apart in the broadcast output."""
     from pyspark.sql.types import DoubleType, FloatType
 
     return [
-        F.isnan(c).alias(_NAN + prefix + c)
+        F.isnan(c).alias(_NAN + c)
         for c in rcols
         if isinstance(right.schema[c].dataType, (DoubleType, FloatType))
     ]
 
 
-def _dup_ts_sort(rp, head_cols, payload_cols, rschema, prefix: str = ""):
-    """Deterministic duplicate-timestamp sort shared by the broadcast index
-    build and the cogroup merge: order by (keys, ts, payload...) replicating
+def _dup_ts_sort(rp, head_cols, payload_cols, rschema):
+    """Deterministic duplicate-timestamp sort of the broadcast index
+    build: order by (keys, ts, payload...) replicating
     asof_join's struct ordering (backward matches the greatest payload
     among duplicate right timestamps, forward the least; null payload =
     smallest, hence na_position='first', and a NaN flagged by _nan_flags
@@ -140,25 +139,24 @@ def _dup_ts_sort(rp, head_cols, payload_cols, rschema, prefix: str = ""):
     a map/struct payload the stable sort keeps input order)."""
     from pyspark.sql.types import ArrayType
 
-    keys = [prefix + c for c in head_cols]
+    keys = list(head_cols)
     assigns = {}
     for c in payload_cols:
         dt = rschema[c].dataType
-        col = prefix + c
         if not _tuple_sortable(dt):
             continue
         if isinstance(dt, ArrayType):
-            sk = "__asof_sk_" + col
-            assigns[sk] = rp[col].map(_spark_array_key, na_action="ignore")
+            sk = "__asof_sk_" + c
+            assigns[sk] = rp[c].map(_spark_array_key, na_action="ignore")
             keys.append(sk)
         else:
-            if _NAN + col in rp:
-                keys.append(_NAN + col)
-            keys.append(col)
+            if _NAN + c in rp:
+                keys.append(_NAN + c)
+            keys.append(c)
     if assigns:
         rp = rp.assign(**assigns)
     rp = rp.sort_values(keys, kind="stable", na_position="first")
-    return rp.drop(columns=[c for c in rp.columns if c.startswith(("__asof_sk_", _NAN))])
+    return rp.drop(columns=list(assigns))
 
 
 def _np_asof_match(rts, t, direction: str, tolerance):
@@ -166,9 +164,8 @@ def _np_asof_match(rts, t, direction: str, tolerance):
 
     Returns (ok_mask, sel) for backward/forward/nearest — sel[i] indexes rts
     where ok — or (ok_mask, (bi, fi, frac)) for interpolate, where the
-    output value is vb + (vf - vb) * frac (exact hits give frac == 0).
-    Shared by the broadcast and cogroup physical strategies so their
-    semantics cannot drift.
+    output value is vb + (vf - vb) * frac (exact hits give frac == 0),
+    or (ok_mask, (i0, i1, i2, i3)) for cubic.
 
     A NaN left timestamp never matches (searchsorted would otherwise
     place NaN after every right row — a spurious backward match against
@@ -228,35 +225,40 @@ def _np_asof_match(rts, t, direction: str, tolerance):
     return sel >= 0, sel
 
 
-def _cubic_eval(t, t0, t1, t2, t3, y0, y1, y2, y3):
+def _cubic_eval(t, t0, t1, t2, t3, y0, y1, y2, y3, where=None):
     """Non-uniform Catmull-Rom: cubic Hermite on the bracketing interval
     [t1, t2] with chordal central-difference tangents m1 = (y2-y0)/(t2-t0),
     m2 = (y3-y1)/(t3-t1) — the classic non-uniform Catmull-Rom form, which
     reduces to the textbook uniform spline on an even grid and reproduces
     exact hits (s==0 -> y1, s==1 -> y2).
 
-    The expression tree here is mirrored TERM FOR TERM by the DuckDB
-    oracle SQL (plans/queries_datapipe._asof_cubic_sql) so both engines
-    produce IEEE-identical doubles. Degenerate spacings are defined, not
-    errors: h == 0 (exact hit on a duplicated bracket) returns y1; a
-    zero-width tangent window drops that tangent (slope 0)."""
+    One expression tree for both strategies: numpy arrays with
+    ``where=np.where`` (the default) in the broadcast batch function,
+    Spark Columns with a CASE WHEN ``where`` in asof_join. The DuckDB
+    oracle SQL (plans/queries_datapipe._ASOF_CUBIC_SQL) mirrors it TERM FOR
+    TERM, so all three produce IEEE-identical doubles. Degenerate spacings
+    are defined, not errors: h == 0 (exact hit on a duplicated bracket)
+    returns y1; a zero-width tangent window drops that tangent (slope 0).
+    No division ever sees a zero divisor, which ANSI-mode Spark would
+    raise on."""
     import numpy as np
 
+    where = where or np.where
     h = t2 - t1
-    s = (t - t1) / np.where(h > 0, h, 1.0)
+    s = (t - t1) / where(h > 0, h, 1.0)
     s2 = s * s
     s3 = s2 * s
     dt20 = t2 - t0
     dt31 = t3 - t1
-    m1 = np.where(dt20 > 0, (y2 - y0) / np.where(dt20 > 0, dt20, 1.0), 0.0)
-    m2 = np.where(dt31 > 0, (y3 - y1) / np.where(dt31 > 0, dt31, 1.0), 0.0)
+    m1 = where(dt20 > 0, (y2 - y0) / where(dt20 > 0, dt20, 1.0), 0.0)
+    m2 = where(dt31 > 0, (y3 - y1) / where(dt31 > 0, dt31, 1.0), 0.0)
     poly = (
         (2.0 * s3 - 3.0 * s2 + 1.0) * y1
         + ((s3 - 2.0 * s2 + s) * h) * m1
         + (-2.0 * s3 + 3.0 * s2) * y2
         + ((s3 - s2) * h) * m2
     )
-    return np.where(h > 0, poly, y1)
+    return where(h > 0, poly, y1)
 
 
 def _resolve_output_cols(
@@ -271,7 +273,7 @@ def _resolve_output_cols(
 ):
     """Shared strategy prologue: defaulted right columns, output renames,
     and the argument validations every strategy needs (kept in ONE place
-    so the three physical strategies cannot drift):
+    so the two physical strategies cannot drift):
 
     - right_cols must not contain `on` or a `by` key (a duplicate alias is
       an ambiguous-attribute error three plans later; include_right_on is
@@ -319,13 +321,18 @@ def _ts_double(df: DataFrame, on: str):
     TIMESTAMP_NTZ has no direct double cast in Spark 4; route via timestamp
     (session timezone is pinned to UTC in session.py, so this is stable).
     A NaN time becomes null, so it never matches — Spark would otherwise
-    order it after every time, and broadcast/cogroup treat it as null."""
+    order it after every time, and broadcast treats it as null."""
     from pyspark.sql.types import TimestampNTZType
 
     c = F.col(on)
     if isinstance(df.schema[on].dataType, TimestampNTZType):
         c = c.cast("timestamp")
     return F.nanvl(c.cast("double"), F.lit(None).cast("double"))
+
+
+def _sql_where(cond, a, b):
+    """np.where for Spark Columns: _cubic_eval's ``where``."""
+    return F.when(cond, a).otherwise(b)
 
 
 def asof_join(
@@ -358,18 +365,17 @@ def asof_join(
     either side) return null — no extrapolation. Right columns must be
     numeric and are emitted as double. With a tolerance, rows where either
     bracketing sample is farther than `tolerance` from t are nulled.
+
+    direction="cubic" (the reference's default 3rd-order interpolator,
+    tools/ExtractWindow.cxx:134-141) evaluates the non-uniform Catmull-Rom
+    of _cubic_eval over the bracketing pair plus one right row on each
+    side, with the same caveats, the same hull rule (null short of the
+    full 4-point stencil) and the same tolerance rule as interpolate.
     """
     by_l = _as_list(by)
     rcols, out_rnames, right_on_out = _resolve_output_cols(
         left.columns, right, on, by_l, right_cols, suffix, include_right_on, direction
     )
-    if direction == "cubic":
-        # the 4-point stencil needs two rows on EACH side of every probe;
-        # a running fill carries only the nearest one
-        raise ValueError(
-            "direction='cubic' is supported by asof_join_broadcast and "
-            "asof_join_cogroup (index-based strategies), not asof_join"
-        )
 
     # Right rows are renamed so self-lineage (left and right derived from
     # one scan) can't collide on attribute names. Null right timestamps are
@@ -416,18 +422,44 @@ def asof_join(
     # descending and takes the least. NULLS FIRST keeps a null-ts left row
     # ahead of every right row in the forward walk too.
     part = Window.partitionBy(*r_by)
-    running = (Window.unboundedPreceding, Window.currentRow)
-    wb = part.orderBy(
-        F.col("_ts_d").asc(), F.col("_tag").asc(), F.col("_p").asc()
-    ).rowsBetween(*running)
-    wf = part.orderBy(
+    ob = part.orderBy(F.col("_ts_d").asc(), F.col("_tag").asc(), F.col("_p").asc())
+    of = part.orderBy(
         F.col("_ts_d").desc_nulls_first(), F.col("_tag").asc(), F.col("_p").desc()
-    ).rowsBetween(*running)
+    )
+    running = (Window.unboundedPreceding, Window.currentRow)
+    if direction == "cubic":
+        # Each right row first takes the right row just before it in the
+        # walk as its stencil neighbour (y0 backward, y3 forward), then the
+        # running fill carries the pair: (y1, y0) backward, (y2, y3)
+        # forward. Neighbour and fill share one walk's sort.
+        def carry(df, o, out):
+            prev = F.last("_p", ignorenulls=True).over(
+                o.rowsBetween(Window.unboundedPreceding, -1)
+            )
+            pair = F.when(F.col("_tag") == 0, F.struct(F.col("_p").alias("y"), prev.alias("n")))
+            df = df.select("*", pair.alias("_q"))
+            fill = F.last("_q", ignorenulls=True).over(o.rowsBetween(*running))
+            return df.select("*", fill.alias(out)).drop("_q")
+
+        filled = carry(carry(u, ob, "_fb"), of, "_ff").where(F.col("_tag") == 1)
+        t = F.col("_ts_d")
+        stencil = ("_fb.n", "_fb.y", "_ff.y", "_ff.n")
+        ts = [F.col(q + "._p_ts") for q in stencil]
+        ok = ts[0].isNotNull() & ts[3].isNotNull()
+        if tolerance is not None:
+            ok = ok & (F.greatest(t - ts[1], ts[2] - t) <= F.lit(float(tolerance)))
+        sel = [F.col("_l_" + c).alias(c) for c in lkeep]
+        for c, oc in zip(rcols, out_rnames):
+            ys = [F.col(f"{q}.{P}{c}").cast("double") for q in stencil]
+            val = _cubic_eval(t, *ts, *ys, where=_sql_where)
+            sel.append(F.when(ok, val).alias(oc))
+        return filled.select(*sel)
+
     fills = []
     if direction in ("backward", "nearest", "interpolate"):
-        fills.append(F.last("_p", ignorenulls=True).over(wb).alias("_fb"))
+        fills.append(F.last("_p", ignorenulls=True).over(ob.rowsBetween(*running)).alias("_fb"))
     if direction in ("forward", "nearest", "interpolate"):
-        fills.append(F.last("_p", ignorenulls=True).over(wf).alias("_ff"))
+        fills.append(F.last("_p", ignorenulls=True).over(of.rowsBetween(*running)).alias("_ff"))
     filled = u.select("*", *fills).where(F.col("_tag") == 1)
 
     if direction == "interpolate":
@@ -532,10 +564,10 @@ def asof_broadcast_stage(
     out_schema = StructType(out_fields)
 
     # Collect + index the right side on the driver (counted, bounded).
-    # Known pandas round-trip limitation (also applies to cogroup): a
-    # NULLABLE integer right column travels as float64, so int64 values
-    # above 2^53 in a column that also has nulls lose precision; the
-    # JVM strategy (asof_join) is exact for that shape.
+    # Known pandas round-trip limitation: a NULLABLE integer right column
+    # travels as float64, so int64 values above 2^53 in a column that also
+    # has nulls lose precision; the JVM strategy (asof_join) is exact for
+    # that shape.
     rp = (
         right.select(*by_l, on, *rcols, *_nan_flags(right, rcols))
         .limit(max_right_rows + 1)
@@ -544,10 +576,13 @@ def asof_broadcast_stage(
     if len(rp) > max_right_rows:
         raise ValueError(
             f"asof_join_broadcast: right side exceeds {max_right_rows} rows; "
-            "use asof_join or asof_join_cogroup instead "
-            "(asof_join_auto picks automatically)"
+            "use asof_join instead (asof_join_auto picks automatically)"
         )
 
+    # pandas holds a null float as NaN: the output columns that can hold a
+    # NaN (float payloads, every blend) carry an explicit null mask, which
+    # the payload's isnan flag keeps off a NaN
+    masked = [c for c in rcols if blend or _NAN + c in rp]
     index: dict = {}
     # right rows with a null timestamp are unmatchable — drop them before
     # the index build (NaN in a sorted array corrupts searchsorted)
@@ -568,7 +603,12 @@ def asof_broadcast_stage(
                 )
                 for c in (on, *rcols)
             }
-            index[k] = (_ts_np_series(grp[on]), payload)
+            nulls = {
+                c: (grp[c].isna() & ~grp[_NAN + c] if _NAN + c in grp else grp[c].isna())
+                .to_numpy()
+                for c in masked
+            }
+            index[k] = (_ts_np_series(grp[on]), payload, nulls)
     b_index = right.sparkSession.sparkContext.broadcast(index)
     lcols = left_schema.names
     # dtype templates only — capturing `rp` itself would cloudpickle the
@@ -620,12 +660,13 @@ def asof_broadcast_stage(
                 if templates is not None
                 else {}
             )
+            null = {oc: np.ones(n, dtype=bool) for c, oc in gather_cols if c in masked}
             for key, rows in grp_of.items():
                 k = key if isinstance(key, tuple) else (key,)
                 ent = idx.get(k)
                 if ent is None:
                     continue
-                rts, payload = ent
+                rts, payload, nulls = ent
                 t = lts[rows]
                 ok, m = _np_asof_match(rts, t, direction, tolerance)
                 if not ok.any():
@@ -637,26 +678,29 @@ def asof_broadcast_stage(
                         vb = payload[c][bi].astype(np.float64)
                         vf = payload[c][fi].astype(np.float64)
                         targets[oc][hit_rows] = (vb + (vf - vb) * frac)[ok]
+                        null[oc][hit_rows] = (nulls[c][bi] | nulls[c][fi])[ok]
                 elif cubic:
-                    i0, i1, i2, i3 = m
+                    tq = [rts[i] for i in m]
                     for c, oc in gather_cols:
-                        vals = _cubic_eval(
-                            t, rts[i0], rts[i1], rts[i2], rts[i3],
-                            payload[c][i0].astype(np.float64),
-                            payload[c][i1].astype(np.float64),
-                            payload[c][i2].astype(np.float64),
-                            payload[c][i3].astype(np.float64),
-                        )
-                        targets[oc][hit_rows] = vals[ok]
+                        ys = [payload[c][i].astype(np.float64) for i in m]
+                        targets[oc][hit_rows] = _cubic_eval(t, *tq, *ys)[ok]
+                        # a null sample nulls the output where SQL would
+                        # propagate it: evaluate on NaN-for-null markers
+                        marks = [np.where(nulls[c][i], np.nan, 0.0) for i in m]
+                        null[oc][hit_rows] = np.isnan(_cubic_eval(t, *tq, *marks))[ok]
                 else:
                     hit_sel = m[ok]
                     for c, oc in gather_cols:
                         targets[oc][hit_rows] = payload[c][hit_sel]
+                        if oc in null:
+                            null[oc][hit_rows] = nulls[c][hit_sel]
             new_cols = []
             for _c, oc in gather_cols:
                 t = targets.get(oc)
                 if t is None:
                     new_cols.append(pa.nulls(n, out_pa_types[oc]))
+                elif oc in null:
+                    new_cols.append(pa.array(t, type=out_pa_types[oc], mask=null[oc]))
                 else:
                     new_cols.append(
                         pa.array(t, type=out_pa_types[oc], from_pandas=True)
@@ -667,158 +711,6 @@ def asof_broadcast_stage(
             )
 
     return fn, out_schema
-
-
-def asof_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    by="entity_id",
-    right_cols=None,
-    direction: str = "backward",
-    tolerance: float | None = None,
-    suffix: str = "_right",
-    include_right_on: bool = False,
-    num_buckets: int = 128,
-) -> DataFrame:
-    """Partitioned-index as-of join: the "per-partition index slice" tier.
-
-    Both sides are hash-shuffled on a BUCKET of the entity key
-    (xxhash64(entity) % num_buckets — one exchange each) and merged with
-    one vectorized searchsorted per entity inside the bucket task. Each
-    task holds only its bucket's slice of the right-side index, so a
-    right side far above broadcast size (the ~3 GB production stats
-    table, SCALE.md) never concentrates on the driver or in every
-    executor — and the Python call count is num_buckets, not #entities
-    (per-entity cogroups were measured ~10x slower from per-group
-    applyInPandas overhead alone). Matching semantics are shared with
-    asof_join_broadcast via _np_asof_match, including the duplicate-
-    timestamp contract (backward = greatest payload, forward = least)
-    and direction="interpolate".
-
-    Skew note: a single entity's whole left+right history lands in one
-    bucket, as in asof_join's entity window.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    by_l = _as_list(by)
-    rcols, out_rnames, right_on_out = _resolve_output_cols(
-        left.columns, right, on, by_l, right_cols, suffix, include_right_on, direction
-    )
-    interp = direction == "interpolate"
-    cubic = direction == "cubic"
-    blend = interp or cubic  # multi-row blends emit double columns
-
-    rschema = {f.name: f for f in right.schema.fields}
-    out_fields = list(left.schema.fields) + [
-        StructField(oc, DoubleType() if blend else rschema[c].dataType, True)
-        for c, oc in zip(rcols, out_rnames)
-    ]
-    if right_on_out:
-        out_fields.append(StructField(right_on_out, rschema[on].dataType, True))
-    out_schema = StructType(out_fields)
-    out_names = [f.name for f in out_fields]
-    gather_cols = list(zip(rcols, out_rnames))
-    if right_on_out:
-        gather_cols.append((on, right_on_out))
-
-    # Rename the right side up front: cogroup's Arrow transfer silently
-    # drops right-side columns whose names collide with left-side non-key
-    # columns (observed on the shared `on` column under self-lineage).
-    RP = "_r_"
-
-    def _alloc(n: int, src):
-        if blend:
-            return np.full(n, np.nan, dtype=np.float64)
-        if src is not None and pd.api.types.is_datetime64_any_dtype(src.dtype):
-            return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
-        if src is not None and src.dtype.kind == "f":
-            return np.full(n, np.nan, dtype=np.float64)
-        return np.full(n, None, dtype=object)
-
-    def merge(lp: pd.DataFrame, rp: pd.DataFrame) -> pd.DataFrame:
-        n = len(lp)
-        if n == 0:
-            return pd.DataFrame(columns=out_names)
-        out = lp.drop(columns=["_g"])
-        if len(rp) == 0:
-            for c, oc in gather_cols:
-                out[oc] = _alloc(n, None)
-            return out[out_names]
-        # same duplicate-ts contract as the broadcast index build (null ts
-        # rows unmatchable; null payload = smallest tuple, like struct-max)
-        rp = rp[rp[RP + on].notna()]
-        if len(rp) == 0:
-            for c, oc in gather_cols:
-                out[oc] = _alloc(n, None)
-            return out[out_names]
-        rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema, prefix=RP)
-        payload = {
-            c: (
-                _dt_naive(rp[RP + c]).to_numpy().astype("datetime64[us]")
-                if pd.api.types.is_datetime64_any_dtype(rp[RP + c].dtype)
-                else rp[RP + c].to_numpy()
-            )
-            for c in (on, *rcols)
-        }
-        rts_all = _ts_np_series(rp[RP + on])
-        r_groups = rp.groupby([RP + c for c in by_l], sort=False).indices
-        lts = _ts_np_series(lp[on])
-        l_groups = lp.groupby(by_l, sort=False).indices
-        targets = {oc: _alloc(n, rp[RP + c]) for c, oc in gather_cols}
-        for key, rows in l_groups.items():
-            rrows = r_groups.get(key)
-            if rrows is None:
-                continue
-            # rp is entity-sorted, so an entity's rows are one contiguous,
-            # ts-sorted slice
-            rts = rts_all[rrows]
-            ok, m = _np_asof_match(rts, lts[rows], direction, tolerance)
-            if not ok.any():
-                continue
-            hit_rows = rows[ok]
-            if interp:
-                bi, fi, frac = m
-                for c, oc in gather_cols:
-                    vb = payload[c][rrows][bi].astype(np.float64)
-                    vf = payload[c][rrows][fi].astype(np.float64)
-                    targets[oc][hit_rows] = (vb + (vf - vb) * frac)[ok]
-            elif cubic:
-                i0, i1, i2, i3 = m
-                t = lts[rows]
-                for c, oc in gather_cols:
-                    pv = payload[c][rrows]
-                    vals = _cubic_eval(
-                        t, rts[i0], rts[i1], rts[i2], rts[i3],
-                        pv[i0].astype(np.float64),
-                        pv[i1].astype(np.float64),
-                        pv[i2].astype(np.float64),
-                        pv[i3].astype(np.float64),
-                    )
-                    targets[oc][hit_rows] = vals[ok]
-            else:
-                hit_sel = rrows[m[ok]]
-                for c, oc in gather_cols:
-                    targets[oc][hit_rows] = payload[c][hit_sel]
-        for c, oc in gather_cols:
-            out[oc] = targets[oc]
-        return out[out_names]
-
-    bucket_of = lambda cols: F.pmod(F.xxhash64(*cols), F.lit(num_buckets))  # noqa: E731
-    l2 = left.withColumn("_g", bucket_of(by_l))
-    rsel = right.select(
-        *[F.col(c).alias(RP + c) for c in by_l],
-        F.col(on).alias(RP + on),
-        *[F.col(c).alias(RP + c) for c in rcols],
-        *_nan_flags(right, rcols, RP),
-    ).withColumn("_g", bucket_of([RP + c for c in by_l]))
-    return (
-        l2.groupBy("_g")
-        .cogroup(rsel.groupBy("_g"))
-        .applyInPandas(merge, out_schema)
-    )
 
 
 def choose_asof_strategy(right: DataFrame, broadcast_max_rows: int = 2_000_000) -> str:
@@ -848,9 +740,7 @@ def asof_join_auto(
     - 'broadcast' (<= broadcast_max_rows): zero shuffle of the left side,
       map-side searchsorted against a driver-built index;
     - 'window' (otherwise): asof_join, the entity-window merge — a big
-      right side never crosses the driver;
-    - 'cogroup' for direction='cubic' above the cap, which the window
-      merge does not implement.
+      right side never crosses the driver.
 
     The choice is recorded on the result as ``df._asof_strategy``.
     """
@@ -869,9 +759,6 @@ def asof_join_auto(
             out = asof_join_broadcast(
                 left, right, max_right_rows=broadcast_max_rows, **kw
             )
-        elif direction == "cubic":
-            strategy = "cogroup"
-            out = asof_join_cogroup(left, right, **kw)
         else:
             out = asof_join(left, right, **kw)
     finally:

@@ -853,20 +853,6 @@ def q_asof_auto_bucketed(spark, sf_dir):
 _register("q_asof_auto_bucketed", q_asof_auto_bucketed, _ASOF_BACKWARD_SQL)
 
 
-def q_asof_cogroup(spark, sf_dir):
-    """Per-partition-index as-of strategy (cogroup): each task sees only
-    its entities' right-side slice. Same oracle as q_asof_join."""
-    from ..operators.asof import asof_join_cogroup
-
-    clicks, purchases = _clicks_purchases(spark, sf_dir)
-    return _clicks_asof_out(
-        asof_join_cogroup(clicks, purchases, on="ts", by="user_id")
-    )
-
-
-_register("q_asof_cogroup", q_asof_cogroup, _ASOF_BACKWARD_SQL)
-
-
 def q_asof_broadcast(spark, sf_dir):
     """Broadcast as-of strategy standalone (the flagship's production
     shape: zero left-side shuffle, map-side searchsorted). Same oracle as
@@ -881,9 +867,11 @@ def q_asof_broadcast(spark, sf_dir):
 
 _register("q_asof_broadcast", q_asof_broadcast, _ASOF_BACKWARD_SQL)
 
-# The entity-window strategy is asof_join itself: a second registered name
-# for q_asof_join and its oracle, since callers pin both names.
+# The entity-window strategy is asof_join itself, and it also replaced the
+# per-partition cogroup strategy: second registered names for q_asof_join
+# and its oracle, since callers pin these names.
 _register("q_asof_window", q_asof_join, _ASOF_BACKWARD_SQL)
+_register("q_asof_cogroup", q_asof_join, _ASOF_BACKWARD_SQL)
 
 
 def q_checkpoint_ledger(spark, sf_dir):

@@ -1,5 +1,6 @@
-"""Differential as-of fuzz: every physical strategy, every direction,
-against pandas ``merge_asof`` plus the duplicate-timestamp rule.
+"""Differential as-of fuzz: both physical strategies, every direction,
+against pandas ``merge_asof`` plus the duplicate-timestamp rule, and
+against each other cell by cell.
 
 The rule: among right rows sharing one (entity, ts), backward takes the
 greatest payload and forward the least, in Spark struct ordering over the
@@ -15,12 +16,14 @@ one hot entity holding over half the rows, entities on one side only,
 and (separately) an empty right side. The leakage property is checked on
 every strategy's own output: a backward match never lies after the left
 ts, a forward match never before it, and every match stays within the
-tolerance.
+tolerance. The two strategies must also agree bitwise, telling null from
+NaN, in all five directions; that is the only oracle for cubic.
 """
 
 from __future__ import annotations
 
 import math
+import struct
 
 import numpy as np
 import pandas as pd
@@ -29,11 +32,10 @@ import pytest
 from image_feature_extraction_spark.operators.asof import (
     asof_join,
     asof_join_broadcast,
-    asof_join_cogroup,
 )
 
 DIRECTIONS = ("backward", "forward", "nearest", "interpolate")
-STRATEGIES = (asof_join, asof_join_broadcast, asof_join_cogroup)
+STRATEGIES = (asof_join, asof_join_broadcast)
 L_SCHEMA = "k long, ts long, lid long"
 R_SCHEMA = "k long, ts long, rv double, ri long"
 
@@ -123,13 +125,27 @@ def _same(a, b) -> bool:
 
 
 def _run(fn, ldf, rdf, direction, tol):
-    interp = direction == "interpolate"
+    blend = direction in ("interpolate", "cubic")
     out = fn(
         ldf, rdf, on="ts", by="k", direction=direction, tolerance=tol,
-        include_right_on=not interp,
+        include_right_on=not blend,
     )
-    cols = ["lid", "ts", "ri", "rv"] + ([] if interp else ["ts_right"])
+    cols = ["lid", "ts", "ri", "rv"] + ([] if blend else ["ts_right"])
     return out.select(*cols).collect()
+
+
+def _bits(v):
+    """A cell as compared bitwise: a float by its IEEE bytes (NaN is not
+    null, -0.0 is not 0.0), anything else as is."""
+    return struct.pack("<d", v) if isinstance(v, float) else v
+
+
+def _check_strategies_agree(outs, direction, tol):
+    a, b = ({r["lid"]: tuple(_bits(v) for v in r) for r in rows} for rows in outs)
+    bad = [(lid, row, b.get(lid)) for lid, row in a.items() if b.get(lid) != row]
+    assert len(a) == len(b) and not bad, (
+        f"{direction} tol={tol}: {len(bad)} rows differ between strategies, e.g. {bad[:5]}"
+    )
 
 
 def _check(name, rows, want, direction, tol, n_left):
@@ -159,18 +175,20 @@ def test_asof_differential_fuzz(spark, seed, tol):
     left, right = _gen(seed)
     ldf = spark.createDataFrame(left, L_SCHEMA)
     rdf = spark.createDataFrame(right, R_SCHEMA)
-    for direction in DIRECTIONS:
-        want = _oracle(left, right, direction, tol)
-        for fn in STRATEGIES:
-            rows = _run(fn, ldf, rdf, direction, tol)
-            _check(fn.__name__, rows, want, direction, tol, len(left))
+    for direction in (*DIRECTIONS, "cubic"):
+        outs = [_run(fn, ldf, rdf, direction, tol) for fn in STRATEGIES]
+        if direction in DIRECTIONS:
+            want = _oracle(left, right, direction, tol)
+            for fn, rows in zip(STRATEGIES, outs):
+                _check(fn.__name__, rows, want, direction, tol, len(left))
+        _check_strategies_agree(outs, direction, tol)
 
 
 def test_asof_fuzz_empty_right(spark):
     left, _ = _gen(3)
     ldf = spark.createDataFrame(left, L_SCHEMA)
     rdf = spark.createDataFrame([], R_SCHEMA)
-    for direction in DIRECTIONS:
+    for direction in (*DIRECTIONS, "cubic"):
         for fn in STRATEGIES:
             rows = _run(fn, ldf, rdf, direction, None)
             assert len(rows) == len(left), fn.__name__

@@ -341,11 +341,10 @@ def test_flagship_asof_no_leakage_and_matches_pandas(spark):
 
 
 def test_asof_multi_key_by(spark):
-    """Composite entity key (by=[k1,k2]) for all three strategies."""
+    """Composite entity key (by=[k1,k2]) for both strategies."""
     from image_feature_extraction_spark.operators.asof import (
         asof_join,
         asof_join_broadcast,
-        asof_join_cogroup,
     )
 
     rng = np.random.default_rng(42)
@@ -373,7 +372,7 @@ def test_asof_multi_key_by(spark):
         )
         .sort_values(["k1", "k2", "ts", "lv"]).reset_index(drop=True)
     )[["k1", "k2", "ts", "lv", "rv"]]
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         got = (
             fn(ldf, rdf, on="ts", by=["k1", "k2"])
             .toPandas()[["k1", "k2", "ts", "lv", "rv"]]
@@ -538,7 +537,7 @@ def test_asof_randomized_property(spark, seed):
 
 # ---------------------------------------------------------------------------
 # Round 2: duplicate-right-ts tie-break, interpolate, strategy selector,
-# cogroup parity, tz-aware broadcast
+# tz-aware broadcast
 # ---------------------------------------------------------------------------
 
 def _dup_ts_frames():
@@ -563,10 +562,7 @@ def _dup_ts_frames():
 
 
 def test_asof_duplicate_right_ts_tie_break(spark):
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     left, right = _dup_ts_frames()
     ldf, rdf = spark.createDataFrame(left), spark.createDataFrame(right)
@@ -586,16 +582,13 @@ def test_asof_duplicate_right_ts_tie_break(spark):
             else:
                 assert got[k] == v, (k, got[k], v)
 
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="forward"), want_fwd)
         check(fn(ldf, rdf, on="ts", by="entity_id", direction="backward"), want_bwd)
 
 
 def test_asof_interpolate_manual_and_parity(spark):
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     left = pd.DataFrame(
         {
@@ -636,10 +629,6 @@ def test_asof_interpolate_manual_and_parity(spark):
     results.append(
         got_of(asof_join_broadcast(ldf, rdf, on="ts", by="entity_id",
                                    direction="interpolate"))
-    )
-    results.append(
-        got_of(asof_join_cogroup(ldf, rdf, on="ts", by="entity_id",
-                                 direction="interpolate"))
     )
     for got in results:
         for k, v in want.items():
@@ -715,25 +704,11 @@ def test_asof_auto_unpersists_right_when_strategy_raises(spark):
         assert not right.is_cached, cap
 
 
-def test_asof_cogroup_matches_duckdb(spark, frames):
-    from image_feature_extraction_spark.operators.asof import asof_join_cogroup
-
-    left, right, ldf, rdf = frames
-    want = _key(_duck_asof(left, right))
-    got = _key(
-        asof_join_cogroup(ldf, rdf, on="ts", by="entity_id")
-        .toPandas()[["entity_id", "ts", "lval", "rval"]]
-    )
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, atol=1e-12)
-
-
 def test_asof_broadcast_and_cogroup_timestamp_ltz(spark):
     """TIMESTAMP (with local tz) time column: regression for the
-    DatetimeTZDtype crash in the broadcast index build."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    DatetimeTZDtype crash in the broadcast index build, which must agree
+    with the JVM merge."""
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     lp = pd.DataFrame(
         {
@@ -756,7 +731,7 @@ def test_asof_broadcast_and_cogroup_timestamp_ltz(spark):
     ldf, rdf = spark.createDataFrame(lp), spark.createDataFrame(rp)
     assert dict(ldf.dtypes)["ts"] == "timestamp"  # ltz, not ntz
     want = {(1, 10): 100.0, (1, 60): 200.0, (2, 30): None}
-    for fn in (asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join_broadcast, asof_join):
         out = fn(ldf, rdf, on="ts", by="entity_id", include_right_on=True)
         rows = out.select(
             "entity_id", F.col("ts").cast("long").alias("sec"), "rval", "ts_right"
@@ -865,13 +840,10 @@ def test_gaussian_time_smooth_hand_values(spark):
 
 @pytest.mark.parametrize("seed", [5])
 def test_asof_strategy_direction_matrix(spark, seed):
-    """All physical strategies implement identical semantics: for random
-    frames (duplicate timestamps included), asof_join, broadcast, and
-    cogroup agree pairwise on backward / forward / nearest / interpolate."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    """Both physical strategies implement identical semantics: for random
+    frames (duplicate timestamps included), asof_join and broadcast agree
+    on backward / forward / nearest / interpolate / cubic."""
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     rng = np.random.default_rng(seed)
     n_l, n_r = 250, 80
@@ -897,10 +869,10 @@ def test_asof_strategy_direction_matrix(spark, seed):
             zip(p.entity_id, p.ts, [None if pd.isna(v) else v for v in p.rval])
         )
 
-    for direction in ("backward", "forward", "nearest", "interpolate"):
+    for direction in ("backward", "forward", "nearest", "interpolate", "cubic"):
         outs = [
             key(fn(ldf, rdf, on="ts", by="entity_id", direction=direction))
-            for fn in (asof_join, asof_join_broadcast, asof_join_cogroup)
+            for fn in (asof_join, asof_join_broadcast)
         ]
         for i, o in enumerate(outs[1:], 1):
             assert o == outs[0], f"{direction}: variant {i} disagrees"
@@ -963,10 +935,7 @@ def _cubic_ref(t, ts, ys):
 
 
 def test_asof_cubic_known_values(spark):
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     # uniform grid + quadratic samples: central differences are exact
     # derivatives, so Catmull-Rom REPRODUCES the quadratic
@@ -979,8 +948,9 @@ def test_asof_cubic_known_values(spark):
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1] * len(probes), "ts": probes})
     )
-    for fn in (asof_join_broadcast, asof_join_cogroup):
-        out = {
+    res = {}
+    for fn in (asof_join_broadcast, asof_join):
+        out = res[fn.__name__] = {
             r["ts"]: r["v"]
             for r in fn(left, right, on="ts", by="entity_id", direction="cubic").collect()
         }
@@ -992,16 +962,15 @@ def test_asof_cubic_known_values(spark):
         # stencil short on either side (incl. boundary exact hits) -> null
         for t in (5.0, 35.0, 0.0, 40.0, 50.0):
             assert out[t] is None or np.isnan(out[t]), (fn.__name__, t)
+    assert res["asof_join"] == res["asof_join_broadcast"]  # bitwise parity
 
 
 @pytest.mark.parametrize("seed", [3, 17])
 def test_asof_cubic_randomized_property(spark, seed):
-    """Strategy parity (broadcast == cogroup bitwise) and agreement with an
-    independent scalar reference, including probes AT stencil boundaries."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
+    """Strategy parity (broadcast == asof_join bitwise) and agreement with
+    an independent scalar reference, including probes AT stencil
+    boundaries."""
+    from image_feature_extraction_spark.operators.asof import asof_join_broadcast
 
     rng = np.random.default_rng(seed)
     rows_r, rows_l = [], []
@@ -1022,10 +991,10 @@ def test_asof_cubic_randomized_property(spark, seed):
     left = spark.createDataFrame(pd.DataFrame(rows_l, columns=["entity_id", "ts"]))
 
     res = {}
-    for fn in (asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join_broadcast, asof_join):
         out = fn(left, right, on="ts", by="entity_id", direction="cubic").toPandas()
         res[fn.__name__] = out.sort_values(["entity_id", "ts"]).reset_index(drop=True)
-    a, b = res["asof_join_broadcast"], res["asof_join_cogroup"]
+    a, b = res["asof_join_broadcast"], res["asof_join"]
     assert len(a) == len(b) == len(rows_l)
     av, bv = a["v"].to_numpy(), b["v"].to_numpy()
     assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()  # bitwise parity
@@ -1040,21 +1009,16 @@ def test_asof_cubic_randomized_property(spark, seed):
 
 
 def test_asof_cubic_strategy_restrictions(spark):
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join,
-        asof_join_auto,
-    )
+    from image_feature_extraction_spark.operators.asof import asof_join_auto
 
     left = spark.createDataFrame(pd.DataFrame({"entity_id": [1], "ts": [10.0]}))
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1] * 4, "ts": [0.0, 5.0, 15.0, 20.0], "v": [1.0, 2.0, 3.0, 4.0]})
     )
-    with pytest.raises(ValueError, match="cubic"):
-        asof_join(left, right, on="ts", by="entity_id", direction="cubic")
-    # auto above the broadcast cap must route cubic to cogroup, not window
+    # auto above the broadcast cap routes cubic to the window merge
     out = asof_join_auto(
         left, right, on="ts", by="entity_id", direction="cubic",
         broadcast_max_rows=2,
     )
-    assert out._asof_strategy == "cogroup"
+    assert out._asof_strategy == "window"
     assert out.collect()[0]["v"] is not None

@@ -80,10 +80,7 @@ def test_kernel_min_tokens():
 
 
 def test_asof_round2_strategies_empty_and_single(spark):
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_auto,
-        asof_join_cogroup,
-    )
+    from image_feature_extraction_spark.operators.asof import asof_join_auto
 
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 2], "ts": [10, 20], "lv": [1.0, 2.0]})
@@ -96,7 +93,7 @@ def test_asof_round2_strategies_empty_and_single(spark):
     one = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [10], "rv": [7.5]})
     )
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         got = {
             (r.entity_id, r.ts): r.rv
             for r in fn(
@@ -107,8 +104,9 @@ def test_asof_round2_strategies_empty_and_single(spark):
         assert got[(2, 20)] is None or pd.isna(got[(2, 20)])
     # empty LEFT side comes back empty, schema intact
     empty_left = spark.createDataFrame([], "entity_id long, ts long, lv double")
-    out = asof_join_cogroup(empty_left, one, on="ts", by="entity_id")
-    assert out.count() == 0 and set(out.columns) == {"entity_id", "ts", "lv", "rv"}
+    for fn in (asof_join, asof_join_broadcast):
+        out = fn(empty_left, one, on="ts", by="entity_id")
+        assert out.count() == 0 and set(out.columns) == {"entity_id", "ts", "lv", "rv"}
 
 
 def test_mode_label_empty_and_all_ignored(spark):
@@ -142,24 +140,19 @@ def test_asof_null_timestamps_never_match(spark):
     """Review regression: a null left ts must never match (searchsorted on
     NaN would 'match' the last right row), identically across strategies;
     null right ts rows are unmatchable, and so is a NaN time."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
-
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [20.0, None], "lv": [1.0, 2.0]})
     )
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [10.0, None], "rv": [5.0, 9.0]})
     )
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert len(out) == 2, fn.__name__
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert got[1.0] == 5.0, fn.__name__          # normal match
         assert pd.isna(got[2.0]), fn.__name__        # null ts -> no match
-    # timestamp-typed null ts through broadcast/cogroup (NaT path)
+    # timestamp-typed null ts through both strategies (NaT path in broadcast)
     lp = pd.DataFrame(
         {
             "entity_id": [1, 1],
@@ -174,7 +167,7 @@ def test_asof_null_timestamps_never_match(spark):
             "rv": [5.0],
         }
     )
-    for fn in (asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join_broadcast, asof_join):
         out = fn(
             spark.createDataFrame(lp), spark.createDataFrame(rp),
             on="ts", by="entity_id", direction="forward",
@@ -189,7 +182,7 @@ def test_asof_null_timestamps_never_match(spark):
     right = spark.createDataFrame(
         [(1, 10.0, 5.0), (1, nan, 9.0)], "entity_id long, ts double, rv double"
     )
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         for direction, exp in (("backward", 5.0), ("forward", None)):
             got = {
                 r["lv"]: r["rv"]
@@ -203,20 +196,70 @@ def test_asof_null_timestamps_never_match(spark):
 def test_asof_null_payload_tie_break_parity(spark):
     """Duplicate right ts where one payload is null: every strategy picks
     the non-null (greatest) payload for backward."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
-
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [20.0], "lv": [0.0]})
     )
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [10.0, 10.0], "rv": [None, 5.0]})
     )
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         out = fn(left, right, on="ts", by="entity_id").toPandas()
         assert out["rv"].iloc[0] == 5.0, fn.__name__
+
+
+def test_asof_null_and_nan_payload_parity(spark):
+    """A matched NaN payload comes back NaN and a null one null, in both
+    strategies and all five directions, cell for cell: pandas holds both
+    as NaN, so the broadcast output carries an explicit null mask. NaN
+    and null payloads sit at distinct and at duplicate timestamps."""
+    import math
+    import struct
+
+    nan = float("nan")
+    right = spark.createDataFrame(
+        [
+            (1, 10.0, nan, 1), (1, 20.0, None, 2),
+            (1, 30.0, 1.0, 3), (1, 30.0, nan, 4), (1, 30.0, None, None),
+            (1, 40.0, 2.0, 6), (1, 50.0, nan, 7), (1, 50.0, None, 8),
+            (1, 60.0, 3.0, 9), (1, 70.0, 4.0, 10), (1, 80.0, None, None),
+        ],
+        "entity_id long, ts double, rv double, ri long",
+    )
+    probes = [5.0 * i for i in range(1, 18)]
+    left = spark.createDataFrame(
+        [(1, t, i) for i, t in enumerate(probes)], "entity_id long, ts double, lid long"
+    )
+
+    def cells(fn, direction, tol=None):
+        out = fn(left, right, on="ts", by="entity_id", direction=direction, tolerance=tol)
+        return {
+            r["lid"]: tuple(
+                struct.pack("<d", v) if isinstance(v, float) else v
+                for v in (r["rv"], r["ri"])
+            )
+            for r in out.collect()
+        }
+
+    for direction in ("backward", "forward", "nearest", "interpolate", "cubic"):
+        for tol in (None, 5.0):
+            a = cells(asof_join, direction, tol)
+            b = cells(asof_join_broadcast, direction, tol)
+            assert a == b, (direction, tol, {k: (a[k], b[k]) for k in a if a[k] != b[k]})
+    rv = {
+        r["ts"]: r["rv"]
+        for r in asof_join_broadcast(left, right, on="ts", by="entity_id").collect()
+    }
+    assert math.isnan(rv[10.0]) and rv[20.0] is None
+    # duplicate ts=30: backward takes the greatest payload, NaN
+    assert math.isnan(rv[30.0]) and math.isnan(rv[35.0])
+    fwd = {
+        r["ts"]: r["rv"]
+        for r in asof_join_broadcast(
+            left, right, on="ts", by="entity_id", direction="forward"
+        ).collect()
+    }
+    # forward takes the least, null; a null payload reads null, not NaN
+    assert fwd[25.0] is None and fwd[30.0] is None and math.isnan(fwd[5.0])
 
 
 def test_asof_window_fill_single_winning_row(spark):
@@ -513,16 +556,16 @@ def test_asof_bucketed_null_ts_all_directions(spark):
 
 
 def test_asof_cogroup_all_null_right_ts(spark):
-    from image_feature_extraction_spark.operators.asof import asof_join_cogroup
-
+    """A right side whose timestamps are all null matches nothing."""
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [20.0], "lv": [1.0]})
     )
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [None, None], "rv": [5.0, 9.0]})
     )
-    out = asof_join_cogroup(left, right, on="ts", by="entity_id").toPandas()
-    assert len(out) == 1 and pd.isna(out["rv"].iloc[0])
+    for fn in (asof_join, asof_join_broadcast):
+        out = fn(left, right, on="ts", by="entity_id").toPandas()
+        assert len(out) == 1 and pd.isna(out["rv"].iloc[0]), fn.__name__
 
 
 def test_pair_list_literal_sep_and_empty_fields(spark, tmp_path):
@@ -566,18 +609,13 @@ def test_exact_quantiles_tiny_stratum_matches_first_j(spark):
 def test_asof_null_entity_keys_never_match_all_strategies(spark):
     """SQL equality semantics: NULL entity keys never join, identically in
     every strategy (Window.partitionBy would otherwise group NULLs)."""
-    from image_feature_extraction_spark.operators.asof import (
-        asof_join_broadcast,
-        asof_join_cogroup,
-    )
-
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [None, 1.0], "ts": [10.0, 10.0], "lv": [1.0, 2.0]})
     )
     right = spark.createDataFrame(
         pd.DataFrame({"entity_id": [None, 1.0], "ts": [5.0, 5.0], "rv": [7.0, 8.0]})
     )
-    for fn in (asof_join, asof_join_broadcast, asof_join_cogroup):
+    for fn in (asof_join, asof_join_broadcast):
         out = fn(left, right, on="ts", by="entity_id").toPandas()
         got = {r["lv"]: r["rv"] for _, r in out.iterrows()}
         assert len(out) == 2, fn.__name__
@@ -610,8 +648,6 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
     Array payloads must join fine AND keep the duplicate-ts tie-break
     (backward = greatest payload, Spark array ordering) in parity with
     asof_join."""
-    from image_feature_extraction_spark.operators.asof import asof_join_cogroup
-
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1, 2], "ts": [10, 20, 10], "lv": [1.0, 2.0, 3.0]})
     )
@@ -635,8 +671,7 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
     }
     window = asof_join(left, right, on="ts", by="entity_id")
     broadcast = asof_join_broadcast(left, right, on="ts", by="entity_id")
-    cogroup = asof_join_cogroup(left, right, on="ts", by="entity_id")
-    for name, df in (("window", window), ("broadcast", broadcast), ("cogroup", cogroup)):
+    for name, df in (("window", window), ("broadcast", broadcast)):
         got = {
             (r["entity_id"], r["ts"]): list(r["emb"])
             for r in df.collect()
@@ -646,18 +681,15 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
 
 def test_asof_struct_payload_does_not_crash(spark):
     """Map/struct payloads are excluded from the tie-break sort but must
-    not crash the join."""
-    from image_feature_extraction_spark.operators.asof import asof_join_cogroup
-
+    not crash the broadcast join."""
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1], "ts": [10], "lv": [1.0]})
     )
     right = spark.createDataFrame(
         [(1, 5, {"a": 2})], "entity_id long, ts long, m map<string,int>"
     )
-    for fn in (asof_join_broadcast, asof_join_cogroup):
-        out = fn(left, right, on="ts", by="entity_id").collect()
-        assert len(out) == 1 and out[0]["m"] == {"a": 2}, fn.__name__
+    out = asof_join_broadcast(left, right, on="ts", by="entity_id").collect()
+    assert len(out) == 1 and out[0]["m"] == {"a": 2}
 
 
 def test_widen_small_scan_many_tiny_files(spark, tmp_path):

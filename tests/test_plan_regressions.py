@@ -46,15 +46,6 @@ from image_feature_extraction_spark.operators.quantiles import (
 from image_feature_extraction_spark.plans.audit import counts_of, plan_counts, plan_of
 
 
-def _counts(out) -> tuple[int, int]:
-    # shared regexes with scripts/plan_audit.py (plans/audit.py) so the
-    # pins and the committed artifact can never count different operator
-    # sets. BroadcastExchange deliberately NOT counted here: broadcasts
-    # are the cheap path; this pin is about shuffles and window passes.
-    c = plan_counts(out)
-    return (c["win"], c["exch"])
-
-
 def _events(spark):
     rows = [
         (i, i % 3, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=30 * i),
@@ -173,6 +164,15 @@ CASES = {
         2, 1, "union partitioned by entity: one row-scale exchange, one "
               "Window per fill direction (nearest fills both)",
     ),
+    "asof_join_cubic": (
+        lambda s: AS.asof_join(
+            _events(s),
+            _events(s).withColumnRenamed("value", "rv").drop("id"),
+            on="ts", by="ent", direction="cubic",
+        ),
+        4, 1, "the same union and exchange; per walk, the stencil neighbour "
+              "then the fill that carries it (nested: 2 Windows, 1 sort)",
+    ),
     "gaussian_time_smooth": (
         lambda s: W.gaussian_time_smooth(
             _events(s), by="ent", ts="ts", value="value", sigma=30.0
@@ -193,7 +193,13 @@ CASES = {
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_windowed_operator_plan_pinned(spark, name):
     build, want_win, want_ex, why = CASES[name]
-    got_win, got_ex = _counts(build(spark))
+    # shared regexes with scripts/plan_audit.py (plans/audit.py) so the
+    # pins and the committed artifact can never count different operator
+    # sets. BroadcastExchange deliberately NOT counted here: broadcasts
+    # are the cheap path; this pin is about shuffles and window passes.
+    c = plan_counts(build(spark))
+    got_win, got_ex = c["win"], c["exch"]
+    assert c["pyrow"] == c["arrow"] == 0, f"{name}: a Python node in the plan"
     assert got_win == want_win, (
         f"{name}: {got_win} Window operators, audited floor is {want_win} "
         f"({why}) — a chained-withColumn Project between Windows defeats "
@@ -214,7 +220,7 @@ def test_no_window_frame_runs_to_unbounded_following(spark):
     right = _events(spark).withColumnRenamed("value", "rv").drop("id")
     builds = {
         d: AS.asof_join(_events(spark), right, on="ts", by="ent", direction=d)
-        for d in ("backward", "forward", "nearest", "interpolate")
+        for d in ("backward", "forward", "nearest", "interpolate", "cubic")
     }
     builds["nearest_event_distance"] = W.nearest_event_distance(
         _events(spark), by="ent", ts="ts", marker=F.col("value") > 5
