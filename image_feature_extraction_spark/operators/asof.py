@@ -25,8 +25,10 @@ right-side row-count probe):
 2. ``asof_join_broadcast`` — for a SMALL right side (dimension/stats
    table): broadcast + map-side vectorized searchsorted, ZERO shuffle of
    the left side; its batch function (``asof_broadcast_stage``) chains
-   with other Arrow batch functions inside one mapInArrow stage. This is
-   the 10^12-left-rows x 10^5-right-rows production shape.
+   with other Arrow batch functions inside one mapInArrow stage, and its
+   right-side index and Broadcast are reused while the right side's
+   files are unchanged. This is the 10^12-left-rows x 10^5-right-rows
+   production shape.
 
 Directions: backward / forward / nearest, "interpolate" (linear
 interpolation between the bracketing samples, reference N8) and "cubic"
@@ -41,10 +43,14 @@ DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import map_in_arrow
+from ..session import local_path, map_in_arrow
 
 
 def _as_list(x):
@@ -389,28 +395,35 @@ def asof_join(
     r_ok = r_ts.isNotNull()
     for c in by_l:
         r_ok = r_ok & F.col(c).isNotNull()
-    payload = F.struct(
-        r_ts.alias("_p_ts"),
-        F.col(on).alias("_p_on"),
-        *[F.col(c).alias(P + c) for c in rcols],
-    )
+
+    def pstruct(cols):
+        return F.struct(
+            r_ts.alias("_p_ts"), F.col(on).alias("_p_on"),
+            *[F.col(c).alias(P + c) for c in cols],
+        )
+
+    # Spark cannot order a map, so when a payload column is one that
+    # broadcast's _dup_ts_sort leaves out of its tie-break, the walks are
+    # ordered by a key struct _k without it; _p is still what they fill.
+    sortable = [c for c in rcols if _tuple_sortable(right.schema[c].dataType)]
+    okey = "_p" if sortable == rcols else "_k"
+    pcols = {"_p": pstruct(rcols), okey: pstruct(sortable)}
     rpay = right.where(r_ok).select(
         *[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)],
         r_ts.alias("_ts_d"),
-        payload.alias("_p"),
+        *[col.alias(k) for k, col in pcols.items()],
     )
-    ptype = rpay.schema["_p"].dataType
 
     lkeep = left.columns
     u = left.select(
         *[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)],
         _ts_double(left, on).alias("_ts_d"),
         F.lit(1).alias("_tag"),
-        F.lit(None).cast(ptype).alias("_p"),
+        *[F.lit(None).cast(rpay.schema[k].dataType).alias(k) for k in pcols],
         *[F.col(c).alias("_l_" + c) for c in lkeep],
     ).unionByName(
         rpay.select(
-            *r_by, "_ts_d", F.lit(0).alias("_tag"), "_p",
+            *r_by, "_ts_d", F.lit(0).alias("_tag"), *pcols,
             *[F.lit(None).cast(left.schema[c].dataType).alias("_l_" + c) for c in lkeep],
         )
     )
@@ -422,9 +435,9 @@ def asof_join(
     # descending and takes the least. NULLS FIRST keeps a null-ts left row
     # ahead of every right row in the forward walk too.
     part = Window.partitionBy(*r_by)
-    ob = part.orderBy(F.col("_ts_d").asc(), F.col("_tag").asc(), F.col("_p").asc())
+    ob = part.orderBy(F.col("_ts_d").asc(), F.col("_tag").asc(), F.col(okey).asc())
     of = part.orderBy(
-        F.col("_ts_d").desc_nulls_first(), F.col("_tag").asc(), F.col("_p").desc()
+        F.col("_ts_d").desc_nulls_first(), F.col("_tag").asc(), F.col(okey).desc()
     )
     running = (Window.unboundedPreceding, Window.currentRow)
     if direction == "cubic":
@@ -516,10 +529,150 @@ def asof_join_broadcast(left: DataFrame, right: DataFrame, **opts) -> DataFrame:
     direction, tolerance, suffix, include_right_on, max_right_rows) are
     those of asof_broadcast_stage.
 
+    A right side read from unchanged local files is collected and
+    broadcast once per SparkContext, not once per call: a second join
+    against it runs no Spark job while it is built and reuses the
+    Broadcast (see asof_broadcast_stage for the cache key and when it
+    applies).
+
     Mirrors the reference's grid-alignment resample where the TARGET grid is
     dense and the SOURCE samples are sparse (tools/Resample.cxx:83-99).
     """
     return map_in_arrow(left, *asof_broadcast_stage(left.schema, right, **opts))
+
+
+INDEX_CACHE_ENTRIES = 8
+
+
+class _IndexCache:
+    """Right-side indexes of asof_broadcast_stage, most recently used last,
+    with the driver's hit and miss counts. One per SparkContext; ``lock``
+    guards both against driver threads building plans at once."""
+
+    def __init__(self):
+        self.entries: OrderedDict = OrderedDict()
+        self.hits = 0
+        self.misses = 0
+        self.lock = threading.Lock()
+
+
+def _index_cache(sc) -> _IndexCache:
+    # kept on the context object, so a new SparkContext starts empty and a
+    # Broadcast never outlives the context that made it (dict.setdefault is
+    # atomic, so racing threads get one cache)
+    return vars(sc).setdefault("_ife_asof_index", _IndexCache())
+
+
+def asof_index_cache_stats(spark) -> dict:
+    """Driver-side counters of the broadcast as-of index cache of
+    ``spark``'s context: ``hits`` (index and Broadcast reused), ``misses``
+    (collected and broadcast, cacheable or not) and ``entries`` held."""
+    cache = _index_cache(spark.sparkContext)
+    with cache.lock:
+        return {"hits": cache.hits, "misses": cache.misses, "entries": len(cache.entries)}
+
+
+def _index_key(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+    """Cache key of a right side's index, or None when its data can change
+    under an unchanged plan: no input files, a file that cannot be
+    stat-ed (a remote store), or a nondeterministic plan (rand(), a
+    nondeterministic UDF)."""
+    if not right._jdf.queryExecution().analyzed().deterministic():
+        return None
+    stamps = []
+    for p in sorted(right.inputFiles()):
+        try:
+            st = os.stat(local_path(p))
+        except OSError:
+            return None
+        stamps.append((p, st.st_size, st.st_mtime_ns))
+    if not stamps:
+        return None
+    return (
+        right.semanticHash(), tuple(stamps), tuple(by_l), on, tuple(rcols), max_right_rows,
+    )
+
+
+def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+    """Collect (counted, bounded) and index the right side on the driver
+    and broadcast the index. Returns (Broadcast of {key: (sorted ts,
+    payload arrays, null masks)}, the float columns that carry isnan
+    flags, {column: pandas dtype} or None when no row has a timestamp)."""
+    import pandas as pd
+
+    # Known pandas round-trip limitation: a NULLABLE integer right column
+    # travels as float64, so int64 values above 2^53 in a column that also
+    # has nulls lose precision; the JVM strategy (asof_join) is exact for
+    # that shape.
+    rp = (
+        right.select(*by_l, on, *rcols, *_nan_flags(right, rcols))
+        .limit(max_right_rows + 1)
+        .toPandas()
+    )
+    if len(rp) > max_right_rows:
+        raise ValueError(
+            f"asof_join_broadcast: right side exceeds {max_right_rows} rows; "
+            "use asof_join instead (asof_join_auto picks automatically)"
+        )
+    nan_cols = {c for c in rcols if _NAN + c in rp}
+    rschema = {f.name: f for f in right.schema.fields}
+    index: dict = {}
+    # right rows with a null timestamp are unmatchable — drop them before
+    # the index build (NaN in a sorted array corrupts searchsorted)
+    rp = rp[rp[on].notna()]
+    if len(rp):
+        # secondary sort on the payload columns (see _dup_ts_sort): among
+        # duplicate right timestamps, backward deterministically matches
+        # the greatest payload and forward the least — same contract as
+        # asof_join's struct ordering
+        rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema)
+        for key, grp in rp.groupby(by_l, sort=False):
+            k = key if isinstance(key, tuple) else (key,)
+            payload = {
+                c: (
+                    _dt_naive(grp[c]).to_numpy().astype("datetime64[us]")
+                    if pd.api.types.is_datetime64_any_dtype(grp[c].dtype)
+                    else grp[c].to_numpy()
+                )
+                for c in (on, *rcols)
+            }
+            # pandas holds a null float as NaN: the payload's isnan flag
+            # keeps a NaN out of its null mask
+            nulls = {
+                c: (grp[c].isna() & ~grp[_NAN + c] if c in nan_cols else grp[c].isna())
+                .to_numpy()
+                for c in rcols
+            }
+            index[k] = (_ts_np_series(grp[on]), payload, nulls)
+    # dtypes only — keeping `rp` would hold the whole collected right side
+    # in the cache, and capturing it would cloudpickle it into every task
+    dtypes = {c: rp[c].dtype for c in (on, *rcols)} if len(rp) else None
+    return right.sparkSession.sparkContext.broadcast(index), nan_cols, dtypes
+
+
+def _right_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+    """_build_index, memoized in the right side's SparkContext under
+    _index_key. The least recently used of more than INDEX_CACHE_ENTRIES
+    entries is dropped and its Broadcast unpersisted, never destroyed: a
+    DataFrame built earlier may still read it, and the driver keeps its
+    value to serve it again."""
+    cache = _index_cache(right.sparkSession.sparkContext)
+    key = _index_key(right, on, by_l, rcols, max_right_rows)
+    with cache.lock:
+        hit = cache.entries.get(key)
+        if hit is not None:
+            cache.hits += 1
+            cache.entries.move_to_end(key)
+            return hit
+        cache.misses += 1
+    # built outside the lock: one thread's collect does not hold up another's
+    built = _build_index(right, on, by_l, rcols, max_right_rows)
+    if key is not None:
+        with cache.lock:
+            cache.entries[key] = built
+            if len(cache.entries) > INDEX_CACHE_ENTRIES:
+                cache.entries.popitem(last=False)[1][0].unpersist()
+    return built
 
 
 def asof_broadcast_stage(
@@ -541,6 +694,19 @@ def asof_broadcast_stage(
     iterator of record batches with the matched right columns appended,
     so it can run as its own mapInArrow stage or be chained with other
     batch functions inside one.
+
+    The right half (collect, sort, per-key index, Broadcast, dtypes) is
+    memoized per SparkContext; the batch function is rebuilt on every
+    call from ``left_schema``, direction and tolerance. The cache key is
+    the right side's ``semanticHash()``, the sorted (path, size,
+    mtime_ns) of every file in its ``inputFiles()``, and ``by``, ``on``,
+    the resolved right columns and ``max_right_rows``. So rewriting a file
+    or adding one to a directory (in a newly read DataFrame) rebuilds the
+    index. A right side is cached only when it has input files, each of
+    them can be stat-ed locally, and its analyzed plan is deterministic;
+    any other right side (``createDataFrame``, a ``rand()`` column, a
+    remote store) is collected on every call. The cache holds
+    INDEX_CACHE_ENTRIES entries; asof_index_cache_stats reads its counts.
     """
     import numpy as np
     import pandas as pd
@@ -563,57 +729,11 @@ def asof_broadcast_stage(
         out_fields.append(StructField(right_on_out, rschema[on].dataType, True))
     out_schema = StructType(out_fields)
 
-    # Collect + index the right side on the driver (counted, bounded).
-    # Known pandas round-trip limitation: a NULLABLE integer right column
-    # travels as float64, so int64 values above 2^53 in a column that also
-    # has nulls lose precision; the JVM strategy (asof_join) is exact for
-    # that shape.
-    rp = (
-        right.select(*by_l, on, *rcols, *_nan_flags(right, rcols))
-        .limit(max_right_rows + 1)
-        .toPandas()
-    )
-    if len(rp) > max_right_rows:
-        raise ValueError(
-            f"asof_join_broadcast: right side exceeds {max_right_rows} rows; "
-            "use asof_join instead (asof_join_auto picks automatically)"
-        )
-
-    # pandas holds a null float as NaN: the output columns that can hold a
-    # NaN (float payloads, every blend) carry an explicit null mask, which
-    # the payload's isnan flag keeps off a NaN
-    masked = [c for c in rcols if blend or _NAN + c in rp]
-    index: dict = {}
-    # right rows with a null timestamp are unmatchable — drop them before
-    # the index build (NaN in a sorted array corrupts searchsorted)
-    rp = rp[rp[on].notna()]
-    if len(rp):
-        # secondary sort on the payload columns (see _dup_ts_sort): among
-        # duplicate right timestamps, backward deterministically matches
-        # the greatest payload and forward the least — same contract as
-        # asof_join's struct ordering
-        rp = _dup_ts_sort(rp, [*by_l, on], rcols, rschema)
-        for key, grp in rp.groupby(by_l, sort=False):
-            k = key if isinstance(key, tuple) else (key,)
-            payload = {
-                c: (
-                    _dt_naive(grp[c]).to_numpy().astype("datetime64[us]")
-                    if pd.api.types.is_datetime64_any_dtype(grp[c].dtype)
-                    else grp[c].to_numpy()
-                )
-                for c in (on, *rcols)
-            }
-            nulls = {
-                c: (grp[c].isna() & ~grp[_NAN + c] if _NAN + c in grp else grp[c].isna())
-                .to_numpy()
-                for c in masked
-            }
-            index[k] = (_ts_np_series(grp[on]), payload, nulls)
-    b_index = right.sparkSession.sparkContext.broadcast(index)
+    b_index, nan_cols, dtypes = _right_index(right, on, by_l, rcols, max_right_rows)
+    # the output columns that can hold a NaN (float payloads, every blend)
+    # carry an explicit null mask
+    masked = [c for c in rcols if blend or c in nan_cols]
     lcols = left_schema.names
-    # dtype templates only — capturing `rp` itself would cloudpickle the
-    # whole collected right side into every task closure, duplicating the
-    # broadcast at up to max_right_rows scale
 
     # Output gather targets, typed: float/datetime columns get native
     # arrays (NaN/NaT missing); everything else object (None missing).
@@ -621,18 +741,14 @@ def asof_broadcast_stage(
     if right_on_out:
         gather_cols.append((on, right_on_out))
 
-    def _alloc(n: int, src: pd.Series):
+    def _alloc(n: int, dtype):
         if blend:
             return np.full(n, np.nan, dtype=np.float64)
-        if pd.api.types.is_datetime64_any_dtype(src.dtype):
+        if pd.api.types.is_datetime64_any_dtype(dtype):
             return np.full(n, np.datetime64("NaT"), dtype="datetime64[us]")
-        if np.issubdtype(src.dtype, np.floating):
+        if np.issubdtype(dtype, np.floating):
             return np.full(n, np.nan, dtype=np.float64)
         return np.full(n, None, dtype=object)
-
-    templates = (
-        {oc: rp[c].iloc[:0] for c, oc in gather_cols} if len(rp) else None
-    )
 
     # Arrow-native stage: heavy payload columns (token arrays) pass through
     # untouched as Arrow buffers; only the key/time columns are converted.
@@ -656,8 +772,8 @@ def asof_broadcast_stage(
             lts = _ts_np_series(keydf[on])
             grp_of = keydf.groupby(by_l, sort=False).indices
             targets = (
-                {oc: _alloc(n, templates[oc]) for _c, oc in gather_cols}
-                if templates is not None
+                {oc: _alloc(n, dtypes[c]) for c, oc in gather_cols}
+                if dtypes is not None
                 else {}
             )
             null = {oc: np.ones(n, dtype=bool) for c, oc in gather_cols if c in masked}

@@ -105,6 +105,16 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     spark._ife_pyfiles_added = True
 
 
+def local_path(uri: str) -> str:
+    """Local file-system path of an ``inputFiles()`` URI (``file:`` scheme,
+    percent-encoded). Other schemes come back unchanged, so ``os.stat``
+    fails on them (a remote store)."""
+    from urllib.parse import unquote, urlparse
+
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
+
+
 def widen_small_scan(df, target: int | None = None):
     """Repartition a SMALL file scan up to the session's default
     parallelism before compute-heavy per-row work.
@@ -135,7 +145,7 @@ def widen_small_scan(df, target: int | None = None):
     total = biggest = 0
     for p in files:
         try:
-            size = os.path.getsize(p[len("file:"):] if p.startswith("file:") else p)
+            size = os.path.getsize(local_path(p))
         except OSError:
             return df  # can't stat (remote store): keep Spark's plan
         total, biggest = total + size, max(biggest, size)

@@ -681,15 +681,33 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
 
 def test_asof_struct_payload_does_not_crash(spark):
     """Map/struct payloads are excluded from the tie-break sort but must
-    not crash the broadcast join."""
+    not crash any strategy: Spark cannot order a map, so asof_join orders
+    its walks by the payload columns broadcast's tie-break keeps, and
+    asof_join_auto works above the broadcast cap too."""
+    from image_feature_extraction_spark.operators.asof import asof_join_auto
+
     left = spark.createDataFrame(
-        pd.DataFrame({"entity_id": [1], "ts": [10], "lv": [1.0]})
+        pd.DataFrame({"entity_id": [1, 1], "ts": [6, 10], "lv": [1.0, 2.0]})
     )
     right = spark.createDataFrame(
-        [(1, 5, {"a": 2})], "entity_id long, ts long, m map<string,int>"
+        [(1, 5, {"a": 2}, (1,), 0.5), (1, 7, {"b": 3}, (2,), 1.5)],
+        "entity_id long, ts long, m map<string,int>, s struct<x:int>, v double",
     )
-    out = asof_join_broadcast(left, right, on="ts", by="entity_id").collect()
-    assert len(out) == 1 and out[0]["m"] == {"a": 2}
+    want = {6: ({"a": 2}, 1, 0.5), 10: ({"b": 3}, 2, 1.5)}
+    for join in (
+        asof_join,
+        asof_join_broadcast,
+        lambda lf, rt, **kw: asof_join_auto(lf, rt, broadcast_max_rows=0, **kw),
+    ):
+        for direction in ("backward", "forward", "nearest"):
+            out = join(left, right, on="ts", by="entity_id", direction=direction).collect()
+            got = {r["ts"]: (r["m"], r["s"]["x"] if r["s"] else None, r["v"]) for r in out}
+            if direction == "backward":
+                assert got == want
+            elif direction == "forward":
+                assert got == {6: want[10], 10: (None, None, None)}
+            else:
+                assert got == {6: want[6], 10: want[10]}
 
 
 def test_widen_small_scan_many_tiny_files(spark, tmp_path):
