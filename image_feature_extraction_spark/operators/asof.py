@@ -36,7 +36,8 @@ interpolation between the bracketing samples, reference N8) and "cubic"
 Among duplicate right timestamps, backward matches the greatest payload
 and forward the least (Spark struct ordering: null smallest, NaN
 greatest). Both return a matched NaN payload as NaN and a null one as
-null.
+null. Spark cannot order a map, so duplicate right timestamps that differ
+only in a map payload tie (broadcast: only in a map or struct payload).
 
 DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 """
@@ -45,7 +46,6 @@ from __future__ import annotations
 
 import os
 import threading
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -113,6 +113,15 @@ def _tuple_sortable(dt) -> bool:
     while isinstance(dt, ArrayType):
         dt = dt.elementType
     return not isinstance(dt, (MapType, StructType))
+
+
+def _spark_orderable(df: DataFrame, col: str) -> bool:
+    """Whether Spark can ORDER BY column ``col`` of ``df``, by Spark's own
+    rule (RowOrdering.isOrderable): not a map, nor a struct or array with
+    a map anywhere inside."""
+    jvm = df.sparkSession.sparkContext._jvm
+    jtype = df._jdf.schema().apply(col).dataType()
+    return jvm.org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(jtype)
 
 
 _NAN = "__asof_nan_"
@@ -402,12 +411,13 @@ def asof_join(
             *[F.col(c).alias(P + c) for c in cols],
         )
 
-    # Spark cannot order a map, so when a payload column is one that
-    # broadcast's _dup_ts_sort leaves out of its tie-break, the walks are
-    # ordered by a key struct _k without it; _p is still what they fill.
-    sortable = [c for c in rcols if _tuple_sortable(right.schema[c].dataType)]
-    okey = "_p" if sortable == rcols else "_k"
-    pcols = {"_p": pstruct(rcols), okey: pstruct(sortable)}
+    # Spark cannot order a map (nor a struct or array with one inside), so
+    # when a payload column is such a type the walks are ordered by a key
+    # struct _k without it; _p is still what they fill. Duplicate right
+    # timestamps that differ only in such a column tie.
+    orderable = [c for c in rcols if _spark_orderable(right, c)]
+    okey = "_p" if orderable == rcols else "_k"
+    pcols = {"_p": pstruct(rcols), okey: pstruct(orderable)}
     rpay = right.where(r_ok).select(
         *[F.col(c).alias(rb) for c, rb in zip(by_l, r_by)],
         r_ts.alias("_ts_d"),
@@ -541,16 +551,16 @@ def asof_join_broadcast(left: DataFrame, right: DataFrame, **opts) -> DataFrame:
     return map_in_arrow(left, *asof_broadcast_stage(left.schema, right, **opts))
 
 
-INDEX_CACHE_ENTRIES = 8
-
-
 class _IndexCache:
-    """Right-side indexes of asof_broadcast_stage, most recently used last,
-    with the driver's hit and miss counts. One per SparkContext; ``lock``
-    guards both against driver threads building plans at once."""
+    """The right-side index asof_broadcast_stage built last in one
+    SparkContext, under its key, with the driver's hit and miss counts.
+    One entry: every caller joins one right side at a time, and it keeps
+    at most one index (its Broadcast) alive beyond the DataFrames that use
+    it. ``lock`` guards it against driver threads building plans at once."""
 
     def __init__(self):
-        self.entries: OrderedDict = OrderedDict()
+        self.key = None
+        self.built = None
         self.hits = 0
         self.misses = 0
         self.lock = threading.Lock()
@@ -565,19 +575,47 @@ def _index_cache(sc) -> _IndexCache:
 
 def asof_index_cache_stats(spark) -> dict:
     """Driver-side counters of the broadcast as-of index cache of
-    ``spark``'s context: ``hits`` (index and Broadcast reused), ``misses``
-    (collected and broadcast, cacheable or not) and ``entries`` held."""
+    ``spark``'s context: ``hits`` (index and Broadcast reused) and
+    ``misses`` (collected and broadcast, cacheable or not)."""
     cache = _index_cache(spark.sparkContext)
     with cache.lock:
-        return {"hits": cache.hits, "misses": cache.misses, "entries": len(cache.entries)}
+        return {"hits": cache.hits, "misses": cache.misses}
 
 
-def _index_key(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+def _file_scans_only(right: DataFrame, plan) -> bool:
+    """Whether every leaf of the analyzed ``plan`` is a file scan (a file
+    source read through the v1 or the v2 API), and no expression in it
+    reads the clock (current_timestamp() and the like): the data of such a
+    plan changes only with its files."""
+    jvm = right.sparkSession.sparkContext._jvm
+    if plan.containsPattern(jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE()):
+        return False
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        kind = leaf.getClass().getSimpleName()
+        if kind == "LogicalRelation":
+            ok = leaf.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        elif kind == "DataSourceV2Relation":
+            ok = jvm.java.lang.Class.forName(
+                "org.apache.spark.sql.execution.datasources.v2.FileTable"
+            ).isInstance(leaf.table())
+        else:
+            ok = False
+        if not ok:
+            return False
+    return True
+
+
+def _index_key(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int,
+               blend: bool):
     """Cache key of a right side's index, or None when its data can change
-    under an unchanged plan: no input files, a file that cannot be
-    stat-ed (a remote store), or a nondeterministic plan (rand(), a
-    nondeterministic UDF)."""
-    if not right._jdf.queryExecution().analyzed().deterministic():
+    under an unchanged key: a plan leaf that is not a file scan (in-memory
+    rows, a JDBC or other non-file source), a clock read, a nondeterministic
+    plan (rand(), a nondeterministic UDF), no input files, or a file that
+    cannot be stat-ed (a remote store)."""
+    plan = right._jdf.queryExecution().analyzed()
+    if not plan.deterministic() or not _file_scans_only(right, plan):
         return None
     stamps = []
     for p in sorted(right.inputFiles()):
@@ -585,19 +623,23 @@ def _index_key(right: DataFrame, on: str, by_l: list, rcols: list, max_right_row
             st = os.stat(local_path(p))
         except OSError:
             return None
-        stamps.append((p, st.st_size, st.st_mtime_ns))
+        stamps.append((p, st.st_ino, st.st_size, st.st_mtime_ns))
     if not stamps:
         return None
     return (
         right.semanticHash(), tuple(stamps), tuple(by_l), on, tuple(rcols), max_right_rows,
+        blend,
     )
 
 
-def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int,
+                 blend: bool):
     """Collect (counted, bounded) and index the right side on the driver
     and broadcast the index. Returns (Broadcast of {key: (sorted ts,
     payload arrays, null masks)}, the float columns that carry isnan
-    flags, {column: pandas dtype} or None when no row has a timestamp)."""
+    flags, {column: pandas dtype} or None when no row has a timestamp).
+    The columns that can hold a NaN (float payloads, every column of a
+    blend) carry a null mask."""
     import pandas as pd
 
     # Known pandas round-trip limitation: a NULLABLE integer right column
@@ -642,6 +684,7 @@ def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_r
                 c: (grp[c].isna() & ~grp[_NAN + c] if c in nan_cols else grp[c].isna())
                 .to_numpy()
                 for c in rcols
+                if blend or c in nan_cols
             }
             index[k] = (_ts_np_series(grp[on]), payload, nulls)
     # dtypes only — keeping `rp` would hold the whole collected right side
@@ -650,28 +693,26 @@ def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_r
     return right.sparkSession.sparkContext.broadcast(index), nan_cols, dtypes
 
 
-def _right_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int):
+def _right_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int,
+                 blend: bool):
     """_build_index, memoized in the right side's SparkContext under
-    _index_key. The least recently used of more than INDEX_CACHE_ENTRIES
-    entries is dropped and its Broadcast unpersisted, never destroyed: a
-    DataFrame built earlier may still read it, and the driver keeps its
-    value to serve it again."""
+    _index_key. A new cacheable key replaces the entry, whose Broadcast is
+    unpersisted, never destroyed: a DataFrame built earlier may still read
+    it, and Spark ships it again when one does."""
     cache = _index_cache(right.sparkSession.sparkContext)
-    key = _index_key(right, on, by_l, rcols, max_right_rows)
+    key = _index_key(right, on, by_l, rcols, max_right_rows, blend)
     with cache.lock:
-        hit = cache.entries.get(key)
-        if hit is not None:
+        if key is not None and key == cache.key:
             cache.hits += 1
-            cache.entries.move_to_end(key)
-            return hit
+            return cache.built
         cache.misses += 1
     # built outside the lock: one thread's collect does not hold up another's
-    built = _build_index(right, on, by_l, rcols, max_right_rows)
+    built = _build_index(right, on, by_l, rcols, max_right_rows, blend)
     if key is not None:
         with cache.lock:
-            cache.entries[key] = built
-            if len(cache.entries) > INDEX_CACHE_ENTRIES:
-                cache.entries.popitem(last=False)[1][0].unpersist()
+            old, cache.key, cache.built = cache.built, key, built
+        if old is not None:
+            old[0].unpersist()
     return built
 
 
@@ -698,15 +739,20 @@ def asof_broadcast_stage(
     The right half (collect, sort, per-key index, Broadcast, dtypes) is
     memoized per SparkContext; the batch function is rebuilt on every
     call from ``left_schema``, direction and tolerance. The cache key is
-    the right side's ``semanticHash()``, the sorted (path, size,
+    the right side's ``semanticHash()``, the sorted (path, inode, size,
     mtime_ns) of every file in its ``inputFiles()``, and ``by``, ``on``,
-    the resolved right columns and ``max_right_rows``. So rewriting a file
-    or adding one to a directory (in a newly read DataFrame) rebuilds the
-    index. A right side is cached only when it has input files, each of
-    them can be stat-ed locally, and its analyzed plan is deterministic;
-    any other right side (``createDataFrame``, a ``rand()`` column, a
-    remote store) is collected on every call. The cache holds
-    INDEX_CACHE_ENTRIES entries; asof_index_cache_stats reads its counts.
+    the resolved right columns, ``max_right_rows`` and whether the
+    direction blends. So rewriting a file or adding one to a directory (in
+    a newly read DataFrame) rebuilds the index. A right side is cached
+    only when every leaf of its analyzed plan is a file scan, the plan is
+    deterministic and reads no clock, it has input files and each of them
+    can be stat-ed locally; any other right side (``createDataFrame``, a
+    JDBC read or a union with one, a ``rand()`` or ``current_timestamp()``
+    column, a remote store) is collected on every call. An in-place
+    rewrite that keeps a file's size and inode and lands within the file
+    system's timestamp granularity is not seen. The cache holds the last
+    key only, and a new key unpersists the Broadcast it replaces;
+    asof_index_cache_stats reads the hit and miss counts.
     """
     import numpy as np
     import pandas as pd
@@ -729,10 +775,8 @@ def asof_broadcast_stage(
         out_fields.append(StructField(right_on_out, rschema[on].dataType, True))
     out_schema = StructType(out_fields)
 
-    b_index, nan_cols, dtypes = _right_index(right, on, by_l, rcols, max_right_rows)
-    # the output columns that can hold a NaN (float payloads, every blend)
-    # carry an explicit null mask
-    masked = [c for c in rcols if blend or c in nan_cols]
+    b_index, nan_cols, dtypes = _right_index(right, on, by_l, rcols, max_right_rows, blend)
+    masked = [c for c in rcols if blend or c in nan_cols]  # columns with a null mask
     lcols = left_schema.names
 
     # Output gather targets, typed: float/datetime columns get native

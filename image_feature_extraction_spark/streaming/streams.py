@@ -395,11 +395,12 @@ def streaming_asof_enrich(
     store, or stream-stream join constraints. The right side is indexed
     once at plan build (driver-side, counted and bounded); restart the
     query to pick up feature-table changes — the same snapshot semantics
-    as a broadcast dimension in a stream-static join. The index is
-    memoized per SparkContext on the table's plan and the (path, size,
-    mtime) of its files: a restart over a rewritten table (re-read after
-    the rewrite) rebuilds it, and over unchanged files reuses the
-    Broadcast without collecting again. Row-for-row parity
+    as a broadcast dimension in a stream-static join. The last index is
+    memoized per SparkContext on the table's plan and the (path, inode,
+    size, mtime) of its files, for a table whose plan reads files only:
+    a restart over a rewritten table (re-read after the rewrite) rebuilds
+    it, and over unchanged files reuses the Broadcast without collecting
+    again. Row-for-row parity
     with the batch operator is by construction (same code path) and
     regression-gated in tests/test_streaming.py.
     """

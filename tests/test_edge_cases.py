@@ -680,34 +680,53 @@ def test_asof_array_payload_broadcast_and_cogroup(spark):
 
 
 def test_asof_struct_payload_does_not_crash(spark):
-    """Map/struct payloads are excluded from the tie-break sort but must
-    not crash any strategy: Spark cannot order a map, so asof_join orders
-    its walks by the payload columns broadcast's tie-break keeps, and
-    asof_join_auto works above the broadcast cap too."""
+    """Map/struct payloads are excluded from the broadcast tie-break sort
+    but must not crash any strategy: Spark cannot order a map, nor a
+    struct with one inside, so asof_join orders its walks without such
+    columns, and asof_join_auto works above the broadcast cap too. A plain
+    struct is orderable and keeps breaking duplicate-timestamp ties in
+    asof_join."""
     from image_feature_extraction_spark.operators.asof import asof_join_auto
+
+    def window_auto(lf, rt, **kw):
+        return asof_join_auto(lf, rt, broadcast_max_rows=0, **kw)
 
     left = spark.createDataFrame(
         pd.DataFrame({"entity_id": [1, 1], "ts": [6, 10], "lv": [1.0, 2.0]})
     )
     right = spark.createDataFrame(
-        [(1, 5, {"a": 2}, (1,), 0.5), (1, 7, {"b": 3}, (2,), 1.5)],
-        "entity_id long, ts long, m map<string,int>, s struct<x:int>, v double",
+        [(1, 5, {"a": 2}, (1,), ({"c": 4},), 0.5), (1, 7, {"b": 3}, (2,), ({"d": 5},), 1.5)],
+        "entity_id long, ts long, m map<string,int>, s struct<x:int>, "
+        "sm struct<m:map<string,int>>, v double",
     )
-    want = {6: ({"a": 2}, 1, 0.5), 10: ({"b": 3}, 2, 1.5)}
-    for join in (
-        asof_join,
-        asof_join_broadcast,
-        lambda lf, rt, **kw: asof_join_auto(lf, rt, broadcast_max_rows=0, **kw),
-    ):
+    want = {6: ({"a": 2}, 1, {"c": 4}, 0.5), 10: ({"b": 3}, 2, {"d": 5}, 1.5)}
+    for join in (asof_join, asof_join_broadcast, window_auto):
         for direction in ("backward", "forward", "nearest"):
             out = join(left, right, on="ts", by="entity_id", direction=direction).collect()
-            got = {r["ts"]: (r["m"], r["s"]["x"] if r["s"] else None, r["v"]) for r in out}
+            got = {
+                r["ts"]: (r["m"], r["s"]["x"] if r["s"] else None,
+                          r["sm"]["m"] if r["sm"] else None, r["v"])
+                for r in out
+            }
             if direction == "backward":
                 assert got == want
             elif direction == "forward":
-                assert got == {6: want[10], 10: (None, None, None)}
+                assert got == {6: want[10], 10: (None, None, None, None)}
             else:
                 assert got == {6: want[6], 10: want[10]}
+
+    # duplicate right timestamps that differ only in a plain struct:
+    # backward matches the greatest, forward the least, however the rows
+    # are spread over partitions
+    left = spark.createDataFrame(pd.DataFrame({"entity_id": [1, 1], "ts": [4, 6]}))
+    dups = spark.createDataFrame(
+        [(1, 5, (x, f"s{x}")) for x in (3, 7, 1, 9, 5, 2, 8, 4, 6)],
+        "entity_id long, ts long, s struct<x:int, y:string>",
+    ).repartition(4)
+    for join in (asof_join, window_auto):
+        for direction, want in (("backward", {4: None, 6: 9}), ("forward", {4: 1, 6: None})):
+            out = join(left, dups, on="ts", by="entity_id", direction=direction).collect()
+            assert {r["ts"]: r["s"]["x"] if r["s"] else None for r in out} == want, direction
 
 
 def test_widen_small_scan_many_tiny_files(spark, tmp_path):
