@@ -93,6 +93,18 @@ def _diag_order(v0: np.ndarray, v1: np.ndarray, v2: np.ndarray):
     return e0, e1, e2
 
 
+def _swap_where(a, b, sw) -> None:
+    """Swap a[i] and b[i] in place where sw[i], as a bitwise select on the
+    int64 views (d = (a ^ b) & -sw; a ^= d; b ^= d): every bit moves as is,
+    NaN payloads and -0.0 included, and an unpredictable mask costs no
+    more than a predictable one."""
+    a, b = a.view(np.int64), b.view(np.int64)
+    d = a ^ b
+    d &= np.negative(sw, dtype=np.int64)
+    a ^= d
+    b ^= d
+
+
 def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
     """Column-wise core of eig3x3: the six packed entries as separate
     float64 arrays -> (e0, e1, e2) ordered |e2| <= |e1| <= |e0|. The inputs
@@ -121,7 +133,7 @@ def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
     p += 2.0 * p_off
     p /= 6.0
     np.sqrt(p, out=p)
-    psafe = np.where(p == 0, 1.0, p)
+    psafe = p + (p == 0)  # 1.0 where p == 0: p + 0.0 is p, -0.0 included
     B11 = t1
     B11 /= psafe
     B12 = A12 / psafe
@@ -157,7 +169,8 @@ def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
     # branches need no where, as arccos(-1) == pi and arccos(1) == 0 exactly.
     # Then e0 = q + 2p cos(phi), e2 = q + 2p cos(phi + 2pi/3) and
     # e1 = 3q - e0 - e2 in place, in the naive expression's operation order.
-    np.clip(phi, -1.0, 1.0, out=phi)
+    np.maximum(phi, -1.0, out=phi)
+    np.minimum(phi, 1.0, out=phi)
     np.arccos(phi, out=phi)
     phi /= 3.0
     p *= 2.0
@@ -172,12 +185,10 @@ def _eig3x3_cols(A11, A12, A13, A22, A23, A33):
     e1 *= 3.0
     e1 -= e0
     e1 -= e2
-    del phi, p, q  # phi and q are e2 and e1: the swaps free them
+    del phi, p, q  # p is freed before the swaps' temporaries; phi and q are e2 and e1
 
-    sw = np.abs(e0) < np.abs(e2)
-    e0, e2 = np.where(sw, e2, e0), np.where(sw, e0, e2)
-    sw = np.abs(e1) < np.abs(e2)
-    e1, e2 = np.where(sw, e2, e1), np.where(sw, e1, e2)
+    _swap_where(e0, e2, np.abs(e0) < np.abs(e2))
+    _swap_where(e1, e2, np.abs(e1) < np.abs(e2))
 
     if any_diag:
         return np.where(diag, d0, e0), np.where(diag, d1, e1), np.where(diag, d2, e2)

@@ -44,13 +44,12 @@ DuckDB's native ASOF JOIN is the correctness oracle for all of them.
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import local_path, map_in_arrow
+from ..session import file_stamps, map_in_arrow
 
 
 def _as_list(x):
@@ -617,19 +616,10 @@ def _index_key(right: DataFrame, on: str, by_l: list, rcols: list, max_right_row
     plan = right._jdf.queryExecution().analyzed()
     if not plan.deterministic() or not _file_scans_only(right, plan):
         return None
-    stamps = []
-    for p in sorted(right.inputFiles()):
-        try:
-            st = os.stat(local_path(p))
-        except OSError:
-            return None
-        stamps.append((p, st.st_ino, st.st_size, st.st_mtime_ns))
-    if not stamps:
+    stamps = file_stamps(right.inputFiles())
+    if stamps is None:
         return None
-    return (
-        right.semanticHash(), tuple(stamps), tuple(by_l), on, tuple(rcols), max_right_rows,
-        blend,
-    )
+    return right.semanticHash(), stamps, tuple(by_l), on, tuple(rcols), max_right_rows, blend
 
 
 def _build_index(right: DataFrame, on: str, by_l: list, rcols: list, max_right_rows: int,

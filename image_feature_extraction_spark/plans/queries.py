@@ -21,8 +21,12 @@ Determinism notes are given per query.
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..session import file_stamps
 
 QUERIES: dict = {}
 ORACLE_SQL: dict = {}
@@ -50,8 +54,34 @@ def resolve_oracle_sql() -> dict:
     return out
 
 
+# the confs that change the schema Spark infers from parquet footers
+_INFER_CONFS = tuple(
+    f"spark.sql.parquet.{c}"
+    for c in ("binaryAsString", "int96AsTimestamp", "inferTimestampNTZ.enabled", "mergeSchema")
+)
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """The parquet table ``name`` under ``sf_dir``. Inferring its schema is
+    a one-task Spark job, so the inferred schema is kept on the
+    SparkContext, one entry per path, and handed back to the reader while
+    the files under the path and the inference confs are unchanged. A path
+    that cannot be stat-ed locally (a remote store, a glob, a default file
+    system that is not local) infers on every read."""
+    path = f"{sf_dir}/{name}.parquet"
+    sc = spark.sparkContext
+    # a path without a scheme is on the default file system
+    fs = urlparse(path).scheme or sc._jsc.hadoopConfiguration().get("fs.defaultFS", "file:")
+    stamps = file_stamps([path]) if fs.startswith("file") else None
+    key = stamps and (stamps, tuple(spark.conf.get(c) for c in _INFER_CONFS))
+    schemas = vars(sc).setdefault("_ife_parquet_schemas", {})
+    hit = schemas.get(path)
+    if key and hit and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if key:
+        schemas[path] = (key, df.schema)
+    return df
 
 
 def _dec(col, scale=2):

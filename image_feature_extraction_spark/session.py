@@ -75,6 +75,13 @@ def get_spark(
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         # no [Stage N:> progress bars in scripts' output
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark's DataFrame call-site capture walks the Python stack and
+        # sends it to the JVM on every Column and functions call: about half
+        # the py4j round trips of building a query, and it imports IPython
+        # into the driver when installed. The call site it would record is a
+        # frame of this package, so error messages lose nothing a caller
+        # could act on. PySpark reads it once per process.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -113,6 +120,32 @@ def local_path(uri: str) -> str:
 
     u = urlparse(uri)
     return unquote(u.path) if u.scheme == "file" else uri
+
+
+def file_stamps(paths) -> tuple | None:
+    """Sorted (path, inode, size, mtime_ns) of every file among ``paths``
+    (local paths or ``inputFiles()`` URIs) and under those that are
+    directories: data read from them is unchanged while this is. None when
+    there is no file, or one cannot be stat-ed locally (a remote store, a
+    glob, a missing path or an unreadable directory)."""
+    files, stamps = [], []
+    try:
+        for p in map(local_path, paths):
+            if not os.path.isdir(p):
+                files.append(p)
+                continue
+            for d, _dirs, names in os.walk(p, onerror=_raise, followlinks=True):
+                files += [os.path.join(d, n) for n in names]
+        for f in files:
+            st = os.stat(f)
+            stamps.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(stamps)) or None
+
+
+def _raise(e):
+    raise e
 
 
 def widen_small_scan(df, target: int | None = None):

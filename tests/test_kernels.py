@@ -75,6 +75,63 @@ def test_eig3x3_magnitude_ordering_random():
     np.testing.assert_allclose(got_sorted, want, atol=1e-8, rtol=1e-8)
 
 
+def _eig3x3_cols_where(A11, A12, A13, A22, A23, A33):
+    """The solve with its selects written as np.where and np.clip: the
+    reference form _eig3x3_cols must match bit for bit."""
+    p_off = A12 * A12 + A13 * A13 + A23 * A23
+    diag = p_off == 0
+    d0, d1, d2 = K._diag_order(A11, A22, A33)
+    q = (A11 + A22 + A33) / 3.0
+    t1, t2, t3 = A11 - q, A22 - q, A33 - q
+    p = np.sqrt((t1 * t1 + t2 * t2 + t3 * t3 + 2.0 * p_off) / 6.0)
+    psafe = np.where(p == 0, 1.0, p)
+    B11, B12, B13 = t1 / psafe, A12 / psafe, A13 / psafe
+    B22, B23, B33 = t2 / psafe, A23 / psafe, t3 / psafe
+    r = (B11 * B22 * B33 + 2.0 * (B12 * B13 * B23) - B23 * B23 * B11 - B13 * B13 * B22
+         - B12 * B12 * B33) / 2.0
+    phi = np.arccos(np.clip(r, -1.0, 1.0)) / 3.0
+    e0 = np.cos(phi) * (2.0 * p) + q
+    e2 = np.cos(phi + np.pi * (2.0 / 3.0)) * (2.0 * p) + q
+    e1 = q * 3.0 - e0 - e2
+    sw = np.abs(e0) < np.abs(e2)
+    e0, e2 = np.where(sw, e2, e0), np.where(sw, e0, e2)
+    sw = np.abs(e1) < np.abs(e2)
+    e1, e2 = np.where(sw, e2, e1), np.where(sw, e1, e2)
+    return np.where(diag, d0, e0), np.where(diag, d1, e1), np.where(diag, d2, e2)
+
+
+def test_eig3x3_cols_bit_identical_to_where_form(monkeypatch):
+    """The in-place solve (bitwise swaps, psafe by addition, clip as
+    maximum/minimum) equals the np.where form bit for bit: on real Hessian
+    columns of a batch, and on rows of NaN, +-inf, -0.0, huge, subnormal
+    and diagonal entries. The batch tests cannot see this: batch and
+    per-doc both call _eig3x3_cols."""
+    hess = []
+    core = K._eig3x3_cols
+
+    def spy(*cols):
+        hess.append([c.copy() for c in cols])
+        return core(*cols)
+
+    rng = np.random.default_rng(5)
+    monkeypatch.setattr(K, "_eig3x3_cols", spy)
+    K.batch_feature_vectors([rng.integers(0, 50257, n) for n in (30, 300, 1000, 3000)])
+    monkeypatch.undo()
+    real = [np.concatenate(c) for c in zip(*hess)]
+    special = np.array([np.nan, np.inf, -np.inf, -0.0, 0.0, 1e300, -1e300, 5e-324, 1.0, -2.0])
+    n = 20_000
+    edge = [np.where(rng.random(n) < 0.4, rng.choice(special, n), rng.normal(size=n))
+            for _ in range(6)]
+    for i in (1, 2, 4):  # diagonal rows
+        edge[i][:500] = 0.0
+    with np.errstate(all="ignore"):
+        for cols in (real, edge):
+            got = K._eig3x3_cols(*cols)
+            want = _eig3x3_cols_where(*cols)
+            for g, w in zip(got, want):
+                np.testing.assert_array_equal(g.view(np.int64), w.view(np.int64))
+
+
 def test_eigenvalue_features():
     A = np.array([m for _, m, _, _ in EIG_CASES], dtype=np.float64)
     ev = K.eig3x3(A)
