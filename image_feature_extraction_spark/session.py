@@ -127,25 +127,22 @@ def file_stamps(paths) -> tuple | None:
     (local paths or ``inputFiles()`` URIs) and under those that are
     directories: data read from them is unchanged while this is. None when
     there is no file, or one cannot be stat-ed locally (a remote store, a
-    glob, a missing path or an unreadable directory)."""
-    files, stamps = [], []
-    try:
-        for p in map(local_path, paths):
-            if not os.path.isdir(p):
-                files.append(p)
-                continue
-            for d, _dirs, names in os.walk(p, onerror=_raise, followlinks=True):
-                files += [os.path.join(d, n) for n in names]
-        for f in files:
+    glob, a missing path)."""
+    files = []
+    for p in map(local_path, paths):
+        if os.path.isdir(p):
+            files += [os.path.join(d, n) for d, _, names in os.walk(p, followlinks=True)
+                      for n in names]
+        else:
+            files.append(p)
+    stamps = []
+    for f in sorted(files):
+        try:
             st = os.stat(f)
-            stamps.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
-    except OSError:
-        return None
-    return tuple(sorted(stamps)) or None
-
-
-def _raise(e):
-    raise e
+        except OSError:
+            return None
+        stamps.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(stamps) or None
 
 
 def widen_small_scan(df, target: int | None = None):
